@@ -212,6 +212,79 @@ def minhash_perm_coeffs(num_perm: int, seed: int = 42) -> tuple[list[int], list[
     return a, b
 
 
+def _sketch_input(docs: DataFrame, text_col: str, max_chars: int) -> DataFrame:
+    """(doc_id, nt): the normalized, lower-cased sketch region of every
+    non-empty doc. The sketch is CPU-heavy per row: small single-row-group
+    parquet would otherwise run it in 1-2 tasks. Spread FIRST, normalize
+    after: with the projection inside ensure_parallelism the regex
+    normalization ran in the scan task (serially, before the spreading
+    shuffle)."""
+    return (
+        ensure_parallelism(docs.select("doc_id", text_col))
+        .select(
+            "doc_id",
+            F.substring(F.lower(_NORM(F.col(text_col))), 1, max_chars).alias("nt"),
+        )
+        .where(F.col("nt") != "")
+    )
+
+
+def _sketch_batches(batches, num_perm: int, shingle_k: int, dtype):
+    """The MinHash sketch loop over ``_sketch_input`` Arrow batches.
+
+    Yields (doc_id column, signature list array) per batch; the list's
+    values are one flat ``dtype`` buffer of exactly ``num_perm`` components
+    per row (every row has at least one shingle), so its offsets are
+    arithmetic and the doc_id column passes through untouched. Components
+    are < 2^31 (mod Mersenne-31), so int32 and int64 both carry them
+    exactly."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+
+    a_l, b_l = minhash_perm_coeffs(num_perm)
+    a = np.asarray(a_l, dtype=np.uint64)[:, None]
+    b = np.asarray(b_l, dtype=np.uint64)[:, None]
+    m = np.uint64(_MERSENNE31)
+    k = shingle_k
+    md5 = hashlib.md5
+    # Per-task shingle-hash memo: corpora being deduped repeat shingles
+    # heavily (boilerplate, shared vocabulary — this corpus measures
+    # ~300x repetition), so caching the 28-bit base hash per distinct
+    # shingle removes most md5 calls. int.from_bytes over digest()
+    # avoids the hex-string detour while producing the identical value
+    # (first 28 bits of the md5 = first 7 hex chars). Bounded: cleared
+    # past 4M entries so a high-entropy task cannot grow it unbounded.
+    memo: dict[str, int] = {}
+    for batch in batches:
+        ids_col = batch.column(batch.schema.get_field_index("doc_id"))
+        nts = batch.column(batch.schema.get_field_index("nt")).to_pylist()
+        if len(memo) > 4_000_000:
+            memo.clear()
+        mget = memo.get
+        n = len(nts)
+        flat = np.empty(n * num_perm, dtype=dtype)
+        pos = 0
+        for nt in nts:
+            sh = {nt} if len(nt) <= k else {nt[i:i + k] for i in range(len(nt) - k + 1)}
+            vals = []
+            for s in sh:
+                v = mget(s)
+                if v is None:
+                    v = int.from_bytes(md5(s.encode("utf-8")).digest()[:4], "big") >> 4
+                    memo[s] = v
+                vals.append(v)
+            h = np.asarray(vals, dtype=np.uint64)[None, :]
+            # a < 2^31, h < 2^28 -> a*h + b < 2^60: exact in uint64
+            flat[pos:pos + num_perm] = ((a * h + b) % m).min(axis=1)
+            pos += num_perm
+        offsets = pa.array(
+            np.arange(0, (n + 1) * num_perm, num_perm, dtype=np.int32), type=pa.int32()
+        )
+        yield ids_col, pa.ListArray.from_arrays(offsets, pa.array(flat))
+
+
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -229,80 +302,22 @@ def minhash_signatures(
     and md5-based, so the DuckDB correctness oracle replays the sketch
     value for value with the same literal coefficients. The sketch region
     is capped at ``max_chars`` normalized chars (bounded per-doc cost at
-    100 TB). Docs with no shingles (empty text) are dropped.
+    100 TB). Docs with no shingles (empty text) are dropped. ``doc_id``
+    keeps the input's type.
     """
-    import hashlib
-
     import numpy as np
 
-    # the sketch is CPU-heavy per row: small single-row-group parquet would
-    # otherwise run it in 1-2 tasks. Spread FIRST, normalize after: with
-    # the projection inside ensure_parallelism the regex normalization ran
-    # in the scan task (serially, before the spreading shuffle)
-    d = (
-        ensure_parallelism(docs.select("doc_id", text_col))
-        .select(
-            "doc_id",
-            F.substring(F.lower(_NORM(F.col(text_col))), 1, max_chars).alias("nt"),
-        )
-        .where(F.col("nt") != "")
-    )
-
-    a_l, b_l = minhash_perm_coeffs(num_perm)
-    a = np.asarray(a_l, dtype=np.uint64)[:, None]
-    b = np.asarray(b_l, dtype=np.uint64)[:, None]
-    m = np.uint64(_MERSENNE31)
-    k = shingle_k
+    id_t = docs.schema["doc_id"].dataType.simpleString()
 
     def run(batches):
-        # mapInArrow, not mapInPandas: every input row emits exactly
-        # ``num_perm`` signature components (empty docs are filtered
-        # JVM-side), so the output list column is ONE flat int64 buffer +
-        # an arithmetic offsets array (pa.ListArray.from_arrays) and the
-        # doc_id column passes through untouched — the former per-row
-        # pandas-list -> Arrow-list conversion walked every element twice.
         import pyarrow as pa
 
-        md5 = hashlib.md5
-        # Per-task shingle-hash memo: corpora being deduped repeat shingles
-        # heavily (boilerplate, shared vocabulary — this corpus measures
-        # ~300x repetition), so caching the 28-bit base hash per distinct
-        # shingle removes most md5 calls. int.from_bytes over digest()
-        # avoids the hex-string detour while producing the identical value
-        # (first 28 bits of the md5 = first 7 hex chars). Bounded: cleared
-        # past 4M entries so a high-entropy task cannot grow it unbounded.
-        memo: dict[str, int] = {}
-        for batch in batches:
-            ids_col = batch.column(batch.schema.get_field_index("doc_id"))
-            nts = batch.column(batch.schema.get_field_index("nt")).to_pylist()
-            if len(memo) > 4_000_000:
-                memo.clear()
-            mget = memo.get
-            flat = np.empty(len(nts) * num_perm, dtype=np.int64)
-            pos = 0
-            for nt in nts:
-                sh = {nt} if len(nt) <= k else {nt[i:i + k] for i in range(len(nt) - k + 1)}
-                vals = []
-                for s in sh:
-                    v = mget(s)
-                    if v is None:
-                        v = int.from_bytes(md5(s.encode("utf-8")).digest()[:4], "big") >> 4
-                        memo[s] = v
-                    vals.append(v)
-                h = np.asarray(vals, dtype=np.uint64)[None, :]
-                # a < 2^31, h < 2^28 -> a*h + b < 2^60: exact in uint64
-                flat[pos:pos + num_perm] = ((a * h + b) % m).min(axis=1)
-                pos += num_perm
-            offsets = pa.array(
-                np.arange(0, (len(nts) + 1) * num_perm, num_perm, dtype=np.int32),
-                type=pa.int32(),
-            )
-            sig_arr = pa.ListArray.from_arrays(
-                offsets, pa.array(flat, type=pa.int64())
-            )
+        for ids_col, sig_arr in _sketch_batches(batches, num_perm, shingle_k, np.int64):
             yield pa.RecordBatch.from_arrays([ids_col, sig_arr], ["doc_id", "sig"])
 
-    return d.mapInArrow(run, schema="doc_id long, sig array<bigint>")
+    return _sketch_input(docs, text_col, max_chars).mapInArrow(
+        run, schema=f"doc_id {id_t}, sig array<bigint>"
+    )
 
 
 def _pack_band_lists(mat, bands: int, item_bytes: int):
@@ -350,64 +365,21 @@ def _minhash_sig_bands(
     ships half the signature bytes of the public array<bigint> schema —
     and the packed band keys replace 8 interpreted JVM md5/array_join
     evaluations per document with one numpy byte-view."""
-    import hashlib
-
     import numpy as np
 
-    d = (
-        ensure_parallelism(docs.select("doc_id", text_col))
-        .select(
-            "doc_id",
-            F.substring(F.lower(_NORM(F.col(text_col))), 1, max_chars).alias("nt"),
-        )
-        .where(F.col("nt") != "")
-    )
-    a_l, b_l = minhash_perm_coeffs(num_perm)
-    a = np.asarray(a_l, dtype=np.uint64)[:, None]
-    b = np.asarray(b_l, dtype=np.uint64)[:, None]
-    m = np.uint64(_MERSENNE31)
-    k = shingle_k
     id_t = docs.schema["doc_id"].dataType.simpleString()
 
     def run(batches):
         import pyarrow as pa
 
-        md5 = hashlib.md5
-        memo: dict[str, int] = {}
-        for batch in batches:
-            ids_col = batch.column(batch.schema.get_field_index("doc_id"))
-            nts = batch.column(batch.schema.get_field_index("nt")).to_pylist()
-            if len(memo) > 4_000_000:
-                memo.clear()
-            mget = memo.get
-            n = len(nts)
-            flat = np.empty(n * num_perm, dtype=np.int32)
-            pos = 0
-            for nt in nts:
-                sh = {nt} if len(nt) <= k else {nt[i:i + k] for i in range(len(nt) - k + 1)}
-                vals = []
-                for s in sh:
-                    v = mget(s)
-                    if v is None:
-                        v = int.from_bytes(md5(s.encode("utf-8")).digest()[:4], "big") >> 4
-                        memo[s] = v
-                    vals.append(v)
-                h = np.asarray(vals, dtype=np.uint64)[None, :]
-                flat[pos:pos + num_perm] = ((a * h + b) % m).min(axis=1)
-                pos += num_perm
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * num_perm, num_perm, dtype=np.int32),
-                    type=pa.int32(),
-                ),
-                pa.array(flat, type=pa.int32()),
-            )
-            bands_arr = _pack_band_lists(flat.reshape(n, num_perm), bands, 4)
+        for ids_col, sig_arr in _sketch_batches(batches, num_perm, shingle_k, np.int32):
+            mat = sig_arr.values.to_numpy().reshape(len(sig_arr), num_perm)
             yield pa.RecordBatch.from_arrays(
-                [ids_col, sig_arr, bands_arr], ["doc_id", "sig", "bands"]
+                [ids_col, sig_arr, _pack_band_lists(mat, bands, 4)],
+                ["doc_id", "sig", "bands"],
             )
 
-    return d.mapInArrow(
+    return _sketch_input(docs, text_col, max_chars).mapInArrow(
         run, schema=f"doc_id {id_t}, sig array<int>, bands array<binary>"
     )
 
@@ -415,8 +387,9 @@ def _minhash_sig_bands(
 def _bands_from_sigs(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
     """Band keys for caller-provided signatures: same packed-binary keys,
     8-byte components so ANY int64 signature values stay injective. Each
-    sig must be exactly ``num_perm`` long (true for every minhash sketch
-    by construction)."""
+    sig must be exactly ``num_perm`` non-null values (true for every
+    minhash sketch by construction); anything else raises a ValueError
+    naming ``num_perm``."""
     import numpy as np
 
     id_t = sigs.schema["doc_id"].dataType.simpleString()
@@ -427,8 +400,14 @@ def _bands_from_sigs(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
         for batch in batches:
             ids_col = batch.column(batch.schema.get_field_index("doc_id"))
             sig_col = batch.column(batch.schema.get_field_index("sig"))
-            flat = sig_col.flatten().to_numpy(zero_copy_only=False)
-            mat = flat.reshape(len(batch), num_perm)
+            flat = sig_col.flatten()
+            if sig_col.null_count or flat.null_count or len(flat) != len(batch) * num_perm:
+                raise ValueError(
+                    f"every sig must be a non-null array of num_perm={num_perm} "
+                    f"non-null values; got {len(flat)} values ({flat.null_count} "
+                    f"null) for {len(batch)} rows ({sig_col.null_count} null sigs)"
+                )
+            mat = flat.to_numpy(zero_copy_only=False).reshape(len(batch), num_perm)
             bands_arr = _pack_band_lists(mat, bands, 8)
             yield pa.RecordBatch.from_arrays(
                 [ids_col, sig_col, bands_arr], ["doc_id", "sig", "bands"]

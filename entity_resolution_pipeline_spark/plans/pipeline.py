@@ -7,9 +7,11 @@
 Lifecycle mirrors the reference pipeline (/root/reference/src/pipeline.py:98-190):
 a linear list of named stages, each `read -> transform -> write table`,
 individually skippable on resume. Completion probing = manifest rows with the
-same input fingerprint + output table existence
+same input fingerprint + a committed output table
 (mirrors /root/reference/src/pipeline.py:230-261). Every stage appends
-per-partition lineage + metrics rows (north_rule).
+per-partition lineage + metrics rows (north_rule); the manifest and the
+row counts reported here come from parquet footers on the driver, so
+bookkeeping runs no Spark job.
 
 The classifier is trained driver-side on the labeled pairs (tiny — ~2k rows,
 M1/M2) and broadcast into the scoring pass; everything else is distributed.
@@ -111,7 +113,7 @@ class ERPipeline:
         self.catalog.write(df, out_table)
         out = self.catalog.read(out_table)
         wall_ms = int((time.time() - t0) * 1000)
-        self.manifest.record_stage(stage, out, rows_in, wall_ms, input_fp)
+        self.manifest.record_stage(stage, out_table, rows_in, wall_ms, input_fp)
         return out
 
     # ---------- full run ----------
@@ -137,7 +139,7 @@ class ERPipeline:
             self.manifest.record_skipped("preprocess", meta_fp)
             records = self.catalog.read("records")
             input_fp = meta_fp
-            n_pages = int(records.count())
+            n_pages = self.catalog.num_rows("records")
         else:
             # content-sensitive fingerprint: url alone would silently reuse
             # stale records when the same urls arrive with changed text
@@ -185,13 +187,13 @@ class ERPipeline:
             h.unpersist()
         if self.catalog.exists("oversized_blocks"):
             over_df = self.catalog.read("oversized_blocks")
-            self.metrics["oversized_blocks_count"] = int(over_df.count())
+            self.metrics["oversized_blocks_count"] = self.catalog.num_rows("oversized_blocks")
             self.metrics["oversized_blocks"] = [
                 {"key": r["key"], "size": int(r["block_size"])}
                 for r in over_df.orderBy(F.desc("block_size"), "key").limit(100).collect()
             ]
-        n_pairs = pairs.count()
-        self.metrics["candidate_pairs"] = int(n_pairs)
+        n_pairs = self.catalog.num_rows("candidate_pairs")
+        self.metrics["candidate_pairs"] = n_pairs
 
         # ---- train classifier on labeled pairs (driver-side, tiny) ----
         model = None

@@ -9,10 +9,15 @@ checkpoints (/root/reference/src/data_manager.py:60-91,
   present in this sandbox, so the catalog transparently falls back to parquet
   directories under a warehouse path with atomic overwrite semantics
   (write-to-temp + rename is unnecessary: Spark's parquet overwrite is
-  job-atomic via the output committer).
+  job-atomic via the output committer). A table counts as present only
+  once its write committed (``_SUCCESS``), so a table left half-written by
+  a killed overwrite is never reused.
 
 - ``Manifest`` is the north_rule lineage table: one row per (run, stage,
   partition) with rows_in/rows_out/wall_ms and the stage input fingerprint.
+  It is a driver-only log of small pyarrow parquet files: per-partition
+  row counts come from the output table's parquet footers, so recording or
+  probing a stage runs no Spark job.
   Stage completion probing (resume) = a manifest read + output-table
   existence check, mirroring /root/reference/src/pipeline.py:230-261.
 """
@@ -20,11 +25,15 @@ checkpoints (/root/reference/src/data_manager.py:60-91,
 from __future__ import annotations
 
 import os
-import time
 import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -61,27 +70,36 @@ class Catalog:
         return os.path.join(self.warehouse, name)
 
     def exists(self, name: str) -> bool:
-        p = self.path(name)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
-        )
+        """True once a write of ``name`` committed: the output committer
+        writes ``_SUCCESS`` last, so data files without it are a killed
+        write, not a table."""
+        return os.path.isfile(os.path.join(self.path(name), "_SUCCESS"))
+
+    def data_files(self, name: str) -> list[str]:
+        """The table's parquet data files, sorted; hidden (``.``) and
+        committer-private (``_``) files and directories are skipped, as a
+        Spark scan skips them."""
+        out: list[str] = []
+        for root, dirs, files in os.walk(self.path(name)):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            out += [
+                os.path.join(root, f) for f in files
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
+            ]
+        return sorted(out)
+
+    def num_rows(self, name: str) -> int:
+        """Row count from the parquet footers: no Spark job, no data read."""
+        return sum(pq.read_metadata(f).num_rows for f in self.data_files(name))
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite",
-              partition_by: list[str] | None = None, buckets: tuple[int, str] | None = None) -> None:
+              partition_by: list[str] | None = None) -> None:
         w = df.write.mode(mode)
         if partition_by:
             w = w.partitionBy(*partition_by)
-        # bucketing needs a metastore table; with the parquet-dir fallback we
-        # approximate co-location by repartitioning on the bucket key.
-        if buckets:
-            n, col = buckets
-            df = df.repartition(n, col)
-            w = df.write.mode(mode)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))
 
     def write_bucketed_table(self, df: DataFrame, name: str, n_buckets: int,
@@ -119,6 +137,7 @@ class Catalog:
         it before doing anything else."""
         backup = name + "__backup"
         if not self.exists(name) and self.exists(backup):
+            self.drop(name)  # an uncommitted write at the canonical path
             os.rename(self.path(backup), self.path(name))
 
     def _swap_in(self, staging: str, name: str) -> None:
@@ -156,8 +175,8 @@ class Catalog:
         p = self.path(name)
         out: dict[tuple, int] = {}
         for r, _dirs, fs in os.walk(p):
-            pq = [f for f in fs if f.endswith(".parquet")]
-            if not pq:
+            parts = [f for f in fs if f.endswith(".parquet")]
+            if not parts:
                 continue
             vals = tuple(
                 unquote(seg.split("=", 1)[1])
@@ -166,7 +185,7 @@ class Catalog:
             )
             if len(vals) == n_cols:
                 out[vals] = out.get(vals, 0) + sum(
-                    os.path.getsize(os.path.join(r, f)) for f in pq
+                    os.path.getsize(os.path.join(r, f)) for f in parts
                 )
         return out
 
@@ -184,13 +203,7 @@ class Catalog:
         dir chain), so partition pruning survives compaction.
         """
         self._restore_backup(name)
-        p = self.path(name)
-        total = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(p)
-            for f in fs
-            if f.endswith(".parquet")
-        )
+        total = sum(os.path.getsize(f) for f in self.data_files(name))
         n_files = max(1, round(total / (target_file_mb * 1024 * 1024)))
         part_cols = self.partition_columns(name)
         df = self.read(name)
@@ -249,9 +262,7 @@ class Catalog:
         self.drop(staging)
         self.write(df, staging, partition_by=part_cols or None)
         self._swap_in(staging, name)
-        return sum(
-            1 for _, _, fs in os.walk(p) for f in fs if f.endswith(".parquet")
-        )
+        return len(self.data_files(name))
 
     def drop(self, name: str) -> None:
         import shutil
@@ -415,94 +426,86 @@ def fingerprint_df(df: DataFrame, key_cols: list[str]) -> str:
 
 
 class Manifest:
-    """Per-partition lineage + metrics writer/reader."""
+    """Per-partition lineage + metrics log, written and read on the driver.
+
+    Every ``record_*`` call appends one small parquet file to the
+    ``checkpoint_manifest`` directory: written under a ``.`` name, which
+    Spark and pyarrow scans skip, then renamed into place, so a reader sees
+    a whole file or none. ``read()`` returns the log as a Spark DataFrame
+    of ``MANIFEST_SCHEMA``; files written by Spark into the same directory
+    read together with these. Recording and probing run no Spark job.
+    """
 
     TABLE = "checkpoint_manifest"
+    _SCHEMA = to_arrow_schema(MANIFEST_SCHEMA)
 
     def __init__(self, catalog: Catalog, run_id: str | None = None):
         self.catalog = catalog
         self.run_id = run_id or uuid.uuid4().hex[:12]
 
-    def _partition_counts(self, df: DataFrame) -> list[tuple[int, int]]:
-        rows = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count()
-            .collect()
+    def _append(self, rows: list[tuple]) -> None:
+        """Write ``rows`` (every column but ``committed_at``) as one file."""
+        now = datetime.now(timezone.utc)
+        table = pa.Table.from_pylist(
+            [dict(zip(self._SCHEMA.names, (*r, now))) for r in rows],
+            schema=self._SCHEMA,
         )
-        return [(int(r["partition_id"]), int(r["count"])) for r in rows]
+        d = self.catalog.path(self.TABLE)
+        os.makedirs(d, exist_ok=True)
+        name = f"{self.run_id}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(d, "." + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(d, name))
 
     def record_stage(
         self,
         stage: str,
-        df_out: DataFrame,
+        table: str,
         rows_in: int,
         wall_ms: int,
         input_fingerprint: str,
         status: str = "ok",
     ) -> None:
-        """Append one manifest row per output partition."""
-        parts = self._partition_counts(df_out) or [(0, 0)]
-        now = time.time()
-        pdf_rows = [
-            (
-                self.run_id,
-                stage,
-                pid,
-                status,
-                rows_in,
-                cnt,
-                wall_ms,
-                input_fingerprint,
-            )
-            for pid, cnt in parts
-        ]
-        df = self.catalog.spark.createDataFrame(
-            [
-                r + (None,)
-                for r in pdf_rows
-            ],
-            schema=MANIFEST_SCHEMA,
-        ).withColumn("committed_at", F.lit(now).cast("timestamp"))
-        self.catalog.append(df, self.TABLE)
+        """Append one manifest row per output partition of ``table``: the
+        task number in each ``part-NNNNN-...`` file name, with the row
+        count from that file's footer."""
+        rows_out: dict[int, int] = {}
+        for f in self.catalog.data_files(table):
+            pid = int(os.path.basename(f).split("-")[1])
+            rows_out[pid] = rows_out.get(pid, 0) + pq.read_metadata(f).num_rows
+        self._append([
+            (self.run_id, stage, pid, status, rows_in, n, wall_ms, input_fingerprint)
+            for pid, n in sorted((rows_out or {0: 0}).items())
+        ])
 
     def record_alias(self, stage: str, input_fingerprint: str) -> None:
         """Record an ALTERNATE fingerprint under which this stage also
         counts complete — e.g. the metadata-level (file-manifest)
         fingerprint alongside the content one, so the next run can skip
         without scanning the input. partition_id -2 marks alias rows."""
-        df = self.catalog.spark.createDataFrame(
-            [(self.run_id, stage, -2, "ok", 0, 0, 0, input_fingerprint, None)],
-            schema=MANIFEST_SCHEMA,
-        ).withColumn("committed_at", F.current_timestamp())
-        self.catalog.append(df, self.TABLE)
+        self._append([(self.run_id, stage, -2, "ok", 0, 0, 0, input_fingerprint)])
 
     def record_skipped(self, stage: str, input_fingerprint: str) -> None:
-        df = self.catalog.spark.createDataFrame(
-            [(self.run_id, stage, -1, "skipped", 0, 0, 0, input_fingerprint, None)],
-            schema=MANIFEST_SCHEMA,
-        ).withColumn("committed_at", F.current_timestamp())
-        self.catalog.append(df, self.TABLE)
+        self._append([(self.run_id, stage, -1, "skipped", 0, 0, 0, input_fingerprint)])
 
     def read(self) -> DataFrame | None:
-        if not self.catalog.exists(self.TABLE):
+        if not self.catalog.data_files(self.TABLE):
             return None
-        return self.catalog.read(self.TABLE)
+        return self.catalog.spark.read.schema(MANIFEST_SCHEMA).parquet(
+            self.catalog.path(self.TABLE)
+        )
 
     def stage_complete(self, stage: str, input_fingerprint: str) -> bool:
         """True when a prior run committed this stage for the same input."""
-        m = self.read()
-        if m is None:
+        files = self.catalog.data_files(self.TABLE)
+        if not files:
             return False
-        n = (
-            m.where(
-                (F.col("stage") == stage)
-                & (F.col("status") == "ok")
-                & (F.col("input_fingerprint") == input_fingerprint)
-            )
-            .limit(1)
-            .count()
+        m = pq.read_table(files, columns=["stage", "status", "input_fingerprint"])
+        hit = pc.and_(
+            pc.and_(pc.equal(m["stage"], stage), pc.equal(m["status"], "ok")),
+            pc.equal(m["input_fingerprint"], input_fingerprint),
         )
-        return n > 0
+        return m.filter(hit).num_rows > 0
 
 
 def table_diff(df_new, df_old, key_cols: list[str]) -> dict:

@@ -501,6 +501,29 @@ class TestTextStats:
                 assert r["doc_id"] not in got  # empty docs dropped
             else:
                 assert got[r["doc_id"]] == expect, r["text"][:40]
+        # an int doc_id keeps its type, and the signatures do not change
+        int_ids = minhash_signatures(
+            docs.withColumn("doc_id", F.col("doc_id").cast("int")), num_perm=8
+        )
+        assert int_ids.schema["doc_id"].dataType.simpleString() == "int"
+        assert {r["doc_id"]: r["sig"] for r in int_ids.collect()} == got
+
+    def test_bands_from_sigs_rejects_bad_sigs(self, spark):
+        """Caller-provided sigs of the wrong length, or with a null sig,
+        fail with an error naming num_perm, not a numpy reshape error."""
+        from entity_resolution_pipeline_spark.operators.dedup import (
+            minhash_signatures,
+        )
+
+        docs = _docs(spark)
+        short = minhash_signatures(docs, num_perm=8)
+        with pytest.raises(Exception, match="num_perm=32"):
+            minhash_lsh_pairs(docs, num_perm=32, sigs=short).collect()
+        null_sig = spark.createDataFrame(
+            [(0, list(range(32))), (1, None)], "doc_id long, sig array<bigint>"
+        )
+        with pytest.raises(Exception, match="num_perm=32"):
+            minhash_lsh_pairs(docs, num_perm=32, sigs=null_sig).collect()
 
     def test_ngram_rarest_token_no_megablock(self, spark):
         """Docs sharing a leading stopword must NOT form one O(B^2) block:

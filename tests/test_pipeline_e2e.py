@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from entity_resolution_pipeline_spark.plans.pipeline import ERConfig, ERPipeline
+from entity_resolution_pipeline_spark.sources.catalog import Manifest
 from entity_resolution_pipeline_spark.sources.webpages import (
     labeled_pairs_pdf,
     web_pages_df,
@@ -54,6 +55,62 @@ def test_manifest_lineage(pipeline_run):
     assert ok.where(F.col("wall_ms") >= 0).count() == ok.count()
     assert ok.where(F.col("partition_id") >= 0).count() == ok.count()
     assert ok.where(F.col("input_fingerprint").isNull()).count() == 0
+    # per-partition rows_out add up to each stage's table
+    rows_out = {
+        r["stage"]: r["n"]
+        for r in ok.where(F.col("run_id") == pipe.manifest.run_id)
+        .groupBy("stage").agg(F.sum("rows_out").alias("n")).collect()
+    }
+    tables = {"preprocess": "records", "blocking": "blocking_keys",
+              "pairs": "candidate_pairs", "score": "scored_pairs",
+              "edges": "edges", "cluster": "clusters"}
+    for stage, table in tables.items():
+        assert rows_out[stage] == pipe.catalog.read(table).count(), stage
+
+    # recording and probing a stage run no Spark job
+    sc = pipe.spark.sparkContext
+    group = "manifest-bookkeeping"
+    sc.setJobGroup(group, "manifest bookkeeping")
+    try:
+        probe = Manifest(pipe.catalog, run_id="probe")
+        probe.record_stage("probe", "records", 1, 1, "fp-probe")
+        probe.record_skipped("probe", "fp-probe")
+        probe.record_alias("probe", "fp-probe-meta")
+        assert probe.stage_complete("probe", "fp-probe")
+        assert probe.stage_complete("probe", "fp-probe-meta")
+        assert not probe.stage_complete("probe", "fp-other")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        pipe.manifest.read().count()  # a Spark read does show up in the group
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_manifest_reads_spark_written_rows(spark, tmp_path):
+    """Manifest files that Spark wrote into a warehouse read together with
+    driver-written ones, and their ok rows still mark a stage complete."""
+    from datetime import datetime
+
+    from entity_resolution_pipeline_spark.sources.catalog import (
+        MANIFEST_SCHEMA,
+        Catalog,
+    )
+
+    cat = Catalog(spark, str(tmp_path))
+    old = spark.createDataFrame(
+        [("old", "score", 0, "ok", 5, 5, 7, "fp-old", datetime(2026, 1, 1))],
+        MANIFEST_SCHEMA,
+    )
+    cat.append(old, Manifest.TABLE)
+    man = Manifest(cat, run_id="new")
+    man.record_skipped("score", "fp-old")
+    assert man.stage_complete("score", "fp-old")
+    assert not man.stage_complete("score", "fp-new")
+    m = man.read()
+    assert m.schema == MANIFEST_SCHEMA
+    got = {r["run_id"]: (r["status"], r["committed_at"] is not None) for r in m.collect()}
+    assert got == {"old": ("ok", True), "new": ("skipped", True)}
 
 
 def test_resume_skips_stages_and_reproduces(pipeline_run, spark):
@@ -189,6 +246,27 @@ def test_resume_retrain_invalidates_scores(spark, tmp_path_factory):
         for r in pipe2.catalog.read("scored_pairs").collect()
     }
     assert scores1 != scores2, "flipped labels must change model scores"
+
+
+def test_resume_recomputes_uncommitted_table(spark, tmp_path_factory):
+    """A table without ``_SUCCESS`` (left by a killed overwrite) is not a
+    completed stage, even when the manifest holds an ok row for the same
+    input fingerprint: the stage reruns instead of being skipped."""
+    import os
+
+    wh = str(tmp_path_factory.mktemp("erp_wh_uncommitted"))
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    ERPipeline(spark, wh, ERConfig()).run(wp, lp)
+    os.remove(os.path.join(wh, "scored_pairs", "_SUCCESS"))
+
+    pipe2 = ERPipeline(spark, wh, ERConfig())
+    pipe2.run(wp, lp)
+    m2 = pipe2.manifest.read().where(
+        (F.col("run_id") == pipe2.manifest.run_id) & (F.col("stage") == "score")
+    )
+    assert {r["status"] for r in m2.collect()} == {"ok"}
+    assert os.path.isfile(os.path.join(wh, "scored_pairs", "_SUCCESS"))
 
 
 def test_oversized_blocks_logged(pipeline_run):

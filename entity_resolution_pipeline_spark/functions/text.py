@@ -3,9 +3,9 @@
 ``normalize_text`` carries the byte-identical-text-per-url invariant
 (reference semantics: /root/reference/src/batch_preprocessing.py:431-448 —
 ``str(x).strip()`` then ``re.sub(r'\\s+', ' ', ...)`` with *Python* ``re``
-whitespace classes, which differ from Java regex on some unicode spaces; that
-is why the Spark-side wrapper is a pandas UDF using this function rather than
-``regexp_replace``).
+Unicode whitespace). ``normalize_col`` is its JVM column-expression twin,
+used by every Spark-side operator that normalizes text, so both paths split
+tokens on the same whitespace set.
 
 Also hosts the training-data text-analysis kernels (language-ID heuristic,
 quality scores, token counting, rolling-hash fingerprints) used by
@@ -15,6 +15,9 @@ quality scores, token counting, rolling-hash fingerprints) used by
 from __future__ import annotations
 
 import re
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F  # noqa: N812
 
 _WS_RE = re.compile(r"\s+")
 
@@ -121,6 +124,18 @@ def normalize_text(text: object) -> str:
     normalized = text.strip()
     normalized = _WS_RE.sub(" ", normalized)
     return normalized
+
+
+def normalize_col(c: Column) -> Column:
+    """``normalize_text`` as a JVM column expression: collapse whitespace
+    runs to one space, then trim.
+
+    Java's ``(?U)\\s`` is the Unicode White_Space property; Python's
+    ``str.isspace`` (which ``re``'s ``\\s`` and ``str.strip`` follow) also
+    counts U+001C-U+001F, so the class adds them. Plain Java ``\\s`` is
+    ASCII-only and would keep NBSP, U+2028 and U+3000 inside tokens.
+    """
+    return F.trim(F.regexp_replace(c, r"(?U)[\s\x1c-\x1f]+", " "))
 
 
 def tokenize_ws(text: str) -> list[str]:

@@ -58,10 +58,8 @@ def _dot(a, b):
 # near-fixed Python-pass overhead plus BLAS. Same-box A/B (r6, 64-dim):
 # ~0.8 MB corpus est -> jvm 0.5-0.6 s vs arrow 0.8-1.0 s; ~5.9 MB est ->
 # jvm 2.3 s vs arrow 0.9 s. Crossover sits at a few MB, not the 64 MB the
-# round-5 default assumed; env-overridable for other hardware.
-_ARROW_MIN_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_ANN_ARROW_MIN_BYTES", str(2 << 20))
-)
+# round-5 default assumed.
+_ARROW_MIN_BYTES = 2 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int:

@@ -32,9 +32,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
+from ..functions.text import normalize_col
 from .util import ensure_parallelism
-
-_NORM = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -50,7 +49,7 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from pyspark.sql import Window
 
     keyed = docs.select(
-        "doc_id", F.unhex(F.md5(_NORM(F.col(text_col)))).alias("tkey")
+        "doc_id", F.unhex(F.md5(normalize_col(F.col(text_col)))).alias("tkey")
     )
     # min/count as WINDOW aggregates over tkey: the former groupBy + join
     # back evaluated the hash subtree twice (normalize + md5 over the
@@ -104,7 +103,7 @@ def ngram_jaccard_pairs(
     """
     from pyspark.sql import Window
 
-    norm = F.lower(_NORM(F.col(text_col)))
+    norm = F.lower(normalize_col(F.col(text_col)))
     d = ensure_parallelism(
         docs.select("doc_id", F.array_distinct(F.split(norm, " ")).alias("toks")).where(
             norm != ""
@@ -223,7 +222,7 @@ def _sketch_input(docs: DataFrame, text_col: str, max_chars: int) -> DataFrame:
         ensure_parallelism(docs.select("doc_id", text_col))
         .select(
             "doc_id",
-            F.substring(F.lower(_NORM(F.col(text_col))), 1, max_chars).alias("nt"),
+            F.substring(F.lower(normalize_col(F.col(text_col))), 1, max_chars).alias("nt"),
         )
         .where(F.col("nt") != "")
     )
@@ -590,7 +589,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     import pandas as pd
 
     d = ensure_parallelism(docs.select("doc_id", text_col)).select(
-        "doc_id", F.lower(_NORM(F.col(text_col))).alias("nt")
+        "doc_id", F.lower(normalize_col(F.col(text_col))).alias("nt")
     )
     shifts = np.arange(60, dtype=np.uint64)[None, :]
     weights = (np.uint64(1) << np.arange(60, dtype=np.uint64)).astype(np.int64)

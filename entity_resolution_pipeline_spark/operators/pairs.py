@@ -15,33 +15,29 @@ equality -> auto-true, person Levenshtein-sim < 0.3 -> auto-false.
 Prefiltered-true pairs enter clustering with weight 1.0
 (/root/reference/src/clustering.py:261-281).
 
-Scale notes (round-2 plan shape):
+Plan shape:
 - person Levenshtein + the P12 prefilter are built-in JVM expressions
-  (whole-stage codegen) computed in ``with_pair_key``.
-- the ONLY Python kernels left are token_sort_ratio over *globally distinct*
-  canonical string pairs per field (``tsr_table``) and year extraction over
-  *distinct person strings* (``years_table``) — tiny dimension tables joined
-  back onto pairs. Python work scales with unique field-value variants, not
-  pair count.
-- feature assembly, all three prefilters, and the z-scored LR sigmoid are
-  pure JVM column expressions (``feature_columns`` / ``score``); the trained
-  model's 18 weights are inlined as literals.
-- callers additionally dedupe pairs to distinct field-hash tuples and
-  hash-join scores back (pipeline.build_scores) — two nested levels of
-  "compute once per distinct value".
-- ``compute_features_row`` / ``_features_batch`` are retained as the
-  reference row-wise / vectorized-batch implementations; pytest fuzzes all
-  three paths against each other.
+  (whole-stage codegen) computed in ``with_pair_key``; the 39-char hash
+  strings stay JVM-side and only equality flags cross into Python.
+- ``featurize`` / ``score`` are one mapInPandas pass of the vectorized
+  batch kernel (``_features_batch``); ``score`` carries the trained
+  model in its closure. No shuffle, no join. Per-partition memo dicts
+  (``_BatchMemo``) compute token_sort_ratio once per distinct string pair
+  and year extraction once per distinct person string.
+- when pairs repeat field tuples heavily, the pipeline scores each
+  distinct field-hash tuple once and hash-joins scores back
+  (``plans/pipeline.py``, ``dup_ratio``).
+- ``compute_features_row`` is the row-wise reference implementation;
+  pytest fuzzes the batch kernel against it.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql.types import (
     ArrayType,
@@ -469,14 +465,6 @@ FEATURIZE_SCHEMA = StructType(
     ]
 )
 
-SCORE_SCHEMA = StructType(
-    [
-        StructField("pair_key", StringType()),
-        StructField("confidence", DoubleType()),
-        StructField("prefilter", StringType()),
-    ]
-)
-
 
 def with_pair_key(df: DataFrame) -> DataFrame:
     """Single join key over the 10-field-hash tuple + JVM equality flags.
@@ -532,197 +520,11 @@ def with_pair_key(df: DataFrame) -> DataFrame:
     return out.drop(*[f + "_h1" for f in FIELDS], *[f + "_h2" for f in FIELDS])
 
 
-_TSR_SCHEMA = StructType(
-    [
-        StructField("s1", StringType()),
-        StructField("s2", StringType()),
-        StructField("tsr_sim", DoubleType()),
-    ]
-)
-
-
-def tsr_table(pairs: DataFrame) -> DataFrame:
-    """distinct canonical (s1 <= s2) string pairs -> token_sort_ratio.
-
-    THE remaining Python kernel of the scoring path. Because it runs over
-    *globally distinct* string pairs (not per pair row, not per Arrow
-    batch), Python work scales with the number of unique field-value
-    variants in the corpus — at 100 TB that is orders of magnitude below
-    the pair count. Everything downstream is JVM expressions.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = _BatchMemo()
-        for pdf in batches:
-            s1 = pdf["s1"].to_numpy(dtype=object)
-            s2 = pdf["s2"].to_numpy(dtype=object)
-            yield pd.DataFrame(
-                {
-                    "s1": pdf["s1"],
-                    "s2": pdf["s2"],
-                    "tsr_sim": [memo.get_tsr(a, b) for a, b in zip(s1, s2)],
-                }
-            )
-
-    return pairs.mapInPandas(run, schema=_TSR_SCHEMA)
-
-
-_YEARS_SCHEMA = StructType(
-    [
-        StructField("p", StringType()),
-        StructField("birth_y", DoubleType()),
-        StructField("death_y", DoubleType()),
-        StructField("has_years", DoubleType()),
-    ]
-)
-
-
-def years_table(persons: DataFrame) -> DataFrame:
-    """distinct person strings -> (birth, death, has_years) via the
-    15-pattern regex ladder (F9) — one Arrow pass over unique values."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = _BatchMemo()
-        for pdf in batches:
-            ps = pdf["p"].to_numpy(dtype=object)
-            ys = [memo.get_years(s) for s in ps]
-            yield pd.DataFrame(
-                {
-                    "p": pdf["p"],
-                    "birth_y": [float(b) if b is not None else np.nan for b, _ in ys],
-                    "death_y": [float(d) if d is not None else np.nan for _, d in ys],
-                    "has_years": [
-                        1.0 if (b is not None or d is not None) else 0.0 for b, d in ys
-                    ],
-                }
-            )
-
-    return persons.mapInPandas(run, schema=_YEARS_SCHEMA)
-
-
-def _attach_sim_dims(src: DataFrame) -> DataFrame:
-    """Join the per-field tsr dimension tables + the person years dimension
-    onto the pair rows. Dims are tiny relative to pairs (distinct variants),
-    so Catalyst broadcasts them at test scale; at 100 TB they become
-    dim-side shuffle joins — still pairs-dominated."""
-    out = src
-    for f in FIELDS:
-        if f == "person":
-            continue  # person uses JVM levenshtein (person_lev)
-        s1, s2 = F.col(f + "1"), F.col(f + "2")
-        need = src.where(s1.isNotNull() & s2.isNotNull() & ~F.col(f + "_eq")).select(
-            F.least(s1, s2).alias("s1"), F.greatest(s1, s2).alias("s2")
-        ).distinct()
-        dim = tsr_table(need).withColumnsRenamed({"tsr_sim": f + "_tsr"})
-        out = out.join(
-            dim,
-            (F.least(F.col(f + "1"), F.col(f + "2")) == F.col("s1"))
-            & (F.greatest(F.col(f + "1"), F.col(f + "2")) == F.col("s2")),
-            "left",
-        ).drop("s1", "s2")
-    # person_jaro_winkler needs person tsr for non-eq pairs
-    p1, p2 = F.col("person1"), F.col("person2")
-    pneed = src.where(p1.isNotNull() & p2.isNotNull() & ~F.col("person_eq")).select(
-        F.least(p1, p2).alias("s1"), F.greatest(p1, p2).alias("s2")
-    ).distinct()
-    pdim = tsr_table(pneed).withColumnsRenamed({"tsr_sim": "person_tsr"})
-    out = out.join(
-        pdim,
-        (F.least(p1, p2) == F.col("s1")) & (F.greatest(p1, p2) == F.col("s2")),
-        "left",
-    ).drop("s1", "s2")
-    # years: one dim, joined for each side
-    persons = (
-        src.select(p1.alias("p")).where(p1.isNotNull())
-        .unionByName(src.select(p2.alias("p")).where(p2.isNotNull()))
-        .distinct()
-    )
-    ydim = years_table(persons)
-    y1 = ydim.select(
-        F.col("p").alias("person1"), F.col("birth_y").alias("by1"),
-        F.col("death_y").alias("dy1"), F.col("has_years").alias("hy1"),
-    )
-    y2 = ydim.select(
-        F.col("p").alias("person2"), F.col("birth_y").alias("by2"),
-        F.col("death_y").alias("dy2"), F.col("has_years").alias("hy2"),
-    )
-    return out.join(y1, "person1", "left").join(y2, "person2", "left")
-
-
-def feature_columns() -> dict[str, Column]:
-    """The 18 features + prefilter as JVM column expressions over a pair row
-    that carries eq flags, person_lev/pf_false, the joined *_tsr sims and
-    the joined year columns. Semantics identical to compute_features_row
-    (pytest fuzzes the two against each other)."""
-    sims: dict[str, Column] = {}
-    for f in FIELDS:
-        s1, s2 = F.col(f + "1"), F.col(f + "2")
-        if f == "person":
-            sims[f] = F.coalesce(F.col("person_lev"), F.lit(0.0))
-        else:
-            sims[f] = (
-                F.when(F.col(f + "_eq"), 1.0)
-                .when(s1.isNotNull() & s2.isNotNull(), F.coalesce(F.col(f + "_tsr"), F.lit(0.0)))
-                .otherwise(0.0)
-            )
-    cols: dict[str, Column] = {}
-    for f in FIELDS:
-        cols[f + "_cosine"] = sims[f]
-    cols["person_levenshtein"] = sims["person"]
-    p1, p2 = F.col("person1"), F.col("person2")
-    cols["person_jaro_winkler"] = (
-        F.when(F.col("person_eq"), 1.0)
-        .when(p1.isNotNull() & p2.isNotNull(), F.coalesce(F.col("person_tsr"), F.lit(0.0)))
-        .otherwise(0.0)
-    )
-    for f1, f2 in _HARMONIC_PAIRS:
-        a, b = sims[f1], sims[f2]
-        cols[f"{f1}_{f2}_harmonic"] = F.when((a > 0) & (b > 0), 2.0 * a * b / (a + b)).otherwise(0.0)
-    cols["person_subjects_product"] = sims["person"] * sims["subjects"]
-    cols["composite_subjects_ratio"] = F.when(
-        sims["subjects"] > 0, F.least(sims["composite"] / sims["subjects"], F.lit(10.0))
-    ).otherwise(0.0)
-    both_p = p1.isNotNull() & p2.isNotNull()
-    cols["birth_year_match"] = F.when(
-        both_p & F.col("by1").isNotNull() & (F.col("by1") == F.col("by2")), 1.0
-    ).otherwise(0.0)
-    cols["death_year_match"] = F.when(
-        both_p & F.col("dy1").isNotNull() & (F.col("dy1") == F.col("dy2")), 1.0
-    ).otherwise(0.0)
-    cols["has_birth_death_years"] = F.when(
-        both_p & (F.coalesce(F.col("hy1"), F.lit(0.0)) > 0)
-        & (F.coalesce(F.col("hy2"), F.lit(0.0)) > 0),
-        1.0,
-    ).otherwise(0.0)
-    return cols
-
-
-def prefilter_column() -> Column:
-    """P10 -> P11 -> P12, in reference order, as one JVM expression."""
-    return (
-        F.when(F.col("person_eq") & (F.coalesce(F.col("hy1"), F.lit(0.0)) > 0), "true")
-        .when(F.col("composite_eq"), "true")
-        .when(F.col("pf_false"), "false")
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-
-def featurize(df: DataFrame, strategy: str | None = None) -> DataFrame:
+def featurize(df: DataFrame) -> DataFrame:
     """pairs-with-fields -> (pair_key, features array, prefilter).
 
-    Same two strategies as ``score`` (value-identical, pytest-pinned):
-    ``dims`` joins per-field distinct-string-pair sim dimensions and
-    assembles in JVM; ``arrow`` is one mapInPandas pass (default — fewer
-    shuffles, and the training sets this feeds are small)."""
-    strategy = strategy or os.environ.get("SPARK_GRAFT_SCORE_STRATEGY", "arrow")
-    if strategy == "dims":
-        src = df.select("pair_key", *PAIR_SIDE_COLS)
-        wide = _attach_sim_dims(src)
-        cols = feature_columns()
-        feats = F.array(*[cols[n].cast("double") for n in FEATURE_NAMES])
-        return wide.select(
-            "pair_key", feats.alias("features"), prefilter_column().alias("prefilter")
-        )
+    One mapInPandas pass of the batch kernel; the training sets this feeds
+    are small."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo = _BatchMemo()
@@ -736,39 +538,14 @@ def featurize(df: DataFrame, strategy: str | None = None) -> DataFrame:
     return src.mapInPandas(run, schema=FEATURIZE_SCHEMA)
 
 
-def score_dims(
+def score(
     df: DataFrame, model_dict: dict, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Dim-table strategy: Python kernels over globally-distinct string
-    pairs, everything else JVM (see module docstring)."""
-    model = LRModel.from_dict(model_dict)
-    src = df.select("pair_key", *passthrough, *PAIR_SIDE_COLS)
-    wide = _attach_sim_dims(src)
-    cols = feature_columns()
-    z = F.lit(float(model.intercept))
-    for i, name in enumerate(FEATURE_NAMES):
-        w = float(model.weights[i])
-        mu = float(model.means[i])
-        sd = float(model.stds[i]) or 1.0
-        z = z + F.lit(w) * ((cols[name].cast("double") - F.lit(mu)) / F.lit(sd))
-    pref = prefilter_column()
-    conf = (
-        F.when(pref == "true", 1.0)
-        .when(pref == "false", 0.0)
-        .otherwise(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
-    )
-    return wide.select(
-        "pair_key", *passthrough, conf.alias("confidence"), pref.alias("prefilter")
-    )
+    """pairs-with-fields -> (pair_key, confidence, prefilter).
 
-
-def score_arrow(
-    df: DataFrame, model_dict: dict, passthrough: tuple[str, ...] = ()
-) -> DataFrame:
-    """Arrow-batch strategy: one mapInPandas pass over pair rows using the
-    vectorized batch kernel (per-partition memo dicts dedupe string work).
-    No extra shuffles/joins — wins when the distinct string-pair dims are
-    NOT much smaller than the pair rows themselves.
+    confidence = 1.0 / 0.0 for prefiltered pairs, else sigmoid(LR). One
+    mapInPandas pass over the pair rows with the vectorized batch kernel
+    (per-partition memo dicts dedupe string work); no shuffle or join.
 
     ``passthrough`` string columns (e.g. url1/url2) ride through the Arrow
     pass so low-dup-ratio callers can skip the dedup + join-back entirely.
@@ -795,27 +572,6 @@ def score_arrow(
     )
     src = df.select("pair_key", *passthrough, *PAIR_SIDE_COLS)
     return src.mapInPandas(run, schema=schema)
-
-
-def score(df: DataFrame, model_dict: dict, strategy: str | None = None,
-          passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """pairs-with-fields -> (pair_key, confidence, prefilter).
-
-    confidence = 1.0 / 0.0 for prefiltered pairs, else sigmoid(LR). Two
-    physically different but value-identical plans (pytest pins them to the
-    same row-wise reference):
-
-    - ``dims``  : Python only over globally-distinct string pairs; feature
-      assembly + sigmoid in JVM. Scales with unique field-value variants —
-      the 100 TB shape when variants << pairs.
-    - ``arrow`` : single mapInPandas pass, per-partition memo dedupe. Fewer
-      shuffles; wins when pair rows are already near-distinct (measured
-      faster at bench scale, see BENCH/BASELINE.md round-2 A/B).
-    """
-    strategy = strategy or os.environ.get("SPARK_GRAFT_SCORE_STRATEGY", "arrow")
-    if strategy == "dims":
-        return score_dims(df, model_dict, passthrough=passthrough)
-    return score_arrow(df, model_dict, passthrough=passthrough)
 
 
 def attach_pair_fields(pairs: DataFrame, records: DataFrame) -> DataFrame:

@@ -6,8 +6,10 @@ Re-expresses the reference's batch preprocessing
 JVM-side aggregations:
 
 - ``normalize_text`` (strip + ``\\s+``->' ', Python ``re``) carries the
-  byte-identical-extracted-text invariant, so it lives in a pandas UDF, not in
-  ``regexp_replace`` (Java regex differs on unicode whitespace classes).
+  byte-identical-extracted-text invariant. It runs inside the one Arrow pass
+  because field parsing and the mmh3 field hashes share that pass over the
+  same text, not because the JVM would normalize differently
+  (``functions.text.normalize_col`` is its column twin).
 - record fields (person/title/provision/subjects) are parsed from labeled
   text segments; ``composite`` is the space-joined concat of present fields
   (the reference receives these as CSV columns; the graft derives them from

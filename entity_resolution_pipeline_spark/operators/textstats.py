@@ -1,10 +1,13 @@
 """Text-analysis operators over a documents table (doc_id, text, lang, ...).
 
 Training-data-pipeline utilities that run alongside the ER DAG: token
-counting, quality scoring, language-ID, and document fingerprinting. All the
-ratio/count operators are pure JVM column expressions (whole-stage codegen,
-DuckDB-oracle-checkable); only the BPE-ish tokenizer and the rolling-hash
-fingerprint drop into Arrow passes.
+counting, quality scoring, language-ID, TF-IDF/BM25, PII redaction and
+document fingerprinting. The per-document kernels (quality, gopher,
+language-ID, TF-IDF, BM25, BPE-ish tokens, fingerprint sets) are Arrow
+passes; ``token_counts``, ``redact_pii`` and ``fingerprints`` are JVM
+column expressions. Text is normalized with the Python ``normalize_text``
+inside a kernel or with its column twin ``normalize_col`` on the JVM, so
+every operator splits tokens on the same Unicode whitespace.
 """
 
 from __future__ import annotations
@@ -22,15 +25,14 @@ from ..functions.text import (
     STOPWORDS,
     TRIGRAM_MIN_HITS,
     TRIGRAM_PROFILES,
+    normalize_col,
     tokenize_bpeish,
 )
-
-_NORM = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
 
 
 def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace token counts — JVM-side split on normalized text."""
-    norm = _NORM(F.col(text_col))
+    norm = normalize_col(F.col(text_col))
     return docs.select(
         "doc_id",
         F.when(norm == "", 0)
@@ -108,8 +110,10 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     byte-identical ``normalize_text`` twin), distinct-token set
     intersection size per language's stopword set, strictly-greater argmax
     in sorted language order (ties keep the lexicographically smallest
-    language), < 2% distinct-stopword coverage -> 'und'. Value-identical
-    to the previous JVM ``array_distinct`` + ``array_intersect`` +
+    language), < 2% distinct-stopword coverage -> 'und'. Tokens split on
+    the same Unicode whitespace as the JVM ``token_counts``
+    (``normalize_col``). Value-identical to the previous JVM
+    ``array_distinct`` + ``array_intersect`` +
     ``array_max``-over-(hits, -rank)-structs plan — same distinct-TYPE
     counts, same IEEE hits/n_tokens comparison, same tie-break — but the
     set arithmetic runs at C speed instead of one interpreted
@@ -631,7 +635,7 @@ def fingerprint_set(
 
     # spread first, normalize after the shuffle (see dedup.minhash_signatures)
     d = ensure_parallelism(docs.select("doc_id", text_col)).select(
-        "doc_id", _NORM(F.col(text_col)).alias("nt")
+        "doc_id", normalize_col(F.col(text_col)).alias("nt")
     )
     id_t = d.schema["doc_id"].dataType.simpleString()
 
@@ -737,7 +741,7 @@ def fingerprints(
     """
     grams, hs, wmins = _winnow_mins_expr(k, window)
     return (
-        ensure_parallelism(docs.select("doc_id", _NORM(F.col(text_col)).alias("nt")))
+        ensure_parallelism(docs.select("doc_id", normalize_col(F.col(text_col)).alias("nt")))
         .select("doc_id", F.expr(grams).alias("grams"))
         .select("doc_id", F.expr(hs).alias("hs"))
         .select(

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import json
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -75,7 +75,6 @@ class ERConfig:
     # M4 RFE: None = disabled, matching the reference's shipped config
     # (config.yml:105); an int selects down to that many features
     rfe_min_features: int | None = None
-    extra: dict = field(default_factory=dict)
 
 
 class ERPipeline:

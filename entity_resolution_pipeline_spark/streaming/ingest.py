@@ -22,6 +22,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..functions.text import normalize_col
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -78,7 +80,7 @@ def dedup_stream(docs: DataFrame, text_col: str = "text", ts_col: str = "ts",
     """
     from pyspark.sql import Window
 
-    key = F.unhex(F.md5(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))))
+    key = F.unhex(F.md5(normalize_col(F.col(text_col))))
     keyed = docs.withColumn("tkey", key)
     if docs.isStreaming:
         return keyed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(["tkey"])
@@ -184,7 +186,7 @@ def curate_stream(
     reject rate, for free. Adds ``n_chars_norm`` and ``punct_ratio``
     columns so downstream sinks can log why rows survived.
     """
-    norm = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    norm = normalize_col(F.col(text_col))
     n_chars = F.length(norm)
     n_punct = n_chars - F.length(F.regexp_replace(norm, r"[^\w\s]", ""))
     punct_ratio = F.when(n_chars > 0, n_punct.cast("double") / n_chars).otherwise(1.0)

@@ -50,6 +50,14 @@ class TestDedup:
         assert out[2]["keep_id"] == 0  # whitespace-normalized dup
         assert out[3]["group_size"] == 1
 
+    def test_exact_unicode_whitespace(self, spark):
+        """NBSP, U+2028 and U+3000 separate tokens as in ``normalize_text``."""
+        rows = [(0, "a b"), (1, "a\u00a0b"), (2, "\u2028a b\u3000")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        out = {r["doc_id"]: r for r in exact_dedup(df).collect()}
+        assert {r["keep_id"] for r in out.values()} == {0}
+        assert out[0]["group_size"] == 3
+
     def test_ngram_jaccard_anchorless_fallback(self, spark):
         """A boilerplate cluster where EVERY token exceeds max_anchor_df
         used to exit near-dup detection silently (round-2 recall cliff);

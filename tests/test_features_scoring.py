@@ -168,8 +168,8 @@ class TestBatchKernel:
             np.testing.assert_allclose(X[i], np.asarray(fv), atol=1e-12, err_msg=str((i, row)))
 
     def test_jvm_featurize_matches_rowwise_fuzz(self, spark):
-        """The production JVM plan (dim-table joins + column expressions)
-        must agree with the row-wise reference on the same fuzzed rows."""
+        """The Arrow ``featurize`` plan (one mapInPandas pass over the pair
+        rows) must agree with the row-wise reference on the same fuzzed rows."""
         from entity_resolution_pipeline_spark.operators.pairs import (
             PAIR_SIDE_COLS,
             _BatchMemo,
@@ -197,18 +197,17 @@ class TestBatchKernel:
         )
         sdf = spark.createDataFrame(rows, schema)
         assert sdf.columns == cols
-        for strategy in ("dims", "arrow"):
-            got = {r["pair_key"]: r for r in featurize(sdf, strategy=strategy).collect()}
-            memo = _BatchMemo()
-            for i in range(n):
-                row = {c: data[c][i] for c in PAIR_SIDE_COLS}
-                fv, p = compute_features_row(row, memo)
-                g = got[str(i)]
-                assert g["prefilter"] == p, (strategy, i, row)
-                np.testing.assert_allclose(
-                    np.asarray(g["features"]), np.asarray(fv), atol=1e-12,
-                    err_msg=str((strategy, i, row)),
-                )
+        got = {r["pair_key"]: r for r in featurize(sdf).collect()}
+        memo = _BatchMemo()
+        for i in range(n):
+            row = {c: data[c][i] for c in PAIR_SIDE_COLS}
+            fv, p = compute_features_row(row, memo)
+            g = got[str(i)]
+            assert g["prefilter"] == p, (i, row)
+            np.testing.assert_allclose(
+                np.asarray(g["features"]), np.asarray(fv), atol=1e-12,
+                err_msg=str((i, row)),
+            )
 
 
 class TestClassifier:

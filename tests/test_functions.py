@@ -27,6 +27,7 @@ from entity_resolution_pipeline_spark.functions.similarity import (
 from entity_resolution_pipeline_spark.functions.text import (
     detect_language,
     fingerprint,
+    normalize_col,
     normalize_text,
     quality_scores,
     tokenize_bpeish,
@@ -227,6 +228,23 @@ class TestTextStats:
         assert fingerprint("a b c d e f g h i j") == fingerprint("a  b   c d e f g h i j")
         assert fingerprint("") == 0
         assert fingerprint("xyz") != fingerprint("abc")
+
+
+def test_normalize_col_matches_normalize_text_every_code_point(spark):
+    """The JVM normalizer equals the Python one on every code point, as a
+    leading, inner (run of two) and trailing separator, in one Spark job."""
+    import pandas as pd
+    import pyspark.sql.functions as F
+
+    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    texts = [f"{ch}x{ch}{ch}y{ch}" for ch in map(chr, cps)]
+    pdf = pd.DataFrame(
+        {"cp": cps, "text": texts, "want": [normalize_text(t) for t in texts]}
+    )
+    mismatched = spark.createDataFrame(pdf).where(
+        normalize_col(F.col("text")) != F.col("want")
+    )
+    assert mismatched.count() == 0, [hex(r["cp"]) for r in mismatched.limit(20).collect()]
 
 
 class TestBitParallelKernels:

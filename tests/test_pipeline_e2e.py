@@ -269,6 +269,47 @@ def test_resume_recomputes_uncommitted_table(spark, tmp_path_factory):
     assert os.path.isfile(os.path.join(wh, "scored_pairs", "_SUCCESS"))
 
 
+def test_resume_reruns_stage_killed_before_its_record(spark, tmp_path_factory, monkeypatch):
+    """A run killed after ``scored_pairs`` is committed but before the score
+    stage's manifest record leaves no ``ok`` row: the next run on the same
+    warehouse recomputes the stage (not skipped) and ends equal to a clean
+    run."""
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    clean = ERPipeline(spark, str(tmp_path_factory.mktemp("erp_wh_clean")), ERConfig())
+    clean_res = clean.run(wp, lp)
+
+    wh = str(tmp_path_factory.mktemp("erp_wh_killed"))
+    record_stage = Manifest.record_stage
+
+    def killed(self, stage, *args, **kwargs):
+        if stage == "score":
+            raise RuntimeError("killed before the score record")
+        return record_stage(self, stage, *args, **kwargs)
+
+    monkeypatch.setattr(Manifest, "record_stage", killed)
+    with pytest.raises(RuntimeError, match="killed before the score record"):
+        ERPipeline(spark, wh, ERConfig()).run(wp, lp)
+    monkeypatch.undo()
+
+    pipe2 = ERPipeline(spark, wh, ERConfig())
+    assert pipe2.catalog.exists("scored_pairs")  # committed before the kill
+    res2 = pipe2.run(wp, lp)
+    m2 = pipe2.manifest.read().where(F.col("run_id") == pipe2.manifest.run_id)
+    status = {}
+    for r in m2.collect():
+        status.setdefault(r["stage"], set()).add(r["status"])
+    assert status["score"] == {"ok"}
+    assert all(status[s] == {"skipped"} for s in ("preprocess", "blocking", "pairs"))
+
+    for key in ("n_pages", "candidate_pairs", "n_clusters", "evaluation"):
+        assert res2[key] == clean_res[key], key
+    for table in ("scored_pairs", "clusters"):
+        got = pipe2.catalog.read(table)
+        want = clean.catalog.read(table)
+        assert sorted(got.collect()) == sorted(want.select(*got.columns).collect()), table
+
+
 def test_oversized_blocks_logged(pipeline_run):
     pipe, result, *_ = pipeline_run
     # the hot aggregator host is engineered into the fixture; with the

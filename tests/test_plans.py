@@ -71,7 +71,7 @@ def test_exact_dedup_shuffles_hash_not_text(spark):
 
 
 def test_score_arrow_is_single_pass_no_shuffle(spark):
-    """The arrow scoring strategy must add NO exchange beyond its input:
+    """Scoring must add NO exchange beyond its input:
     one ArrowEvalPython/mapInPandas over the pair rows."""
     import json
 
@@ -89,7 +89,7 @@ def test_score_arrow_is_single_pass_no_shuffle(spark):
              " boolean" if c.endswith(("_eq", "pf_false")) else " string")
         for c in P.PAIR_SIDE_COLS))
     df = spark.createDataFrame(rows, schema)
-    plan = _plan(P.score(df, model, strategy="arrow"), mode="simple")
+    plan = _plan(P.score(df, model), mode="simple")
     assert "Exchange" not in plan, plan
     assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
 

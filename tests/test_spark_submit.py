@@ -91,3 +91,32 @@ def test_spark_submit_pyfiles_two_parallelism_levels(tmp_path):
     assert r2["candidate_pairs"] == r8["candidate_pairs"]
     assert r2["n_clusters"] == r8["n_clusters"]
     assert r2["evaluation"]["blocked_pairs"] == r8["evaluation"]["blocked_pairs"]
+
+
+def test_env_knob_inventory():
+    """The package reads exactly these environment variables: three
+    deployment settings (cores, master URL, driver heap) plus the
+    near-dup hot-bucket cap. A new env read is a new knob; it has to be
+    added here on purpose, with the measurement that justifies it."""
+    import glob
+    import re
+
+    any_read = re.compile(r"\b(?:environ|getenv)\b")
+    literal_read = re.compile(
+        r"\b(?:environ(?:\.get)?|getenv)\s*[(\[]\s*[\"']([A-Za-z0-9_]+)[\"']"
+    )
+    names: set[str] = set()
+    pkg = os.path.join(REPO, "entity_resolution_pipeline_spark")
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as f:
+            src = f.read()
+        found = literal_read.findall(src)
+        # every environ/getenv mention is a read with a literal name
+        assert len(found) == len(any_read.findall(src)), path
+        names.update(found)
+    assert names == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_MASTER",
+        "SPARK_DRIVER_MEMORY",
+        "SPARK_GRAFT_MAX_BUCKET",
+    }

@@ -348,12 +348,3 @@ def ratio_capped(a: float, b: float, cap: float = 10.0) -> float:
     if b > 0:
         return min(a / b, cap)
     return 0.0
-
-
-def cosine_matrix(queries: np.ndarray, corpus: np.ndarray) -> np.ndarray:
-    """Batched cosine similarity: (q, d) x (n, d) -> (q, n), zero-norm -> 0."""
-    qn = np.linalg.norm(queries, axis=1, keepdims=True)
-    cn = np.linalg.norm(corpus, axis=1, keepdims=True)
-    qn[qn == 0] = np.inf
-    cn[cn == 0] = np.inf
-    return (queries / qn) @ (corpus / cn).T

@@ -6,8 +6,8 @@ operators:
 
 - G1 edge construction: scored pairs with confidence >= min_edge_weight.
 - G2 one-hop transitivity (edge self-join, weight product) — kept for
-  operator parity; connected components subsumes it, so the pipeline leaves
-  it off by default (reference note at SURVEY.md §2.8 G2).
+  operator parity; connected components subsumes it, so the pipeline does
+  not call it (reference note at SURVEY.md §2.8 G2).
 - G3 connected components via alternating large-star/small-star hash-join
   passes (Kiveris et al., "Connected Components in MapReduce and Beyond") —
   O(log n) rounds, each round two shuffles; lineage truncated per round with

@@ -1,20 +1,21 @@
 """The end-to-end entity-resolution DAG (SURVEY.md §7.1).
 
-    web_pages -> records -> blocking keys -> candidate pairs
-              -> scores (distinct field-tuples, Arrow pass, broadcast LR)
+    web_pages -> records -> dimension tables, blocking keys -> candidate pairs
+              -> model -> scores (distinct field-tuples, Arrow pass, broadcast LR)
               -> edges -> clusters -> evaluation
 
 Lifecycle mirrors the reference pipeline (/root/reference/src/pipeline.py:98-190):
-a linear list of named stages, each `read -> transform -> write table`,
-individually skippable on resume. Completion probing = manifest rows with the
-same input fingerprint + a committed output table
-(mirrors /root/reference/src/pipeline.py:230-261). Every stage appends
+a linear list of named stages (``STAGE_TABLES``), each `read -> transform ->
+write its tables` in ``ERPipeline._run_stage`` and skipped on resume when all
+its tables are committed and the manifest holds an ok row for the same input
+fingerprint (the reference's src/pipeline.py:230-261). Every stage appends
 per-partition lineage + metrics rows (north_rule); the manifest and the
 row counts reported here come from parquet footers on the driver, so
 bookkeeping runs no Spark job.
 
 The classifier is trained driver-side on the labeled pairs (tiny — ~2k rows,
-M1/M2) and broadcast into the scoring pass; everything else is distributed.
+M1/M2), stored as the one-row ``model`` table (so a resume does not refit)
+and broadcast into the scoring pass; everything else is distributed.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import time
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -50,14 +52,20 @@ from ..operators.preprocess import (
 )
 from ..sources.catalog import Catalog, Manifest, fingerprint_df, fingerprint_files
 
-STAGES = [
-    "preprocess",
-    "blocking",
-    "pairs",
-    "score",
-    "edges",
-    "cluster",
-]
+# The tables each stage writes, in run order; the first carries the
+# stage's manifest lineage.
+STAGE_TABLES = {
+    "preprocess": ("records",),
+    "dims": ("unique_strings", "string_counts", "field_hash_mapping", "field_stats"),
+    "blocking": ("blocking_keys",),
+    "pairs": ("candidate_pairs", "oversized_blocks"),
+    "train": ("model",),
+    "score": ("scored_pairs",),
+    "edges": ("edges",),
+    "cluster": ("clusters",),
+}
+STAGES = list(STAGE_TABLES)
+MODEL_METRICS = ("train", "test", "feature_importance", "rfe_selected")  # stored with the model
 
 
 @dataclass
@@ -71,7 +79,6 @@ class ERConfig:
     lsh_num_perm: int = 32
     lsh_bands: int = 8
     max_block_size: int = 64
-    transitivity_enabled: bool = False  # CC subsumes G2; kept as operator
     # M4 RFE: None = disabled, matching the reference's shipped config
     # (config.yml:105); an int selects down to that many features
     rfe_min_features: int | None = None
@@ -102,24 +109,35 @@ class ERPipeline:
         downstream (the input itself changed in that case anyway)."""
         return fingerprint_files(df) or fingerprint_df(df, key_cols)
 
-    def _run_stage(self, stage: str, input_fp: str, rows_in: int, build_df, out_table: str,
+    def _stage_done(self, stage: str, input_fp: str) -> bool:
+        return all(self.catalog.exists(t) for t in STAGE_TABLES[stage]) and (
+            self.manifest.stage_complete(stage, input_fp)
+        )
+
+    def _run_stage(self, stage: str, input_fp: str, rows_in: int, build_df,
                    force: bool = False) -> DataFrame:
-        if not force and self.catalog.exists(out_table) and self.manifest.stage_complete(stage, input_fp):
+        """Write ``stage``'s tables unless it is done; returns its first
+        table. ``build_df()`` returns one DataFrame per table of
+        ``STAGE_TABLES[stage]``, as a tuple when there are several."""
+        tables = STAGE_TABLES[stage]
+        if not force and self._stage_done(stage, input_fp):
             self.manifest.record_skipped(stage, input_fp)
-            return self.catalog.read(out_table)
-        t0 = time.time()
-        df = build_df()
-        self.catalog.write(df, out_table)
-        out = self.catalog.read(out_table)
-        wall_ms = int((time.time() - t0) * 1000)
-        self.manifest.record_stage(stage, out_table, rows_in, wall_ms, input_fp)
-        return out
+        else:
+            t0 = time.time()
+            out = build_df()
+            for df, name in zip(out if isinstance(out, tuple) else (out,), tables, strict=True):
+                self.catalog.write(df, name)
+            wall_ms = int((time.time() - t0) * 1000)
+            self.manifest.record_stage(stage, tables[0], rows_in, wall_ms, input_fp)
+        return self.catalog.read(tables[0])
 
     # ---------- full run ----------
 
     def run(self, web_pages: DataFrame, labeled_pairs: DataFrame | None = None,
             force: bool = False) -> dict:
         cfg = self.config
+        if labeled_pairs is None and not self.catalog.exists("model"):
+            raise ValueError("no labeled pairs given and no saved model found")
         # two-level resume fingerprinting for the (100 TB) input:
         # 1. metadata level — md5 of the source file manifest (path, size,
         #    mtime_ns): a stat-only probe, so deciding to SKIP the input
@@ -129,15 +147,9 @@ class ERPipeline:
         #    not file-backed): xxhash64(url,text) aggregate. Content-
         #    sensitive, catches rewritten-but-identical files, costs a scan.
         meta_fp = fingerprint_files(web_pages)
-        if (
-            not force
-            and meta_fp is not None
-            and self.catalog.exists("records")
-            and self.manifest.stage_complete("preprocess", meta_fp)
-        ):
+        if not force and meta_fp is not None and self._stage_done("preprocess", meta_fp):
             self.manifest.record_skipped("preprocess", meta_fp)
             records = self.catalog.read("records")
-            input_fp = meta_fp
             n_pages = self.catalog.num_rows("records")
         else:
             # content-sensitive fingerprint: url alone would silently reuse
@@ -146,62 +158,68 @@ class ERPipeline:
             n_pages = int(input_fp.split(":")[0])
             records = self._run_stage(
                 "preprocess", input_fp, n_pages,
-                lambda: preprocess_records(web_pages), "records", force,
+                lambda: preprocess_records(web_pages), force,
             )
             if meta_fp is not None:
                 # register the manifest fingerprint too, so the NEXT run can
                 # skip on metadata alone
                 self.manifest.record_alias("preprocess", meta_fp)
 
-        # dedup dimensions (A1-A4) — cheap, always rebuilt with records
-        long_df = strings_long(records)
-        self.catalog.write(unique_strings(long_df), "unique_strings")
-        self.catalog.write(string_counts(long_df), "string_counts")
-        self.catalog.write(field_hash_mapping(long_df), "field_hash_mapping")
-        self.catalog.write(field_stats(long_df), "field_stats")
-
         rec_fp = self._table_fp(records, ["url", "person_h"])
+
+        def build_dims():  # dedup dimensions (A1-A4)
+            long_df = strings_long(records)
+            return (unique_strings(long_df), string_counts(long_df),
+                    field_hash_mapping(long_df), field_stats(long_df))
+
+        self._run_stage("dims", rec_fp, n_pages, build_dims, force)
         keys = self._run_stage(
             "blocking", rec_fp, n_pages,
             lambda: B.all_blocking_keys(records, num_perm=cfg.lsh_num_perm, bands=cfg.lsh_bands),
-            "blocking_keys", force,
+            force,
         )
 
         pair_handles: list = []
-
-        def build_pairs():
-            pairs, oversized = B.candidate_pairs(
-                keys, max_block_size=cfg.max_block_size,
-                cache_handles=pair_handles,
-            )
-            # persist oversized blocks as a catalog table so a resumed run
-            # (pairs stage skipped) still reports them; metrics keeps only a
-            # bounded sample — at 100 TB the full list can itself be large.
-            self.catalog.write(oversized, "oversized_blocks")
-            return pairs
-
         keys_fp = self._table_fp(keys, ["url", "key"])
-        pairs = self._run_stage("pairs", keys_fp, -1, build_pairs, "candidate_pairs", force)
+        # oversized blocks are a table of their own, so a resumed run (pairs
+        # stage skipped) still reports them; metrics keeps only a bounded
+        # sample — at 100 TB the full list can itself be large.
+        pairs = self._run_stage(
+            "pairs", keys_fp, -1,
+            lambda: B.candidate_pairs(keys, max_block_size=cfg.max_block_size,
+                                      cache_handles=pair_handles),
+            force,
+        )
         for h in pair_handles:  # both outputs are materialized in catalog now
             h.unpersist()
-        if self.catalog.exists("oversized_blocks"):
-            over_df = self.catalog.read("oversized_blocks")
-            self.metrics["oversized_blocks_count"] = self.catalog.num_rows("oversized_blocks")
-            self.metrics["oversized_blocks"] = [
-                {"key": r["key"], "size": int(r["block_size"])}
-                for r in over_df.orderBy(F.desc("block_size"), "key").limit(100).collect()
-            ]
+        self.metrics["oversized_blocks_count"] = self.catalog.num_rows("oversized_blocks")
+        self.metrics["oversized_blocks"] = [
+            {"key": r["key"], "size": int(r["block_size"])}
+            for r in self.catalog.read("oversized_blocks")
+            .orderBy(F.desc("block_size"), "key").limit(100).collect()
+        ]
         n_pairs = self.catalog.num_rows("candidate_pairs")
         self.metrics["candidate_pairs"] = n_pairs
 
         # ---- train classifier on labeled pairs (driver-side, tiny) ----
-        model = None
         if labeled_pairs is not None:
-            model = self.train(records, labeled_pairs)
-        else:
-            model = self._load_model()
-        if model is None:
-            raise ValueError("no labeled pairs given and no saved model found")
+            lp_fp = self._table_fp(labeled_pairs, ["left", "right", "match"])
+            train_fp = (f"{rec_fp}|train|{lp_fp}|{cfg.train_frac}|{cfg.seed}"
+                        f"|{cfg.rfe_min_features}|{cfg.decision_threshold}")
+
+            def build_model():
+                model = self.train(records, labeled_pairs)
+                metrics = {k: self.metrics[k] for k in MODEL_METRICS if k in self.metrics}
+                # a JVM-side row: a Python-side DataFrame would start Python workers
+                return self.spark.range(1, numPartitions=1).select(
+                    F.lit(json.dumps(model.to_dict())).alias("model"),
+                    F.lit(json.dumps(metrics)).alias("metrics"),
+                )
+
+            self._run_stage("train", train_fp, -1, build_model, force)
+        stored = pq.read_table(self.catalog.data_files("model")).to_pylist()[0]
+        model = LRModel.from_dict(json.loads(stored["model"]))
+        self.metrics.update(json.loads(stored["metrics"]))
 
         # the score-stage fingerprint mixes in the model digest: retraining
         # with new labels must invalidate cached scored_pairs even when the
@@ -245,26 +263,23 @@ class ERPipeline:
             ).select("url1", "url2", "confidence", "prefilter")
 
         t_score0 = time.time()
-        scored = self._run_stage("score", score_fp, int(n_pairs), build_scores, "scored_pairs", force)
+        scored = self._run_stage("score", score_fp, int(n_pairs), build_scores, force)
         self.metrics["score_wall_s"] = time.time() - t_score0
         pair_fields.unpersist()
         self.metrics["pairs_scored_per_sec"] = (
             n_pairs / self.metrics["score_wall_s"] if self.metrics["score_wall_s"] > 0 else None
         )
 
-        def build_edges():
-            e = C.build_edges(scored, cfg.min_edge_weight, cfg.decision_threshold)
-            if cfg.transitivity_enabled:
-                e = C.transitivity_one_hop(e, cfg.min_edge_weight)
-            return e
-
-        edges = self._run_stage("edges", score_fp + "|edges", int(n_pairs), build_edges, "edges", force)
+        edges = self._run_stage(
+            "edges", score_fp + "|edges", int(n_pairs),
+            lambda: C.build_edges(scored, cfg.min_edge_weight, cfg.decision_threshold), force,
+        )
 
         def build_clusters():
             nodes = records.select(F.col("url").alias("node"))
             return C.assign_clusters(edges, nodes)
 
-        clusters = self._run_stage("cluster", score_fp + "|cluster", int(n_pairs), build_clusters, "clusters", force)
+        clusters = self._run_stage("cluster", score_fp + "|cluster", int(n_pairs), build_clusters, force)
 
         result = {
             "n_pages": n_pages,
@@ -332,24 +347,7 @@ class ERPipeline:
         self.metrics["test"]["roc_auc"] = roc_auc(y[te], p[te])
         self.metrics["test"]["pr_curve"] = precision_recall_curve(y[te], p[te], max_points=50)
         self.metrics["feature_importance"] = feature_importance(model)[:10]
-
-        self._save_model(model)
         return model
-
-    def _save_model(self, model: LRModel) -> None:
-        import os
-
-        with open(os.path.join(self.catalog.warehouse, "model.json"), "w") as f:
-            json.dump(model.to_dict(), f)
-
-    def _load_model(self) -> LRModel | None:
-        import os
-
-        path = os.path.join(self.catalog.warehouse, "model.json")
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return LRModel.from_dict(json.load(f))
 
     # ---------- evaluation ----------
 

@@ -11,7 +11,8 @@ checkpoints (/root/reference/src/data_manager.py:60-91,
   (write-to-temp + rename is unnecessary: Spark's parquet overwrite is
   job-atomic via the output committer). A table counts as present only
   once its write committed (``_SUCCESS``), so a table left half-written by
-  a killed overwrite is never reused.
+  a killed overwrite is never reused. ``read`` takes the schema from the
+  first data file's parquet footer, so opening a table runs no Spark job.
 
 - ``Manifest`` is the north_rule lineage table: one row per (run, stage,
   partition) with rows_in/rows_out/wall_ms and the stage input fingerprint.
@@ -33,7 +34,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -93,7 +94,13 @@ class Catalog:
         return sum(pq.read_metadata(f).num_rows for f in self.data_files(name))
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+        """The table, its schema from the first data file's parquet footer
+        (no Spark job); hive partition columns are still discovered."""
+        files = self.data_files(name)
+        reader = self.spark.read
+        if files:
+            reader = reader.schema(from_arrow_schema(pq.read_schema(files[0])))
+        return reader.parquet(self.path(name))
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite",
               partition_by: list[str] | None = None) -> None:

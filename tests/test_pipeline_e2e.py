@@ -7,8 +7,13 @@ deterministic synthetic corpus at matched blocking keys.
 import pyspark.sql.functions as F
 import pytest
 
-from entity_resolution_pipeline_spark.plans.pipeline import ERConfig, ERPipeline
-from entity_resolution_pipeline_spark.sources.catalog import Manifest
+from entity_resolution_pipeline_spark.plans.pipeline import (
+    STAGE_TABLES,
+    STAGES,
+    ERConfig,
+    ERPipeline,
+)
+from entity_resolution_pipeline_spark.sources.catalog import Catalog, Manifest
 from entity_resolution_pipeline_spark.sources.webpages import (
     labeled_pairs_pdf,
     web_pages_df,
@@ -49,7 +54,7 @@ def test_manifest_lineage(pipeline_run):
     pipe, *_ = pipeline_run
     m = pipe.manifest.read()
     stages = {r["stage"] for r in m.select("stage").distinct().collect()}
-    assert {"preprocess", "blocking", "pairs", "score", "edges", "cluster"} <= stages
+    assert set(STAGES) <= stages
     ok = m.where(F.col("status") == "ok")
     # per-partition rows with metrics
     assert ok.where(F.col("wall_ms") >= 0).count() == ok.count()
@@ -61,13 +66,10 @@ def test_manifest_lineage(pipeline_run):
         for r in ok.where(F.col("run_id") == pipe.manifest.run_id)
         .groupBy("stage").agg(F.sum("rows_out").alias("n")).collect()
     }
-    tables = {"preprocess": "records", "blocking": "blocking_keys",
-              "pairs": "candidate_pairs", "score": "scored_pairs",
-              "edges": "edges", "cluster": "clusters"}
-    for stage, table in tables.items():
-        assert rows_out[stage] == pipe.catalog.read(table).count(), stage
+    for stage, tables in STAGE_TABLES.items():
+        assert rows_out[stage] == pipe.catalog.read(tables[0]).count(), stage
 
-    # recording and probing a stage run no Spark job
+    # recording and probing a stage, and opening its tables, run no Spark job
     sc = pipe.spark.sparkContext
     group = "manifest-bookkeeping"
     sc.setJobGroup(group, "manifest bookkeeping")
@@ -79,6 +81,9 @@ def test_manifest_lineage(pipeline_run):
         assert probe.stage_complete("probe", "fp-probe")
         assert probe.stage_complete("probe", "fp-probe-meta")
         assert not probe.stage_complete("probe", "fp-other")
+        for tables in STAGE_TABLES.values():
+            for table in tables:
+                pipe.catalog.read(table)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         pipe.manifest.read().count()  # a Spark read does show up in the group
         assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
@@ -113,25 +118,76 @@ def test_manifest_reads_spark_written_rows(spark, tmp_path):
     assert got == {"old": ("ok", True), "new": ("skipped", True)}
 
 
-def test_resume_skips_stages_and_reproduces(pipeline_run, spark):
+def _record_writes_and_training(monkeypatch) -> list:
+    """Log every ``Catalog.write`` table name and ``ERPipeline.train`` call."""
+    calls: list = []
+    write, train = Catalog.write, ERPipeline.train
+
+    def logged_write(self, df, name, *args, **kwargs):
+        calls.append(f"write:{name}")
+        return write(self, df, name, *args, **kwargs)
+
+    def logged_train(self, *args, **kwargs):
+        calls.append("train")
+        return train(self, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "write", logged_write)
+    monkeypatch.setattr(ERPipeline, "train", logged_train)
+    return calls
+
+
+def _skipped_stages(pipe) -> set:
+    m = pipe.manifest.read().where(
+        (F.col("run_id") == pipe.manifest.run_id) & (F.col("status") == "skipped")
+    )
+    return {r["stage"] for r in m.select("stage").distinct().collect()}
+
+
+def test_resume_skips_stages_and_reproduces(pipeline_run, spark, monkeypatch):
+    """A rerun on a completed warehouse skips every stage: it writes no
+    table and trains no model, and reproduces the clusters and evaluation."""
     pipe, result, wp, lp, wh = pipeline_run
     clusters_before = {
         (r["entity_id"], r["cluster_id"])
         for r in pipe.catalog.read("clusters").collect()
     }
+    calls = _record_writes_and_training(monkeypatch)
     pipe2 = ERPipeline(spark, wh, ERConfig())
     result2 = pipe2.run(wp, lp)
-    m2 = pipe2.manifest.read().where(
-        (F.col("run_id") == pipe2.manifest.run_id) & (F.col("status") == "skipped")
-    )
-    skipped = {r["stage"] for r in m2.select("stage").distinct().collect()}
-    assert {"preprocess", "blocking", "pairs", "score", "edges", "cluster"} <= skipped
+    assert calls == []
+    assert set(STAGES) <= _skipped_stages(pipe2)
     clusters_after = {
         (r["entity_id"], r["cluster_id"])
         for r in pipe2.catalog.read("clusters").collect()
     }
     assert clusters_before == clusters_after
     assert result2["evaluation"] == result["evaluation"]
+    for key in ("train", "test", "feature_importance"):
+        assert result2["metrics"][key] == result["metrics"][key], key
+
+
+def test_run_without_labels_reuses_stored_model(pipeline_run, spark, monkeypatch):
+    """``run`` without labels (``run_pipeline.py --input`` without
+    ``--labels``) scores with the model an earlier run stored: it trains
+    nothing, writes nothing, and skips score, edges and cluster."""
+    pipe, result, wp, lp, wh = pipeline_run
+    calls = _record_writes_and_training(monkeypatch)
+    pipe3 = ERPipeline(spark, wh, ERConfig())
+    res3 = pipe3.run(wp)
+    assert calls == []
+    assert {"score", "edges", "cluster"} <= _skipped_stages(pipe3)
+    assert "evaluation" not in res3
+    assert res3["n_clusters"] == result["n_clusters"]
+    assert res3["metrics"]["test"] == result["metrics"]["test"]
+
+
+def test_run_without_labels_or_stored_model_raises(spark, tmp_path):
+    """With no labels and no ``model`` table there is nothing to score
+    with: ``run`` raises before it writes any table."""
+    pipe = ERPipeline(spark, str(tmp_path), ERConfig())
+    with pytest.raises(ValueError, match="no saved model"):
+        pipe.run(web_pages_df(spark, 20))
+    assert not pipe.catalog.exists("records")
 
 
 def test_resume_recomputes_on_input_change(pipeline_run, spark):
@@ -239,8 +295,10 @@ def test_resume_retrain_invalidates_scores(spark, tmp_path_factory):
     score_ok = m2.where((F.col("stage") == "score") & (F.col("status") == "ok"))
     assert score_ok.count() > 0, "score stage must recompute after retraining"
     # upstream stages (same pages/keys) still skip
+    train_ok = m2.where((F.col("stage") == "train") & (F.col("status") == "ok"))
+    assert train_ok.count() > 0, "new labels must retrain the model"
     skipped = {r["stage"] for r in m2.where(F.col("status") == "skipped").collect()}
-    assert {"preprocess", "blocking", "pairs"} <= skipped
+    assert {"preprocess", "dims", "blocking", "pairs"} <= skipped
     scores2 = {
         (r["url1"], r["url2"]): r["confidence"]
         for r in pipe2.catalog.read("scored_pairs").collect()
@@ -269,42 +327,55 @@ def test_resume_recomputes_uncommitted_table(spark, tmp_path_factory):
     assert os.path.isfile(os.path.join(wh, "scored_pairs", "_SUCCESS"))
 
 
-def test_resume_reruns_stage_killed_before_its_record(spark, tmp_path_factory, monkeypatch):
-    """A run killed after ``scored_pairs`` is committed but before the score
-    stage's manifest record leaves no ``ok`` row: the next run on the same
-    warehouse recomputes the stage (not skipped) and ends equal to a clean
-    run."""
+@pytest.mark.parametrize("stage", ["score", "pairs"])
+def test_resume_reruns_stage_killed_before_its_record(stage, spark, tmp_path_factory,
+                                                      monkeypatch):
+    """A run killed inside a stage after its first table committed leaves
+    no ``ok`` row for it: ``score`` is killed before its manifest record,
+    ``pairs`` at the write of its second table (``oversized_blocks``). The
+    next run on the same warehouse recomputes that stage (not skipped),
+    skips the stages before it, and ends equal to a clean run."""
     wp = web_pages_df(spark, 40)
     lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
     clean = ERPipeline(spark, str(tmp_path_factory.mktemp("erp_wh_clean")), ERConfig())
     clean_res = clean.run(wp, lp)
 
     wh = str(tmp_path_factory.mktemp("erp_wh_killed"))
-    record_stage = Manifest.record_stage
+    if stage == "score":
+        record_stage = Manifest.record_stage
 
-    def killed(self, stage, *args, **kwargs):
-        if stage == "score":
-            raise RuntimeError("killed before the score record")
-        return record_stage(self, stage, *args, **kwargs)
+        def killed_record(self, name, *args, **kwargs):
+            if name == "score":
+                raise RuntimeError("killed before the score record")
+            return record_stage(self, name, *args, **kwargs)
 
-    monkeypatch.setattr(Manifest, "record_stage", killed)
-    with pytest.raises(RuntimeError, match="killed before the score record"):
+        monkeypatch.setattr(Manifest, "record_stage", killed_record)
+    else:
+        write = Catalog.write
+
+        def killed_write(self, df, name, *args, **kwargs):
+            if name == "oversized_blocks":
+                raise RuntimeError("killed at the oversized_blocks write")
+            return write(self, df, name, *args, **kwargs)
+
+        monkeypatch.setattr(Catalog, "write", killed_write)
+    with pytest.raises(RuntimeError, match="killed"):
         ERPipeline(spark, wh, ERConfig()).run(wp, lp)
     monkeypatch.undo()
 
     pipe2 = ERPipeline(spark, wh, ERConfig())
-    assert pipe2.catalog.exists("scored_pairs")  # committed before the kill
+    assert pipe2.catalog.exists(STAGE_TABLES[stage][0])  # committed before the kill
     res2 = pipe2.run(wp, lp)
     m2 = pipe2.manifest.read().where(F.col("run_id") == pipe2.manifest.run_id)
     status = {}
     for r in m2.collect():
         status.setdefault(r["stage"], set()).add(r["status"])
-    assert status["score"] == {"ok"}
-    assert all(status[s] == {"skipped"} for s in ("preprocess", "blocking", "pairs"))
+    assert status[stage] == {"ok"}
+    assert all(status[s] == {"skipped"} for s in STAGES[:STAGES.index(stage)])
 
     for key in ("n_pages", "candidate_pairs", "n_clusters", "evaluation"):
         assert res2[key] == clean_res[key], key
-    for table in ("scored_pairs", "clusters"):
+    for table in {"scored_pairs", "clusters", *STAGE_TABLES[stage]}:
         got = pipe2.catalog.read(table)
         want = clean.catalog.read(table)
         assert sorted(got.collect()) == sorted(want.select(*got.columns).collect()), table

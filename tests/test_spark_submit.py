@@ -120,3 +120,23 @@ def test_env_knob_inventory():
         "SPARK_DRIVER_MEMORY",
         "SPARK_GRAFT_MAX_BUCKET",
     }
+
+
+def test_erconfig_field_inventory():
+    """``ERConfig`` has exactly these fields. A new field is a new option;
+    it has to be added here on purpose, with the measurement that
+    justifies it."""
+    from dataclasses import fields
+
+    from entity_resolution_pipeline_spark.plans.pipeline import ERConfig
+
+    assert [f.name for f in fields(ERConfig)] == [
+        "decision_threshold",
+        "min_edge_weight",
+        "train_frac",
+        "seed",
+        "lsh_num_perm",
+        "lsh_bands",
+        "max_block_size",
+        "rfe_min_features",
+    ]

@@ -7,7 +7,8 @@ three explicit, shuffle-friendly key families:
 - ``name``  : year-stripped, lowercased person name (F14 normalizer).
 - ``host``  : url host + first person token (host alone is too hot — the
   synthetic corpus has a deliberately hot aggregator host).
-- ``lsh:b`` : MinHash band hashes over char-shingled composite text; turns the
+- ``lsh:b`` : band hashes of the composite text's MinHash — the same sketch
+  the curation near-dup uses (``dedup.minhash_matrix``); turns the
   cosine/Jaccard θ-join into an equi-join on band ids (catches typo and
   token-reorder variants that exact keys miss).
 
@@ -28,10 +29,10 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
-from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
+from .dedup import minhash_matrix, sketch_text
 from .util import ensure_parallelism
-from ..functions.minhash import MinHasher
 from ..functions.years import normalize_name
 
 # 32 perms x 8 bands (r=4 rows/band, LSH S-curve threshold ~(1/8)^(1/4)
@@ -84,61 +85,6 @@ def host_keys(records: DataFrame) -> DataFrame:
     )
 
 
-def lsh_keys(
-    records: DataFrame,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    shingle_k: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """(url, key) — one row per MinHash band over the composite text.
-
-    The sketch is the vectorized batch kernel
-    (``MinHasher.signatures_batch``: concatenated shingle hashes + affine
-    perms + ``minimum.reduceat``), value-identical to the per-row
-    ``signature()`` (pytest-pinned) but without per-row small-matrix
-    allocation — the same rewrite that took the dedup minhash sketch from
-    244 s to seconds at sf0.1.
-    """
-    import zlib
-
-    import numpy as np
-
-    schema = StructType(
-        [StructField("url", StringType()), StructField("bands", ArrayType(LongType()))]
-    )
-    rpb = num_perm // bands
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mh = MinHasher(num_perm=num_perm, seed=seed, k=shingle_k, mode="char")
-        crc = zlib.crc32
-        neg = np.int64(-(1 << 63))
-        for pdf in batches:
-            comps = ["" if c is None else c for c in pdf["composite"]]
-            n = len(comps)
-            sigs = mh.signatures_batch(comps)
-            band_ids = np.empty((n, bands), dtype=np.int64)
-            w = rpb * 8
-            for b in range(bands):
-                buf = np.ascontiguousarray(sigs[:, b * rpb:(b + 1) * rpb].astype("<u8")).tobytes()
-                col = np.fromiter(
-                    (crc(buf[i * w:(i + 1) * w]) for i in range(n)),
-                    dtype=np.int64, count=n,
-                )
-                # band-scoped id (b << 32 | crc) reinterpreted into int64
-                band_ids[:, b] = (np.int64(b) << np.int64(32) | col) + neg
-            lists = band_ids.tolist()
-            out = [lists[i] if comps[i] else None for i in range(n)]
-            yield pd.DataFrame({"url": pdf["url"], "bands": out})
-
-    out = ensure_parallelism(records.select("url", "composite")).mapInPandas(run, schema=schema)
-    return (
-        out.where(F.col("bands").isNotNull())
-        .select("url", F.explode("bands").alias("band"))
-        .select("url", F.concat(F.lit("lsh|"), F.col("band").cast("string")).alias("key"))
-    )
-
-
 def block_sizes(keys: DataFrame) -> DataFrame:
     return keys.groupBy("key").agg(F.count(F.lit(1)).alias("block_size"))
 
@@ -146,22 +92,17 @@ def block_sizes(keys: DataFrame) -> DataFrame:
 def candidate_pairs(
     keys: DataFrame,
     max_block_size: int = DEFAULT_MAX_BLOCK,
-    oversized_strategy: str = "window_cap",
     neighbor_cap: int = 20,
     cache_handles: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Self-equi-join within blocks -> canonical distinct (url1 < url2).
 
     Skew handling (north_rule): blocks larger than ``max_block_size`` would
-    contribute O(B^2) pairs. Strategy:
-
-    - ``window_cap``: the hot block's rows are sorted (deterministic) and each
-      row pairs only with its next ``neighbor_cap`` neighbors — O(B*K) pairs,
-      the DataFrame analogue of the reference's top-K ANN fanout cap
-      (/root/reference/src/batch_querying.py:651, top-200 per record).
-    - ``drop``: exclude the block entirely.
-
-    Either way, oversized blocks are *returned* for manifest logging — no
+    contribute O(B^2) pairs, so a hot block's rows are sorted
+    (deterministic) and each row pairs only with its next ``neighbor_cap``
+    neighbors — O(B*K) pairs, the DataFrame analogue of the reference's
+    top-K ANN fanout cap (reference ``src/batch_querying.py:651``, top-200
+    per record). Oversized blocks are *returned* for manifest logging — no
     silent truncation.
 
     Plan shape (one scan of ``keys``): block sizes come from a count window
@@ -179,7 +120,7 @@ def candidate_pairs(
 
     keyed = keys.select("url", "key", F.xxhash64("key").alias("kh"))
     # THREE consumers read the size-annotated key rows (the in-cap join
-    # sides, the window_cap hot branch, and the returned oversized table);
+    # sides, the capped hot branch, and the returned oversized table);
     # without a persist each consumer re-runs the count window — measured
     # ~2x the whole stage's useful work at bench scale. The cached rows
     # are (url, key-hash, count): a fraction of the input record table,
@@ -218,38 +159,37 @@ def candidate_pairs(
         .select(F.col("a.url").alias("url1"), F.col("b.url").alias("url2"))
     )
 
-    if oversized_strategy == "window_cap":
-        # mega-blocks (> salt_factor * max_block_size) are pre-split by a
-        # url-hash salt so no single task sorts the whole block — the same
-        # bounded-recall trade the cap already makes (cross-salt pairs are
-        # dropped), but the per-task work is O(block/salts * log) instead of
-        # one straggler sorting millions of rows. Moderately-hot blocks
-        # (<= salt_factor * cap) keep exact neighbor-cap semantics.
-        salt_factor = 4
-        hot = sized.where(F.col("block_size") > max_block_size)
-        n_sub = F.greatest(
-            F.lit(1),
-            F.ceil(F.col("block_size") / F.lit(salt_factor * max_block_size)).cast("int"),
+    # mega-blocks (> salt_factor * max_block_size) are pre-split by a
+    # url-hash salt so no single task sorts the whole block — the same
+    # bounded-recall trade the cap already makes (cross-salt pairs are
+    # dropped), but the per-task work is O(block/salts * log) instead of
+    # one straggler sorting millions of rows. Moderately-hot blocks
+    # (<= salt_factor * cap) keep exact neighbor-cap semantics.
+    salt_factor = 4
+    hot = sized.where(F.col("block_size") > max_block_size)
+    n_sub = F.greatest(
+        F.lit(1),
+        F.ceil(F.col("block_size") / F.lit(salt_factor * max_block_size)).cast("int"),
+    )
+    hot = hot.withColumn("salt", F.pmod(F.xxhash64("url"), n_sub))
+    w = Window.partitionBy("kh", "salt").orderBy("url")
+    ranked = hot.select("kh", "salt", "url", F.row_number().over(w).alias("rn"))
+    r1 = ranked.alias("r1")
+    r2 = ranked.alias("r2")
+    capped = (
+        r1.join(
+            r2,
+            (F.col("r1.kh") == F.col("r2.kh"))
+            & (F.col("r1.salt") == F.col("r2.salt"))
+            & (F.col("r2.rn") > F.col("r1.rn"))
+            & (F.col("r2.rn") <= F.col("r1.rn") + neighbor_cap),
         )
-        hot = hot.withColumn("salt", F.pmod(F.xxhash64("url"), n_sub))
-        w = Window.partitionBy("kh", "salt").orderBy("url")
-        ranked = hot.select("kh", "salt", "url", F.row_number().over(w).alias("rn"))
-        r1 = ranked.alias("r1")
-        r2 = ranked.alias("r2")
-        capped = (
-            r1.join(
-                r2,
-                (F.col("r1.kh") == F.col("r2.kh"))
-                & (F.col("r1.salt") == F.col("r2.salt"))
-                & (F.col("r2.rn") > F.col("r1.rn"))
-                & (F.col("r2.rn") <= F.col("r1.rn") + neighbor_cap),
-            )
-            .select(
-                F.least(F.col("r1.url"), F.col("r2.url")).alias("url1"),
-                F.greatest(F.col("r1.url"), F.col("r2.url")).alias("url2"),
-            )
+        .select(
+            F.least(F.col("r1.url"), F.col("r2.url")).alias("url1"),
+            F.greatest(F.col("r1.url"), F.col("r2.url")).alias("url2"),
         )
-        pairs = pairs.unionByName(capped)
+    )
+    pairs = pairs.unionByName(capped)
 
     return pairs.distinct(), oversized
 
@@ -259,13 +199,16 @@ def name_and_lsh_keys(
     num_perm: int = DEFAULT_NUM_PERM,
     bands: int = DEFAULT_BANDS,
     shingle_k: int = 5,
-    seed: int = 42,
 ) -> DataFrame:
-    """The two Python-kernel key families (name + LSH bands) in ONE Arrow
-    pass: record rows serialize to Python once instead of twice, and one
-    kernel stage replaces two. Output rows are value-identical to
-    ``name_keys UNION lsh_keys`` (pytest-pinned); ``host_keys`` stays a
-    pure-JVM projection and unions in afterwards.
+    """(url, key) for the two Python-kernel key families in ONE Arrow pass:
+    ``name_keys`` rows plus ``bands`` LSH band keys per non-empty
+    composite. Record rows serialize to Python once, and one kernel stage
+    serves both; ``host_keys`` stays a pure-JVM projection and unions in
+    afterwards.
+
+    The band keys hash the curation sketch: ``minhash_matrix`` over the
+    composite's ``sketch_text``, built on the JVM. Band ``b``'s key is the
+    band-scoped crc ``b << 32 | crc32(band bytes)``, shifted into int64.
     """
     import zlib
 
@@ -278,19 +221,18 @@ def name_and_lsh_keys(
     rpb = num_perm // bands
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mh = MinHasher(num_perm=num_perm, seed=seed, k=shingle_k, mode="char")
         crc = zlib.crc32
         neg = np.int64(-(1 << 63))
-        memo: dict[str, str | None] = {}
+        names: dict[str, str | None] = {}
+        shingles: dict[str, int] = {}
+        w = rpb * 8
         for pdf in batches:
-            comps = ["" if c is None else c for c in pdf["composite"]]
-            n = len(comps)
-            sigs = mh.signatures_batch(comps)
+            nts = ["" if t is None else t for t in pdf["nt"]]
+            n = len(nts)
+            sigs = minhash_matrix(nts, num_perm, shingle_k, np.dtype("<u8"), shingles)
             band_ids = np.empty((n, bands), dtype=np.int64)
-            w = rpb * 8
             for b in range(bands):
-                buf = np.ascontiguousarray(
-                    sigs[:, b * rpb:(b + 1) * rpb].astype("<u8")).tobytes()
+                buf = sigs[:, b * rpb:(b + 1) * rpb].tobytes()
                 col = np.fromiter(
                     (crc(buf[i * w:(i + 1) * w]) for i in range(n)),
                     dtype=np.int64, count=n,
@@ -301,21 +243,22 @@ def name_and_lsh_keys(
             for i, p in enumerate(pdf["person"]):
                 ks: list[str] = []
                 if p is not None:
-                    k = memo.get(p)
-                    if k is None and p not in memo:
+                    k = names.get(p)
+                    if k is None and p not in names:
                         nk = normalize_name(p).lower()
                         k = ("name|" + nk) if nk else None
-                        memo[p] = k
+                        names[p] = k
                     if k:
                         ks.append(k)
-                if comps[i]:
+                if nts[i]:
                     ks.extend("lsh|" + str(b) for b in lists[i])
                 out_keys.append(ks or None)
             yield pd.DataFrame({"url": pdf["url"], "keys": out_keys})
 
-    out = ensure_parallelism(
-        records.select("url", "person", "composite")
-    ).mapInPandas(run, schema=schema)
+    sketched = ensure_parallelism(records.select("url", "person", "composite")).select(
+        "url", "person", sketch_text(F.col("composite")).alias("nt")
+    )
+    out = sketched.mapInPandas(run, schema=schema)
     return (
         out.where(F.col("keys").isNotNull())
         .select("url", F.explode("keys").alias("key"))

@@ -7,8 +7,9 @@ Training-data-pipeline near-duplicate detection, each as a Spark-first plan:
                        *rarest* token (min document frequency), verified with
                        word-set Jaccard — pure JVM (array_intersect/union).
 - minhash_lsh_pairs  : shingle -> md5-MinHash -> band-bucket equi-join ->
-                       signature-similarity verify; the whole sketch is JVM
-                       column expressions (whole-stage codegen, no Python).
+                       signature-similarity verify; the sketch
+                       (``minhash_matrix``) is the package's one MinHash,
+                       shared with ER blocking and the streaming near-dup.
 - simhash_pairs      : 60-bit md5-SimHash; candidates via 4x15-bit band
                        equality (Hamming<=3 guaranteed caught by pigeonhole),
                        verified by exact Hamming distance. Pure JVM.
@@ -211,36 +212,44 @@ def minhash_perm_coeffs(num_perm: int, seed: int = 42) -> tuple[list[int], list[
     return a, b
 
 
+def sketch_text(c, max_chars: int = 2048):
+    """The sketch region of a text column: normalized, lower-cased, first
+    ``max_chars`` chars (bounded per-doc sketch cost at 100 TB)."""
+    return F.substring(F.lower(normalize_col(c)), 1, max_chars)
+
+
 def _sketch_input(docs: DataFrame, text_col: str, max_chars: int) -> DataFrame:
-    """(doc_id, nt): the normalized, lower-cased sketch region of every
-    non-empty doc. The sketch is CPU-heavy per row: small single-row-group
-    parquet would otherwise run it in 1-2 tasks. Spread FIRST, normalize
-    after: with the projection inside ensure_parallelism the regex
-    normalization ran in the scan task (serially, before the spreading
-    shuffle)."""
+    """(doc_id, nt): the ``sketch_text`` of every non-empty doc. The sketch
+    is CPU-heavy per row: small single-row-group parquet would otherwise
+    run it in 1-2 tasks. Spread FIRST, normalize after: with the projection
+    inside ensure_parallelism the regex normalization ran in the scan task
+    (serially, before the spreading shuffle)."""
     return (
         ensure_parallelism(docs.select("doc_id", text_col))
-        .select(
-            "doc_id",
-            F.substring(F.lower(normalize_col(F.col(text_col))), 1, max_chars).alias("nt"),
-        )
+        .select("doc_id", sketch_text(F.col(text_col), max_chars).alias("nt"))
         .where(F.col("nt") != "")
     )
 
 
-def _sketch_batches(batches, num_perm: int, shingle_k: int, dtype):
-    """The MinHash sketch loop over ``_sketch_input`` Arrow batches.
+def minhash_matrix(nts, num_perm: int, shingle_k: int, dtype, memo: dict):
+    """(len(nts), num_perm) MinHash signatures of ``sketch_text`` strings —
+    the one MinHash of the package (curation, ER blocking and the streaming
+    near-dup all call it).
 
-    Yields (doc_id column, signature list array) per batch; the list's
-    values are one flat ``dtype`` buffer of exactly ``num_perm`` components
-    per row (every row has at least one shingle), so its offsets are
-    arithmetic and the doc_id column passes through untouched. Components
-    are < 2^31 (mod Mersenne-31), so int32 and int64 both carry them
-    exactly."""
+    Distinct char-``shingle_k`` shingles (the whole text when shorter), a
+    28-bit md5 base hash per shingle, then ``num_perm`` affine permutations
+    (a*h + b) mod (2^31 - 1) as a numpy outer product + min. Components are
+    < 2^31, so int32 and int64 ``dtype`` both carry them exactly.
+
+    ``memo`` caches the base hash per distinct shingle across calls of one
+    task: corpora repeat shingles heavily (boilerplate, shared vocabulary —
+    this corpus measures ~300x repetition), so it removes most md5 calls.
+    int.from_bytes over digest() is the first 7 hex chars of the md5
+    without the hex-string detour. Cleared past 4M entries so a
+    high-entropy task cannot grow it unbounded."""
     import hashlib
 
     import numpy as np
-    import pyarrow as pa
 
     a_l, b_l = minhash_perm_coeffs(num_perm)
     a = np.asarray(a_l, dtype=np.uint64)[:, None]
@@ -248,36 +257,41 @@ def _sketch_batches(batches, num_perm: int, shingle_k: int, dtype):
     m = np.uint64(_MERSENNE31)
     k = shingle_k
     md5 = hashlib.md5
-    # Per-task shingle-hash memo: corpora being deduped repeat shingles
-    # heavily (boilerplate, shared vocabulary — this corpus measures
-    # ~300x repetition), so caching the 28-bit base hash per distinct
-    # shingle removes most md5 calls. int.from_bytes over digest()
-    # avoids the hex-string detour while producing the identical value
-    # (first 28 bits of the md5 = first 7 hex chars). Bounded: cleared
-    # past 4M entries so a high-entropy task cannot grow it unbounded.
+    if len(memo) > 4_000_000:
+        memo.clear()
+    mget = memo.get
+    out = np.empty((len(nts), num_perm), dtype=dtype)
+    for i, nt in enumerate(nts):
+        sh = {nt} if len(nt) <= k else {nt[j:j + k] for j in range(len(nt) - k + 1)}
+        vals = []
+        for s in sh:
+            v = mget(s)
+            if v is None:
+                v = int.from_bytes(md5(s.encode("utf-8")).digest()[:4], "big") >> 4
+                memo[s] = v
+            vals.append(v)
+        h = np.asarray(vals, dtype=np.uint64)[None, :]
+        # a < 2^31, h < 2^28 -> a*h + b < 2^60: exact in uint64
+        out[i] = ((a * h + b) % m).min(axis=1)
+    return out
+
+
+def _sketch_batches(batches, num_perm: int, shingle_k: int, dtype):
+    """``minhash_matrix`` over ``_sketch_input`` Arrow batches.
+
+    Yields (doc_id column, signature list array) per batch; the list's
+    values are one flat ``dtype`` buffer of exactly ``num_perm`` components
+    per row, so its offsets are arithmetic and the doc_id column passes
+    through untouched."""
+    import numpy as np
+    import pyarrow as pa
+
     memo: dict[str, int] = {}
     for batch in batches:
         ids_col = batch.column(batch.schema.get_field_index("doc_id"))
         nts = batch.column(batch.schema.get_field_index("nt")).to_pylist()
-        if len(memo) > 4_000_000:
-            memo.clear()
-        mget = memo.get
         n = len(nts)
-        flat = np.empty(n * num_perm, dtype=dtype)
-        pos = 0
-        for nt in nts:
-            sh = {nt} if len(nt) <= k else {nt[i:i + k] for i in range(len(nt) - k + 1)}
-            vals = []
-            for s in sh:
-                v = mget(s)
-                if v is None:
-                    v = int.from_bytes(md5(s.encode("utf-8")).digest()[:4], "big") >> 4
-                    memo[s] = v
-                vals.append(v)
-            h = np.asarray(vals, dtype=np.uint64)[None, :]
-            # a < 2^31, h < 2^28 -> a*h + b < 2^60: exact in uint64
-            flat[pos:pos + num_perm] = ((a * h + b) % m).min(axis=1)
-            pos += num_perm
+        flat = minhash_matrix(nts, num_perm, shingle_k, dtype, memo).reshape(-1)
         offsets = pa.array(
             np.arange(0, (n + 1) * num_perm, num_perm, dtype=np.int32), type=pa.int32()
         )
@@ -291,18 +305,13 @@ def minhash_signatures(
     shingle_k: int = 5,
     max_chars: int = 2048,
 ) -> DataFrame:
-    """(doc_id, sig array<bigint>) — md5-based MinHash.
-
-    Whole sketch in ONE vectorized Arrow pass: distinct k-shingles, a
-    28-bit md5 base hash per shingle (hashlib, C speed — the equivalent
-    Spark higher-order expressions are *interpreted* per element and ran
-    ~30x slower), then ``num_perm`` affine permutations (a*h+b) mod
-    (2^31-1) as a numpy outer product + min. Every step is integer-exact
-    and md5-based, so the DuckDB correctness oracle replays the sketch
-    value for value with the same literal coefficients. The sketch region
-    is capped at ``max_chars`` normalized chars (bounded per-doc cost at
-    100 TB). Docs with no shingles (empty text) are dropped. ``doc_id``
-    keeps the input's type.
+    """(doc_id, sig array<bigint>) — ``minhash_matrix`` of each doc's
+    ``sketch_text``, in ONE Arrow pass (hashlib md5 at C speed — the
+    equivalent Spark higher-order expressions are *interpreted* per element
+    and ran ~30x slower). Every step is integer-exact and md5-based, so the
+    DuckDB correctness oracle replays the sketch value for value with the
+    same literal coefficients. Docs with empty sketch text are dropped.
+    ``doc_id`` keeps the input's type.
     """
     import numpy as np
 

@@ -192,12 +192,13 @@ class ERPipeline:
         )
         for h in pair_handles:  # both outputs are materialized in catalog now
             h.unpersist()
-        self.metrics["oversized_blocks_count"] = self.catalog.num_rows("oversized_blocks")
+        n_oversized = self.catalog.num_rows("oversized_blocks")
+        self.metrics["oversized_blocks_count"] = n_oversized
         self.metrics["oversized_blocks"] = [
             {"key": r["key"], "size": int(r["block_size"])}
             for r in self.catalog.read("oversized_blocks")
             .orderBy(F.desc("block_size"), "key").limit(100).collect()
-        ]
+        ] if n_oversized else []
         n_pairs = self.catalog.num_rows("candidate_pairs")
         self.metrics["candidate_pairs"] = n_pairs
 
@@ -357,7 +358,8 @@ class ERPipeline:
 
         Reported twice: on all labeled pairs, and restricted to labeled pairs
         that co-occur in at least one block ("at matched blocking keys", the
-        BASELINE.json gate).
+        BASELINE.json gate). ``candidate_pairs`` holds distinct (url1, url2)
+        rows, as the pairs stage writes them.
         """
         lp = labeled_pairs.select(
             F.least("left", "right").alias("url1"),
@@ -375,25 +377,31 @@ class ERPipeline:
             )
         )
         if candidate_pairs is not None:
-            blocked = joined.join(candidate_pairs, ["url1", "url2"], "left_semi")
+            marker = candidate_pairs.select("url1", "url2", F.lit(1).alias("blocked"))
+            joined = joined.join(marker, ["url1", "url2"], "left")
+            blocked = F.col("blocked").isNotNull()
         else:
-            blocked = joined
+            blocked = F.lit(True)
 
-        def conf_of(df: DataFrame) -> dict:
-            r = df.agg(
-                F.sum(((F.col("label") == 1) & (F.col("pred") == 1)).cast("long")).alias("tp"),
-                F.sum(((F.col("label") == 0) & (F.col("pred") == 1)).cast("long")).alias("fp"),
-                F.sum(((F.col("label") == 1) & (F.col("pred") == 0)).cast("long")).alias("fn"),
-                F.sum(((F.col("label") == 0) & (F.col("pred") == 0)).cast("long")).alias("tn"),
-            ).collect()[0]
-            tp, fp, fn, tn = (int(r[k] or 0) for k in ("tp", "fp", "fn", "tn"))
+        # one aggregation for both scopes: tp/fp/fn/tn over all pairs and
+        # over the blocked ones
+        cells = {"tp": (1, 1), "fp": (0, 1), "fn": (1, 0), "tn": (0, 0)}
+        aggs = []
+        for scope, cond in (("all_pairs", F.lit(True)), ("blocked_pairs", blocked)):
+            for cell, (label, pred) in cells.items():
+                hit = cond & (F.col("label") == label) & (F.col("pred") == pred)
+                aggs.append(F.sum(hit.cast("long")).alias(f"{scope}.{cell}"))
+        r = joined.agg(*aggs).collect()[0]
+
+        def conf_of(scope: str) -> dict:
+            tp, fp, fn, tn = (int(r[f"{scope}.{k}"] or 0) for k in cells)
             prec = tp / (tp + fp) if tp + fp else 0.0
             rec = tp / (tp + fn) if tp + fn else 0.0
             f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
             return {"tp": tp, "fp": fp, "fn": fn, "tn": tn,
                     "precision": prec, "recall": rec, "f1": f1}
 
-        out = {"all_pairs": conf_of(joined), "blocked_pairs": conf_of(blocked)}
+        out = {scope: conf_of(scope) for scope in ("all_pairs", "blocked_pairs")}
         self.metrics["evaluation"] = out
         return out
 

@@ -503,13 +503,24 @@ class Manifest:
         )
 
     def stage_complete(self, stage: str, input_fingerprint: str) -> bool:
-        """True when a prior run committed this stage for the same input."""
+        """True when the stage's tables hold its output for this input: an
+        ok row with the fingerprint was recorded at or after the stage's
+        latest write (its latest ok row that is not an alias). An older ok
+        row does not count — a run on other input rewrote the tables since.
+        Alias rows recorded after that write count: a run records one only
+        once the tables match its input."""
         files = self.catalog.data_files(self.TABLE)
         if not files:
             return False
-        m = pq.read_table(files, columns=["stage", "status", "input_fingerprint"])
+        m = pq.read_table(
+            files, columns=["stage", "partition_id", "status", "input_fingerprint", "committed_at"]
+        )
+        m = m.filter(pc.and_(pc.equal(m["stage"], stage), pc.equal(m["status"], "ok")))
+        last_write = pc.max(m.filter(pc.not_equal(m["partition_id"], -2))["committed_at"])
+        if not last_write.is_valid:
+            return False
         hit = pc.and_(
-            pc.and_(pc.equal(m["stage"], stage), pc.equal(m["status"], "ok")),
+            pc.greater_equal(m["committed_at"], last_write),
             pc.equal(m["input_fingerprint"], input_fingerprint),
         )
         return m.filter(hit).num_rows > 0

@@ -255,43 +255,30 @@ def _minhash_band_rows_stream(docs: DataFrame, text_col: str, id_col: str,
                               shingle_k: int, max_chars: int = 2048) -> DataFrame:
     """(band, doc_id, ts, sig) rows for a (possibly streaming) doc frame.
 
-    Pure-Python mirror of operators/dedup.minhash_signatures + the batch
-    band hash (md5 of "b:sig-csv"), value-identical by construction (the
-    batch-equivalence test pins it): normalization trim+collapse+lower,
-    first ``max_chars`` chars, distinct char-``shingle_k`` shingles,
-    md5-28bit base hash, affine perms mod 2^31-1. mapInPandas (not the
-    batch operator) because streaming frames allow no rdd access and no
+    The batch sketch: ``dedup.minhash_matrix`` over ``dedup.sketch_text``,
+    so signatures equal ``minhash_signatures`` value for value (the
+    batch-equivalence test pins it). The band key is the md5 hex of
+    ``"<band index>:<band components, comma-joined>"``. mapInPandas, not
+    the batch operator, because streaming frames allow no rdd access and no
     ensure_parallelism repartition."""
     import hashlib
-    import re
 
     import numpy as np
     import pandas as pd
 
-    from ..operators.dedup import _MERSENNE31, minhash_perm_coeffs
+    from ..operators.dedup import minhash_matrix, sketch_text
 
-    a_l, b_l = minhash_perm_coeffs(num_perm)
-    a = np.asarray(a_l, dtype=np.uint64)[:, None]
-    b = np.asarray(b_l, dtype=np.uint64)[:, None]
-    m = np.uint64(_MERSENNE31)
     rows_per_band = num_perm // bands
-    ws = re.compile(r"\s+")
 
     def run(batches):
         md5 = hashlib.md5
+        memo: dict[str, int] = {}
         for pdf in batches:
+            sigs = minhash_matrix(
+                pdf["nt"].tolist(), num_perm, shingle_k, np.int64, memo
+            ).tolist()
             out_band, out_id, out_ts, out_sig = [], [], [], []
-            for doc_id, ts, text in zip(pdf[id_col], pdf[ts_col], pdf[text_col]):
-                nt = ws.sub(" ", text or "").strip().lower()[:max_chars]
-                if not nt:
-                    continue
-                k = shingle_k
-                sh = {nt} if len(nt) <= k else {nt[i:i + k] for i in range(len(nt) - k + 1)}
-                h = np.fromiter(
-                    (int(md5(s.encode("utf-8")).hexdigest()[:7], 16) for s in sh),
-                    dtype=np.uint64, count=len(sh),
-                )[None, :]
-                sig = ((a * h + b) % m).min(axis=1).astype(np.int64).tolist()
+            for doc_id, ts, sig in zip(pdf[id_col], pdf[ts_col], sigs):
                 for bi in range(bands):
                     chunk = sig[bi * rows_per_band:(bi + 1) * rows_per_band]
                     band = md5(
@@ -305,8 +292,11 @@ def _minhash_band_rows_stream(docs: DataFrame, text_col: str, id_col: str,
                 "band": out_band, "doc_id": out_id, "ts": out_ts, "sig": out_sig,
             })
 
-    return docs.select(id_col, ts_col, text_col).mapInPandas(
-        run, schema="band string, doc_id long, ts timestamp, sig array<bigint>"
+    nt = sketch_text(F.col(text_col), max_chars)
+    return (
+        docs.select(id_col, ts_col, nt.alias("nt"))
+        .where(F.col("nt") != "")
+        .mapInPandas(run, schema="band string, doc_id long, ts timestamp, sig array<bigint>")
     )
 
 
@@ -325,8 +315,8 @@ def near_dup_pairs_stream(
     """Streaming MinHash-LSH near-dup pair alerts — the streaming twin of
     operators/dedup.minhash_lsh_pairs (pytest-pinned batch-equivalent).
 
-    Each arriving document is sketched once (same md5-affine math as the
-    batch operator), exploded to its ``bands`` LSH bucket rows, and run
+    Each arriving document is sketched once (the batch operator's
+    ``minhash_matrix``), exploded to its ``bands`` LSH bucket rows, and run
     through a per-bucket stateful kernel (applyInPandasWithState): the
     bucket's state holds the last ``max_bucket_state`` (doc_id,
     signature) entries (FIFO — explicit bound on state bytes per key);

@@ -7,7 +7,7 @@ from entity_resolution_pipeline_spark.operators.blocking import (
     block_sizes,
     candidate_pairs,
     host_keys,
-    lsh_keys,
+    name_and_lsh_keys,
     name_keys,
 )
 from entity_resolution_pipeline_spark.operators.preprocess import preprocess_records
@@ -78,27 +78,18 @@ def test_lsh_keys_same_composite_same_bands(spark):
         F.lit(None).cast("binary").alias("html"), "text", F.lit("en").alias("lang"),
     )
     rec = preprocess_records(wp)
-    rows = lsh_keys(rec, num_perm=32, bands=8).collect()
+    rows = [r for r in name_and_lsh_keys(rec, num_perm=32, bands=8).collect()
+            if r["key"].startswith("lsh|")]
     k1 = {r["key"] for r in rows if r["url"] == "u1"}
     k2 = {r["key"] for r in rows if r["url"] == "u2"}
     assert k1 == k2 and len(k1) == 8
-
-
-def test_candidate_pairs_drop_strategy(spark):
-    rows = [(f"u{i}", "hot") for i in range(10)] + [("a", "cold"), ("b", "cold")]
-    keys = _keys_df(spark, rows)
-    pairs, oversized = candidate_pairs(keys, max_block_size=5, oversized_strategy="drop")
-    got = {(r["url1"], r["url2"]) for r in pairs.collect()}
-    assert got == {("a", "b")}
-    over = oversized.collect()
-    assert len(over) == 1 and over[0]["key"] == "hot" and over[0]["block_size"] == 10
 
 
 def test_candidate_pairs_window_cap(spark):
     rows = [(f"u{i:02d}", "hot") for i in range(10)] + [("a", "cold"), ("b", "cold")]
     keys = _keys_df(spark, rows)
     pairs, oversized = candidate_pairs(
-        keys, max_block_size=5, oversized_strategy="window_cap", neighbor_cap=2
+        keys, max_block_size=5, neighbor_cap=2
     )
     got = {(r["url1"], r["url2"]) for r in pairs.collect()}
     assert ("a", "b") in got
@@ -107,7 +98,8 @@ def test_candidate_pairs_window_cap(spark):
     assert ("u00", "u01") in hot_pairs and ("u00", "u02") in hot_pairs
     assert ("u00", "u03") not in hot_pairs
     assert len(hot_pairs) == 2 * 10 - 3  # B*K - K*(K+1)/2 = 20 - 3
-    assert oversized.count() == 1
+    over = oversized.collect()
+    assert len(over) == 1 and over[0]["key"] == "hot" and over[0]["block_size"] == 10
 
 
 def test_window_cap_salts_mega_blocks(spark):
@@ -116,7 +108,7 @@ def test_window_cap_salts_mega_blocks(spark):
     rows = [(f"u{i:03d}", "mega") for i in range(100)]
     keys = _keys_df(spark, rows)
     pairs, oversized = candidate_pairs(
-        keys, max_block_size=5, oversized_strategy="window_cap", neighbor_cap=2
+        keys, max_block_size=5, neighbor_cap=2
     )
     got = [(r["url1"], r["url2"]) for r in pairs.collect()]
     assert oversized.collect()[0]["block_size"] == 100
@@ -131,7 +123,7 @@ def test_window_cap_salts_mega_blocks(spark):
     assert max(fanout.values()) <= 4  # <= neighbor_cap forward + backward
     # deterministic across runs
     got2 = [(r["url1"], r["url2"]) for r in candidate_pairs(
-        keys, max_block_size=5, oversized_strategy="window_cap", neighbor_cap=2
+        keys, max_block_size=5, neighbor_cap=2
     )[0].collect()]
     assert sorted(got) == sorted(got2)
 
@@ -175,27 +167,39 @@ def test_block_sizes_and_key_union(spark):
 
 
 def test_fused_kernel_matches_separate_key_families(spark):
-    """name_and_lsh_keys (one Arrow pass) must emit exactly the rows of
-    name_keys UNION ALL lsh_keys — same urls, same keys, same
-    multiplicities."""
-    from collections import Counter
+    """name_and_lsh_keys (one Arrow pass) emits exactly the ``name_keys``
+    rows, and its LSH buckets are the band slices of the curation sketch:
+    two urls share an ``lsh|`` key iff their ``minhash_signatures`` of the
+    composite agree on that band."""
+    from collections import Counter, defaultdict
 
-    from entity_resolution_pipeline_spark.operators.blocking import (
-        name_and_lsh_keys,
-    )
+    from entity_resolution_pipeline_spark.operators.dedup import minhash_signatures
 
     rec = preprocess_records(web_pages_df(spark, 40))
-    fused = Counter(
-        (r["url"], r["key"])
-        for r in name_and_lsh_keys(rec, num_perm=16, bands=4).collect()
+    num_perm, bands = 16, 4
+    rows = name_and_lsh_keys(rec, num_perm=num_perm, bands=bands).collect()
+    fused_names = Counter((r["url"], r["key"]) for r in rows if r["key"].startswith("name|"))
+    separate = Counter((r["url"], r["key"]) for r in name_keys(rec).collect())
+    assert fused_names == separate and len(separate) > 0
+
+    lsh = defaultdict(set)  # (band index, key) -> urls
+    for r in rows:
+        if r["key"].startswith("lsh|"):
+            band = (int(r["key"][4:]) + (1 << 63)) >> 32
+            lsh[(band, r["key"])].add(r["url"])
+    sigs = minhash_signatures(
+        rec.select(F.col("url").alias("doc_id"), "composite"),
+        text_col="composite", num_perm=num_perm,
+    ).collect()
+    rpb = num_perm // bands
+    slices = defaultdict(set)  # (band index, band components) -> urls
+    for r in sigs:
+        for b in range(bands):
+            slices[(b, tuple(r["sig"][b * rpb:(b + 1) * rpb]))].add(r["doc_id"])
+    assert len(lsh) > 0
+    assert Counter((b, frozenset(u)) for (b, _), u in lsh.items()) == Counter(
+        (b, frozenset(u)) for (b, _), u in slices.items()
     )
-    separate = Counter(
-        (r["url"], r["key"])
-        for r in name_keys(rec)
-        .unionByName(lsh_keys(rec, num_perm=16, bands=4))
-        .collect()
-    )
-    assert fused == separate and len(fused) > 0
 
 
 def test_skew_report_flags_hot_key(spark):

@@ -8,14 +8,6 @@ from entity_resolution_pipeline_spark.functions.hashing import (
     hash64_pair,
     hash_string,
 )
-from entity_resolution_pipeline_spark.functions.minhash import (
-    MinHasher,
-    band_hashes,
-    exact_jaccard,
-    hamming64,
-    minhash_jaccard,
-    simhash64,
-)
 from entity_resolution_pipeline_spark.functions.similarity import (
     harmonic_mean,
     indel_ratio,
@@ -148,64 +140,39 @@ class TestYears:
 
 
 class TestMinHash:
+    """``minhash_matrix``, the one MinHash kernel (blocking, curation and
+    the streaming near-dup), over sketch text: normalized, lower-cased."""
+
     def test_signature_similarity_tracks_jaccard(self):
-        mh = MinHasher(num_perm=256, seed=42)
-        t1 = "the quick brown fox jumps over the lazy dog " * 5
-        t2 = "the quick brown fox jumps over the lazy cat " * 5
-        t3 = "completely different content about spark pipelines and parquet"
-        s1, s2, s3 = mh.signature(t1), mh.signature(t2), mh.signature(t3)
-        est_close = minhash_jaccard(s1, s2)
-        est_far = minhash_jaccard(s1, s3)
-        true_close = exact_jaccard(t1, t2)
+        from entity_resolution_pipeline_spark.operators.dedup import minhash_matrix
+
+        texts = [
+            normalize_text(t).lower()
+            for t in ("the quick brown fox jumps over the lazy dog " * 5,
+                      "the quick brown fox jumps over the lazy cat " * 5,
+                      "completely different content about spark pipelines and parquet")
+        ]
+        s1, s2, s3 = minhash_matrix(texts, 256, 5, np.int64, {})
+        est_close = float(np.mean(s1 == s2))
+        est_far = float(np.mean(s1 == s3))
+
+        def shingles(t, k=5):
+            return {t[i:i + k] for i in range(len(t) - k + 1)}
+
+        a, b = shingles(texts[0]), shingles(texts[1])
+        true_close = len(a & b) / len(a | b)
         assert abs(est_close - true_close) < 0.15
         assert est_far < 0.1 < est_close
 
     def test_identical_texts_identical_signatures(self):
-        mh = MinHasher(num_perm=64, seed=42)
-        assert np.array_equal(mh.signature("hello world"), mh.signature("hello world"))
+        from entity_resolution_pipeline_spark.operators.dedup import minhash_matrix
 
-    def test_band_hashes(self):
-        mh = MinHasher(num_perm=64, seed=42)
-        s = mh.signature("some text for banding")
-        bh = band_hashes(s, bands=16)
-        assert len(bh) == 16
-        # band index is encoded in the bucket id
-        assert len({b >> 32 for b in bh}) == 16
-
-    def test_signatures_batch_matches_per_row(self):
-        """The vectorized batch kernel used by the blocking stage must be
-        value-identical to signature() — it feeds the F1-gated candidate
-        set, so any drift changes candidate pairs."""
-        import random
-
-        rng = random.Random(7)
-        words = ["alpha", "beta", "gamma", "delta", "smith", "john", "1840", "x"]
-        texts = [
-            " ".join(rng.choices(words, k=rng.randint(0, 40))) for _ in range(60)
-        ]
-        texts += ["", "ab", "abcd", "abcde", "a" * 5000]  # edge lengths
-        for num_perm in (16, 64):
-            mh = MinHasher(num_perm=num_perm, seed=42)
-            batch = mh.signatures_batch(texts)
-            for i, t in enumerate(texts):
-                assert np.array_equal(batch[i], mh.signature(t)), (i, t[:30])
-
-    def test_signatures_batch_megadoc_perm_block_path(self):
-        """A doc long enough to trip the perm-block fallback (> 4x the
-        64 MB chunk target for num_perm=64, i.e. >524k shingles) still
-        matches the per-row kernel exactly."""
-        mh = MinHasher(num_perm=64, seed=1)
-        big = "abcdefgh " * 70_000  # ~630k chars -> ~630k char-5 shingles
-        batch = mh.signatures_batch(["small text", big])
-        assert np.array_equal(batch[0], mh.signature("small text"))
-        assert np.array_equal(batch[1], mh.signature(big))
-
-    def test_simhash(self):
-        a = simhash64("the quick brown fox jumps over the lazy dog")
-        b = simhash64("the quick brown fox jumps over the lazy cat")
-        c = simhash64("spark parquet shuffle broadcast join")
-        assert hamming64(a, b) < hamming64(a, c)
-        assert simhash64("") == 0
+        memo: dict = {}
+        first = minhash_matrix(["hello world", "hello world"], 64, 5, np.int64, memo)
+        assert np.array_equal(first[0], first[1])
+        # a warm shingle memo and another batch give the same signature
+        again = minhash_matrix(["other text", "hello world"], 64, 5, np.int64, memo)
+        assert np.array_equal(again[1], first[0])
 
 
 class TestTextStats:

@@ -202,6 +202,34 @@ def test_resume_recomputes_on_input_change(pipeline_run, spark):
     assert res3["n_pages"] > 0
 
 
+def test_resume_after_input_switch_recomputes(spark, tmp_path_factory):
+    """Input A, then input B, then A again on one warehouse: A's old ok
+    rows predate B's writes, so the third run recomputes every stage
+    instead of serving B's tables, and ends equal to the first run."""
+    wh = str(tmp_path_factory.mktemp("erp_wh_switch"))
+    inputs = {}
+    for name, n_ent in (("a", 40), ("b", 60)):
+        src = str(tmp_path_factory.mktemp(f"wp_{name}"))
+        web_pages_df(spark, n_ent).write.mode("overwrite").parquet(src)
+        inputs[name] = (src, spark.createDataFrame(labeled_pairs_pdf(n_ent, 200)))
+
+    def run(name):
+        src, lp = inputs[name]
+        pipe = ERPipeline(spark, wh, ERConfig())
+        return pipe, pipe.run(spark.read.parquet(src), lp)
+
+    pipe_a, res_a = run("a")
+    clusters_a = sorted(pipe_a.catalog.read("clusters").collect())
+    _, res_b = run("b")
+    assert res_b["n_clusters"] != res_a["n_clusters"]
+    pipe_a2, res_a2 = run("a")
+    assert _skipped_stages(pipe_a2) == set()
+    assert res_a2["n_pages"] == res_a["n_pages"]
+    assert res_a2["n_clusters"] == res_a["n_clusters"]
+    assert sorted(pipe_a2.catalog.read("clusters").collect()) == clusters_a
+    assert res_a2["evaluation"] == res_a["evaluation"]
+
+
 def test_metadata_resume_skips_without_input_scan(spark, tmp_path_factory):
     """A resumed run over an UNCHANGED file manifest must decide to skip
     from file metadata alone — no scan of the input table. Proven the hard

@@ -233,29 +233,17 @@ def train_model(spark, n_entities, records=None):
 
 
 def score_job(spark, pairs_dir, model_dict):
-    """Time the full scoring stage as the pipeline runs it (adaptive: at the
-    synthetic corpus's ~2x dup ratio it scores pair rows directly with
-    url passthrough; dup-heavy corpora take the dedup + join-back path) —
-    the headline pairs-scored/sec number."""
-    from pyspark.sql import functions as F  # noqa: N812
-
+    """Time the full scoring stage as the pipeline runs it (one Arrow pass
+    over the pair rows with url passthrough, repartitioned by person at
+    scale) — the headline pairs-scored/sec number."""
     from entity_resolution_pipeline_spark.operators import pairs as P  # noqa: N812
+    from entity_resolution_pipeline_spark.plans.pipeline import SCORE_REPARTITION_MIN_PAIRS
 
     pf = spark.read.parquet(pairs_dir)
-    stats = pf.agg(
-        F.count(F.lit(1)).alias("n"), F.approx_count_distinct("pair_key").alias("d")
-    ).collect()[0]
-    n_pairs = stats["n"]
+    n_pairs = pf.count()
     t0 = time.time()
-    if n_pairs / max(1, stats["d"]) >= 3.0:
-        distinct_tuples = pf.select("pair_key", *P.PAIR_SIDE_COLS).dropDuplicates(["pair_key"])
-        scored = P.score(distinct_tuples, model_dict)
-        _noop(pf.select("url1", "url2", "pair_key").join(scored, "pair_key"))
-    else:
-        # co-locate same-person rows only at scale (memo hit rate drives the
-        # Python kernel; below ~2M rows the shuffle outweighs the gain)
-        src = pf.repartition("person1") if n_pairs >= 2_000_000 else pf
-        _noop(P.score(src, model_dict, passthrough=("url1", "url2")))
+    src = pf.repartition("person1") if n_pairs >= SCORE_REPARTITION_MIN_PAIRS else pf
+    _noop(P.score(src, model_dict, passthrough=("url1", "url2")))
     wall = time.time() - t0
     return n_pairs, wall
 

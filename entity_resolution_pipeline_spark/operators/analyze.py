@@ -68,16 +68,11 @@ def misclassified_pairs(
         .otherwise("FN"),
     )
 
-    wide = P.with_pair_key(P.attach_pair_fields(
-        errors.select("url1", "url2"), records
-    ))
-    feats = P.featurize(
-        wide.select("pair_key", *P.PAIR_SIDE_COLS).dropDuplicates(["pair_key"])
-    ).select("pair_key", "features")
     field_cols = [f + s for f in P.FIELDS for s in ("1", "2")]
-    evidence = wide.select("url1", "url2", "pair_key", *field_cols).join(
-        feats, "pair_key"
-    )
+    evidence = P.featurize(
+        P.with_pair_key(P.attach_pair_fields(errors.select("url1", "url2"), records)),
+        passthrough=("url1", "url2", *field_cols),
+    ).drop("prefilter")
     # LEFT join: an error row must survive even when one side's record was
     # filtered out during preprocess (no evidence row exists at all) — that
     # is exactly the failure this tool exists to surface.

@@ -35,7 +35,9 @@ class LRModel:
     def predict_proba(self, X: np.ndarray) -> np.ndarray:
         Xn = (X - self.means) / self.stds
         Xn = np.nan_to_num(Xn, nan=0.0, posinf=1e10, neginf=-1e10)
-        z = Xn @ self.weights + self.intercept
+        # a row-wise sum, not a BLAS dot product: a row's score must not
+        # depend on which other rows share its batch
+        z = (Xn * self.weights).sum(axis=1) + self.intercept
         return 1.0 / (1.0 + np.exp(-z))
 
     def to_dict(self) -> dict:

@@ -20,13 +20,12 @@ Plan shape:
   (whole-stage codegen) computed in ``with_pair_key``; the 39-char hash
   strings stay JVM-side and only equality flags cross into Python.
 - ``featurize`` / ``score`` are one mapInPandas pass of the vectorized
-  batch kernel (``_features_batch``); ``score`` carries the trained
-  model in its closure. No shuffle, no join. Per-partition memo dicts
-  (``_BatchMemo``) compute token_sort_ratio once per distinct string pair
-  and year extraction once per distinct person string.
-- when pairs repeat field tuples heavily, the pipeline scores each
-  distinct field-hash tuple once and hash-joins scores back
-  (``plans/pipeline.py``, ``dup_ratio``).
+  batch kernel (``_features_batch``) over the caller's pair rows, with the
+  columns it needs passed through; ``score`` carries the trained model in
+  its closure. No shuffle, no join. Repeated field tuples are not deduped
+  in the plan: per-partition memo dicts (``_BatchMemo``) compute
+  token_sort_ratio once per distinct string pair and year extraction once
+  per distinct person string.
 - ``compute_features_row`` is the row-wise reference implementation;
   pytest fuzzes the batch kernel against it.
 """
@@ -457,15 +456,6 @@ def _features_batch(pdf: pd.DataFrame, memo: _BatchMemo) -> tuple[np.ndarray, np
     return X, pref
 
 
-FEATURIZE_SCHEMA = StructType(
-    [
-        StructField("pair_key", StringType()),
-        StructField("features", ArrayType(DoubleType())),
-        StructField("prefilter", StringType()),
-    ]
-)
-
-
 def with_pair_key(df: DataFrame) -> DataFrame:
     """Single join key over the 10-field-hash tuple + JVM equality flags.
 
@@ -520,58 +510,60 @@ def with_pair_key(df: DataFrame) -> DataFrame:
     return out.drop(*[f + "_h1" for f in FIELDS], *[f + "_h2" for f in FIELDS])
 
 
-def featurize(df: DataFrame) -> DataFrame:
-    """pairs-with-fields -> (pair_key, features array, prefilter).
-
-    One mapInPandas pass of the batch kernel; the training sets this feeds
-    are small."""
+def _kernel_pass(df: DataFrame, passthrough: tuple[str, ...],
+                 model_dict: dict | None) -> DataFrame:
+    """One mapInPandas pass of ``_features_batch`` over ``df``'s pair rows:
+    (pair_key, *passthrough, features | confidence, prefilter). Features
+    without a model, the model's confidence with one. Passthrough columns
+    keep their input types."""
+    keep = ["pair_key", *passthrough]
+    out_field = (
+        StructField("features", ArrayType(DoubleType())) if model_dict is None
+        else StructField("confidence", DoubleType())
+    )
+    schema = StructType(
+        [df.schema[c] for c in keep] + [out_field, StructField("prefilter", StringType())]
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = None if model_dict is None else LRModel.from_dict(model_dict)
         memo = _BatchMemo()
         for pdf in batches:
             X, pref = _features_batch(pdf, memo)
-            yield pd.DataFrame(
-                {"pair_key": pdf["pair_key"], "features": list(X), "prefilter": pref}
-            )
+            out = {c: pdf[c] for c in keep}
+            if model is None:
+                out["features"] = list(X)
+            else:
+                p = model.predict_proba(X)
+                out["confidence"] = np.where(
+                    pref == "true", 1.0, np.where(pref == "false", 0.0, p)
+                )
+            out["prefilter"] = pref
+            yield pd.DataFrame(out)
 
-    src = df.select("pair_key", *PAIR_SIDE_COLS)
-    return src.mapInPandas(run, schema=FEATURIZE_SCHEMA)
+    src = df.select(*keep, *[c for c in PAIR_SIDE_COLS if c not in keep])
+    return src.mapInPandas(run, schema=schema)
+
+
+def featurize(df: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
+    """pairs-with-fields -> (pair_key, *passthrough, features array, prefilter).
+
+    ``passthrough`` columns (urls, labels, field strings) ride through the
+    Arrow pass, so callers featurize their own rows with no join back."""
+    return _kernel_pass(df, passthrough, None)
 
 
 def score(
     df: DataFrame, model_dict: dict, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
-    """pairs-with-fields -> (pair_key, confidence, prefilter).
+    """pairs-with-fields -> (pair_key, *passthrough, confidence, prefilter).
 
     confidence = 1.0 / 0.0 for prefiltered pairs, else sigmoid(LR). One
     mapInPandas pass over the pair rows with the vectorized batch kernel
     (per-partition memo dicts dedupe string work); no shuffle or join.
-
-    ``passthrough`` string columns (e.g. url1/url2) ride through the Arrow
-    pass so low-dup-ratio callers can skip the dedup + join-back entirely.
+    ``passthrough`` columns (e.g. url1/url2) ride through the Arrow pass.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = LRModel.from_dict(model_dict)
-        memo = _BatchMemo()
-        for pdf in batches:
-            X, pref = _features_batch(pdf, memo)
-            p = model.predict_proba(X)
-            conf = np.where(pref == "true", 1.0, np.where(pref == "false", 0.0, p))
-            out = {"pair_key": pdf["pair_key"]}
-            for c in passthrough:
-                out[c] = pdf[c]
-            out["confidence"] = conf
-            out["prefilter"] = pref
-            yield pd.DataFrame(out)
-
-    schema = (
-        "pair_key string, "
-        + "".join(f"{c} string, " for c in passthrough)
-        + "confidence double, prefilter string"
-    )
-    src = df.select("pair_key", *passthrough, *PAIR_SIDE_COLS)
-    return src.mapInPandas(run, schema=schema)
+    return _kernel_pass(df, passthrough, model_dict)
 
 
 def attach_pair_fields(pairs: DataFrame, records: DataFrame) -> DataFrame:

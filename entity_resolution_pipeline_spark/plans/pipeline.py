@@ -1,7 +1,7 @@
 """The end-to-end entity-resolution DAG (SURVEY.md §7.1).
 
     web_pages -> records -> dimension tables, blocking keys -> candidate pairs
-              -> model -> scores (distinct field-tuples, Arrow pass, broadcast LR)
+              -> model -> scores (one Arrow pass over the pair rows, broadcast LR)
               -> edges -> clusters -> evaluation
 
 Lifecycle mirrors the reference pipeline (/root/reference/src/pipeline.py:98-190):
@@ -26,7 +26,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
 from ..operators import blocking as B  # noqa: N812
@@ -66,6 +66,11 @@ STAGE_TABLES = {
 }
 STAGES = list(STAGE_TABLES)
 MODEL_METRICS = ("train", "test", "feature_importance", "rfe_selected")  # stored with the model
+# At and above this many candidate pairs the score stage first repartitions
+# the pair rows by person1, so same-person rows share a task's memo
+# (BENCH/BASELINE.md): 42-60 s -> 25.6 s at 5.8M pairs, while at 58k pairs
+# the shuffle costs more than the memo hits save (1.39 -> 1.62 s).
+SCORE_REPARTITION_MIN_PAIRS = 2_000_000
 
 
 @dataclass
@@ -228,45 +233,30 @@ class ERPipeline:
         model_fp = model.digest()
         score_fp = f"{keys_fp}|score|{model_fp}"
 
-        # pair_fields feeds both the distinct-tuple scoring and the join-back:
-        # persist so the two consumers share one computation (on a cluster
-        # this is a materialized intermediate table / exchange reuse).
-        pair_fields = P.with_pair_key(P.attach_pair_fields(pairs, records)).persist()
+        # the dup ratio (pair rows per distinct field tuple) is observed by
+        # the scored_pairs write itself; HLL registers merge by max, so a
+        # retried task cannot inflate it
+        dup_obs: list[Observation] = []
 
         def build_scores():
-            # adaptive: when pairs repeat the same field tuples heavily
-            # (dup-heavy web corpora), score distinct tuples once and hash-
-            # join back; at low dup ratios the dedup shuffle + join-back
-            # costs more than rescoring (per-partition memos still dedupe
-            # within tasks), so score pair rows directly.
-            stats = pair_fields.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("pair_key").alias("d"),
-            ).collect()[0]
-            dup_ratio = stats["n"] / max(1, stats["d"])
-            self.metrics["score_dup_ratio"] = round(float(dup_ratio), 3)
-            if dup_ratio >= 3.0:
-                distinct_tuples = pair_fields.select(
-                    "pair_key", *P.PAIR_SIDE_COLS
-                ).dropDuplicates(["pair_key"])
-                scored_tuples = P.score(distinct_tuples, model.to_dict())
-                return pair_fields.select("url1", "url2", "pair_key").join(
-                    scored_tuples, "pair_key"
-                ).select("url1", "url2", "confidence", "prefilter")
-            # co-locate same-person rows first when the input is large: the
-            # Python tsr kernel's cost is driven by per-partition memo hit
-            # rates, and repartitioning by person measured ~1.7-2.3x faster
-            # at 5.8M pairs; below ~2M rows the shuffle costs more than the
-            # extra memo hits save (partitions already see most variants)
-            src = pair_fields.repartition("person1") if stats["n"] >= 2_000_000 else pair_fields
-            return P.score(
-                src, model.to_dict(), passthrough=("url1", "url2")
-            ).select("url1", "url2", "confidence", "prefilter")
+            pair_fields = P.with_pair_key(P.attach_pair_fields(pairs, records))
+            # pair_fields has exactly n_pairs rows, so the plan is chosen
+            # with no job
+            if n_pairs >= SCORE_REPARTITION_MIN_PAIRS:
+                pair_fields = pair_fields.repartition("person1")
+            obs = Observation("score_dup_ratio")
+            dup_obs.append(obs)
+            scored = P.score(pair_fields, model.to_dict(), passthrough=("url1", "url2"))
+            return scored.observe(obs, F.approx_count_distinct("pair_key").alias("d")).select(
+                "url1", "url2", "confidence", "prefilter"
+            )
 
         t_score0 = time.time()
         scored = self._run_stage("score", score_fp, int(n_pairs), build_scores, force)
         self.metrics["score_wall_s"] = time.time() - t_score0
-        pair_fields.unpersist()
+        if dup_obs:  # get() raises on an Observation whose stage was skipped
+            d = dup_obs[0].get["d"]
+            self.metrics["score_dup_ratio"] = round(n_pairs / max(1, d), 3)
         self.metrics["pairs_scored_per_sec"] = (
             n_pairs / self.metrics["score_wall_s"] if self.metrics["score_wall_s"] > 0 else None
         )
@@ -301,8 +291,7 @@ class ERPipeline:
             normalize_match(F.col("match")).alias("label"),
         )
         wide = P.with_pair_key(P.attach_pair_fields(lp, records))
-        feats = P.featurize(wide.select("pair_key", *P.PAIR_SIDE_COLS).dropDuplicates(["pair_key"]))
-        return wide.select("url1", "url2", "label", "pair_key").join(feats, "pair_key")
+        return P.featurize(wide, passthrough=("url1", "url2", "label"))
 
     def train(self, records: DataFrame, labeled_pairs: DataFrame) -> LRModel:
         feat_df = self.featurize_labeled(records, labeled_pairs)

@@ -247,6 +247,20 @@ class TestClassifier:
         assert abs(y[tr].mean() - 0.3) < 0.02
         assert set(tr).isdisjoint(te)
 
+    def test_predict_proba_independent_of_batching(self):
+        """A row's score is bitwise the same whether it is scored alone, in
+        a slice, or in the whole matrix: the Arrow batch a pair row lands in
+        depends on the partitioning, its score must not."""
+        from entity_resolution_pipeline_spark.operators.classify import LRModel
+
+        rng = np.random.RandomState(7)
+        X = rng.rand(2000, 18)
+        m = LRModel(weights=rng.randn(18), intercept=0.3,
+                    means=rng.rand(18), stds=rng.rand(18) + 0.5)
+        whole = m.predict_proba(X)
+        for lo, hi in ((0, 1), (0, 7), (3, 250), (1000, 1999), (1999, 2000)):
+            np.testing.assert_array_equal(m.predict_proba(X[lo:hi]), whole[lo:hi])
+
     def test_zero_variance_feature(self):
         X, y = self._toy()
         X[:, 3] = 5.0  # constant

@@ -50,6 +50,51 @@ def test_cluster_outputs(pipeline_run):
     assert 150 <= result["n_clusters"] <= n_pages
 
 
+def test_observed_dup_ratio_equals_count_job(pipeline_run):
+    """The dup ratio observed on the scored_pairs write equals n_pairs over
+    a separate approx_count_distinct job on the same pair rows (HLL++ is
+    deterministic for a given value set)."""
+    from entity_resolution_pipeline_spark.operators import pairs as P
+
+    pipe, result, *_ = pipeline_run
+    pair_fields = P.with_pair_key(P.attach_pair_fields(
+        pipe.catalog.read("candidate_pairs"), pipe.catalog.read("records")
+    ))
+    d = pair_fields.agg(F.approx_count_distinct("pair_key")).collect()[0][0]
+    n_pairs = result["candidate_pairs"]
+    assert result["metrics"]["score_dup_ratio"] == round(n_pairs / d, 3)
+
+
+def test_score_repartition_branch_matches_default(spark, tmp_path_factory, monkeypatch):
+    """The size-selected repartition-by-person score plan writes the same
+    scored_pairs, edges and clusters as the default plan."""
+    from entity_resolution_pipeline_spark.plans import pipeline
+
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    default = ERPipeline(spark, str(tmp_path_factory.mktemp("erp_wh_direct")), ERConfig())
+    default.run(wp, lp)
+
+    score_plans = []
+    write = Catalog.write
+
+    def logged_write(self, df, name, *args, **kwargs):
+        if name == "scored_pairs":
+            score_plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return write(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "write", logged_write)
+    monkeypatch.setattr(pipeline, "SCORE_REPARTITION_MIN_PAIRS", 0)
+    repart = ERPipeline(spark, str(tmp_path_factory.mktemp("erp_wh_repart")), ERConfig())
+    repart.run(wp, lp)
+    assert len(score_plans) == 1 and "RepartitionByExpression [person1" in score_plans[0]
+
+    for table in ("scored_pairs", "edges", "clusters"):
+        a, b = default.catalog.read(table), repart.catalog.read(table)
+        assert a.exceptAll(b).count() == 0, table
+        assert b.exceptAll(a).count() == 0, table
+
+
 def test_manifest_lineage(pipeline_run):
     pipe, *_ = pipeline_run
     m = pipe.manifest.read()

@@ -90,19 +90,20 @@ def _edges_signature(e: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def _driver_union_find(spark, e: DataFrame, node_type: str) -> DataFrame:
-    """Union-find on a collected (bounded) edge list; component = min node.
+def _driver_union_find(spark, pdf, node_type: str) -> DataFrame:
+    """Union-find on a collected (bounded) pandas edge frame; component =
+    min node.
 
     Value-identical to the distributed fixpoint (min-label components).
-    Edges cross the driver boundary as ONE Arrow frame (``toPandas``) and
-    the labels go back the same way — the row-based ``collect()`` /
+    The caller collects the edges as ONE Arrow frame (``toPandas``) and the
+    labels go back the same way — the row-based ``collect()`` /
     list-of-tuples ``createDataFrame`` pair serialized every row through
     py4j twice and dominated the fast path's wall at a few 100k edges.
+    Edge direction and duplicate edges do not change the labels.
     """
     import numpy as np
     import pandas as pd
 
-    pdf = e.toPandas()
     # Vectorized min-label pointer jumping (replaces the per-edge Python
     # union-find loop — ~10x on a few-100k-edge frame): np.unique maps
     # node ids to their SORTED index, so index order == id order and the
@@ -137,7 +138,6 @@ def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
     driver_threshold: int = 500_000,
-    canonical_input: bool = False,
 ) -> DataFrame:
     """G3: (node, component) with component = min node id in the component.
 
@@ -145,32 +145,30 @@ def connected_components(
     O(log n) rounds. Each round materializes via localCheckpoint (lineage
     truncation — SURVEY.md §7.4 risk 5).
 
-    Small-graph fast path: when the (deduped) edge list holds at most
-    ``driver_threshold`` rows — probed with a bounded ``limit(n+1).count()``,
-    never an unbounded count — the components come from a driver-side
-    union-find instead. Near-dup graphs are routinely tiny relative to the
-    corpus that produced them, and each distributed round costs 2+ jobs
-    (star joins + checkpoint + fixpoint probe): ~10 rounds of cluster
-    scheduling to label a graph that fits in one driver array. The collect
-    is bounded by the threshold (~8 MB of Arrow-framed ids at the default —
-    measured 2x faster than the distributed rounds even at the full 500k);
-    pass ``driver_threshold=0`` to force the distributed path.
+    Two Spark actions pick the path: an eager localCheckpoint of the
+    self-loop-free edges (the edge plan runs once, whichever path follows)
+    and one Arrow collect of at most ``driver_threshold + 1`` rows. If it
+    holds at most ``driver_threshold`` rows, a driver-side union-find
+    labels it: near-dup graphs are routinely tiny, and each distributed
+    round costs 2+ jobs (star joins + checkpoint + fixpoint probe). The
+    collect is ~8 MB of ids at the default — measured 2x faster than the
+    distributed rounds even at the full 500k. ``driver_threshold=0``
+    forces the distributed path on any non-empty graph.
 
-    ``canonical_input=True`` skips the orient/dedup pass (one full shuffle
-    of the edge set): the caller guarantees no self-loops and no duplicate
-    unordered pairs — exactly the contract every dedup pair operator
-    already meets (doc_id1 < doc_id2, distinct). Orientation itself is
-    irrelevant to both paths (the star loop symmetrizes, union-find is
-    undirected).
+    Neither path needs canonical input: the union-find is undirected and
+    ignores duplicates, and the first large-star round symmetrizes and
+    dedups. Nodes that only carry self-loops are omitted by both paths.
     """
     spark = edges.sparkSession
-    e = (edges if canonical_input else _canonical(edges)).localCheckpoint(eager=True)
     t = edges.schema["src"].dataType.simpleString()
-    if e.isEmpty():
-        return spark.createDataFrame([], f"node {t}, component {t}")
-
-    if driver_threshold > 0 and e.limit(driver_threshold + 1).count() <= driver_threshold:
-        return _driver_union_find(spark, e, t)
+    e = (
+        edges.select("src", "dst")
+        .where(F.col("src") != F.col("dst"))
+        .localCheckpoint(eager=True)
+    )
+    pdf = e.limit(driver_threshold + 1).toPandas()
+    if len(pdf) <= driver_threshold:
+        return _driver_union_find(spark, pdf, t)
 
     prev_sig = None
     for _ in range(max_iterations):
@@ -219,15 +217,13 @@ def connected_components(
     return members.unionByName(roots).distinct()
 
 
-def assign_clusters(
-    edges: DataFrame, all_nodes: DataFrame, canonical_input: bool = False
-) -> DataFrame:
+def assign_clusters(edges: DataFrame, all_nodes: DataFrame) -> DataFrame:
     """(entity_id, cluster_id): CC labels, singletons = their own cluster.
 
-    ``all_nodes`` must have a single column ``node``. ``canonical_input``
-    is forwarded to connected_components (see there).
+    ``all_nodes`` must have a single column ``node``. The components are
+    computed eagerly (see connected_components); the join is lazy.
     """
-    cc = connected_components(edges, canonical_input=canonical_input)
+    cc = connected_components(edges)
     return (
         all_nodes.join(cc, "node", "left")
         .select(

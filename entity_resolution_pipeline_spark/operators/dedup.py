@@ -328,20 +328,20 @@ def minhash_signatures(
     )
 
 
-def _pack_band_lists(mat, bands: int, item_bytes: int):
+def _pack_band_lists(mat, bands: int):
     """(n, num_perm) signature matrix -> Arrow list<binary> of ``bands``
     injective band keys per row: 1 byte band index + the band's components
-    big-endian (``item_bytes`` each). Purely a zero-copy buffer build —
-    no per-row Python, no hashing. Any injective key function groups
-    buckets identically, so these keys produce exactly the pair set the
-    former md5-string keys did, at zero hash cost."""
+    big-endian (4 bytes each; components are < 2^31). Purely a zero-copy
+    buffer build — no per-row Python, no hashing. Any injective key
+    function groups buckets identically, so these keys produce exactly the
+    pair set the former md5-string keys did, at zero hash cost."""
     import numpy as np
     import pyarrow as pa
 
     n, num_perm = mat.shape
     rows = num_perm // bands
-    bl = rows * item_bytes
-    be = mat.astype(f">i{item_bytes}").view(np.uint8).reshape(n, num_perm * item_bytes)
+    bl = rows * 4
+    be = mat.astype(">i4").view(np.uint8).reshape(n, num_perm * 4)
     parts = np.empty((n, bands, bl + 1), dtype=np.uint8)
     parts[:, :, 0] = np.arange(bands, dtype=np.uint8)[None, :]
     parts[:, :, 1:] = be.reshape(n, bands, bl)
@@ -383,46 +383,12 @@ def _minhash_sig_bands(
         for ids_col, sig_arr in _sketch_batches(batches, num_perm, shingle_k, np.int32):
             mat = sig_arr.values.to_numpy().reshape(len(sig_arr), num_perm)
             yield pa.RecordBatch.from_arrays(
-                [ids_col, sig_arr, _pack_band_lists(mat, bands, 4)],
+                [ids_col, sig_arr, _pack_band_lists(mat, bands)],
                 ["doc_id", "sig", "bands"],
             )
 
     return _sketch_input(docs, text_col, max_chars).mapInArrow(
         run, schema=f"doc_id {id_t}, sig array<int>, bands array<binary>"
-    )
-
-
-def _bands_from_sigs(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """Band keys for caller-provided signatures: same packed-binary keys,
-    8-byte components so ANY int64 signature values stay injective. Each
-    sig must be exactly ``num_perm`` non-null values (true for every
-    minhash sketch by construction); anything else raises a ValueError
-    naming ``num_perm``."""
-    import numpy as np
-
-    id_t = sigs.schema["doc_id"].dataType.simpleString()
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids_col = batch.column(batch.schema.get_field_index("doc_id"))
-            sig_col = batch.column(batch.schema.get_field_index("sig"))
-            flat = sig_col.flatten()
-            if sig_col.null_count or flat.null_count or len(flat) != len(batch) * num_perm:
-                raise ValueError(
-                    f"every sig must be a non-null array of num_perm={num_perm} "
-                    f"non-null values; got {len(flat)} values ({flat.null_count} "
-                    f"null) for {len(batch)} rows ({sig_col.null_count} null sigs)"
-                )
-            mat = flat.to_numpy(zero_copy_only=False).reshape(len(batch), num_perm)
-            bands_arr = _pack_band_lists(mat, bands, 8)
-            yield pa.RecordBatch.from_arrays(
-                [ids_col, sig_col, bands_arr], ["doc_id", "sig", "bands"]
-            )
-
-    return sigs.select("doc_id", "sig").mapInArrow(
-        run, schema=f"doc_id {id_t}, sig array<bigint>, bands array<binary>"
     )
 
 
@@ -433,7 +399,6 @@ def minhash_lsh_pairs(
     num_perm: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
-    sigs: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs: band buckets + per-bucket sig verify.
 
@@ -464,10 +429,7 @@ def minhash_lsh_pairs(
 
     if bands > 255:
         raise ValueError("bands must fit one key byte (<= 255)")
-    if sigs is None:
-        sb = _minhash_sig_bands(docs, text_col, num_perm, bands, shingle_k)
-    else:
-        sb = _bands_from_sigs(sigs, num_perm, bands)
+    sb = _minhash_sig_bands(docs, text_col, num_perm, bands, shingle_k)
     banded = sb.select("doc_id", "sig", F.explode("bands").alias("band"))
     # One ROW per bucket (collect_list) with singleton buckets — the vast
     # majority — dropped JVM-side. applyInPandas would build a pandas
@@ -674,17 +636,15 @@ def near_dup_clusters(
     }
     from .cluster import assign_clusters
 
-    # No persist needed: every pair operator emits canonical distinct
-    # pairs (doc_id1 < doc_id2), so connected_components runs with
-    # canonical_input=True — its EAGER localCheckpoint evaluates the pair
-    # pipeline exactly once and every downstream consumer (fast-path
-    # probe, union-find collect / star joins) reads the checkpoint, never
-    # the pair plan. This also drops the orient/dedup shuffle the generic
-    # path pays.
+    # No persist needed: connected_components' EAGER localCheckpoint
+    # evaluates the pair pipeline exactly once, and its bounded collect
+    # (and, for a large graph, the star joins) read the checkpoint, never
+    # the pair plan. The pairs go in as they are: CC needs no orient/dedup
+    # pass.
     pairs = fns[method](docs, text_col, **kw)
     edges = pairs.select(F.col("doc_id1").alias("src"), F.col("doc_id2").alias("dst"))
     nodes = docs.select(F.col("doc_id").alias("node"))
-    cl = assign_clusters(edges, nodes, canonical_input=True)  # eager CC inside
+    cl = assign_clusters(edges, nodes)  # eager CC inside
     # cluster_size as a count window: the former groupBy + join-back
     # shuffled the membership table twice (and evaluated the cl plan in
     # both branches); one count-over-partition shuffle computes the

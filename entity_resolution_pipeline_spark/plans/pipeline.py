@@ -272,10 +272,14 @@ class ERPipeline:
 
         clusters = self._run_stage("cluster", score_fp + "|cluster", int(n_pairs), build_clusters, force)
 
+        # a cluster id is the min url of its component and every edge
+        # endpoint is a record url, so each cluster has exactly one member
+        # whose entity_id is its cluster_id
+        n_clusters = clusters.where(F.col("entity_id") == F.col("cluster_id")).count()
         result = {
             "n_pages": n_pages,
             "candidate_pairs": int(n_pairs),
-            "n_clusters": int(clusters.select("cluster_id").distinct().count()),
+            "n_clusters": int(n_clusters),
             "metrics": self.metrics,
         }
         if labeled_pairs is not None:
@@ -285,11 +289,7 @@ class ERPipeline:
     # ---------- training ----------
 
     def featurize_labeled(self, records: DataFrame, labeled_pairs: DataFrame) -> DataFrame:
-        lp = labeled_pairs.select(
-            F.least("left", "right").alias("url1"),
-            F.greatest("left", "right").alias("url2"),
-            normalize_match(F.col("match")).alias("label"),
-        )
+        lp = normalize_labeled_pairs(labeled_pairs)
         wide = P.with_pair_key(P.attach_pair_fields(lp, records))
         return P.featurize(wide, passthrough=("url1", "url2", "label"))
 
@@ -350,11 +350,7 @@ class ERPipeline:
         BASELINE.json gate). ``candidate_pairs`` holds distinct (url1, url2)
         rows, as the pairs stage writes them.
         """
-        lp = labeled_pairs.select(
-            F.least("left", "right").alias("url1"),
-            F.greatest("left", "right").alias("url2"),
-            normalize_match(F.col("match")).alias("label"),
-        )
+        lp = normalize_labeled_pairs(labeled_pairs)
         c1 = clusters.select(F.col("entity_id").alias("url1"), F.col("cluster_id").alias("cid1"))
         c2 = clusters.select(F.col("entity_id").alias("url2"), F.col("cluster_id").alias("cid2"))
         joined = (
@@ -401,11 +397,7 @@ class ERPipeline:
         and returns per-error-type summary stats in ``metrics``."""
         from ..operators.analyze import error_summary, misclassified_pairs
 
-        lp = labeled_pairs.select(
-            F.least("left", "right").alias("url1"),
-            F.greatest("left", "right").alias("url2"),
-            normalize_match(F.col("match")).alias("label"),
-        )
+        lp = normalize_labeled_pairs(labeled_pairs)
         errors = misclassified_pairs(
             self.catalog.read("scored_pairs"),
             lp,
@@ -456,4 +448,14 @@ def normalize_match(col):
     return (
         F.when(F.lower(col.cast("string")).isin("true", "yes", "t", "y", "1", "match"), 1)
         .otherwise(0)
+    )
+
+
+def normalize_labeled_pairs(labeled_pairs: DataFrame) -> DataFrame:
+    """(left, right, match) labels -> (url1, url2, label): the pair ordered
+    url1 <= url2, as candidate and scored pairs are, and a 0/1 label."""
+    return labeled_pairs.select(
+        F.least("left", "right").alias("url1"),
+        F.greatest("left", "right").alias("url2"),
+        normalize_match(F.col("match")).alias("label"),
     )

@@ -42,10 +42,12 @@ def test_cc_star(spark, thr):
 
 @pytest.mark.parametrize("thr", [100_000, 0])
 def test_cc_two_components_and_dupes(spark, thr):
-    edges = [("a", "b"), ("b", "c"), ("x", "y"), ("b", "a"), ("c", "c")]
+    edges = [("a", "b"), ("b", "c"), ("x", "y"), ("b", "a"), ("c", "c"), ("z", "z")]
     m = _cc_map(spark, edges, thr)
     assert m["a"] == m["b"] == m["c"] == "a"
     assert m["x"] == m["y"] == "x"
+    # a node with only a self-loop is omitted by both paths
+    assert "z" not in m
 
 
 def test_cc_signature_collision_cannot_terminate_early(spark, monkeypatch):
@@ -68,6 +70,26 @@ def test_cc_signature_collision_cannot_terminate_early(spark, monkeypatch):
 def test_cc_empty(spark):
     df = spark.createDataFrame([], "src string, dst string")
     assert connected_components(df).count() == 0
+
+
+def test_assign_clusters_small_graph_job_count(spark):
+    """Below the driver threshold, connected components runs two Spark
+    actions (the checkpoint and one bounded collect); with the final
+    collect, assign_clusters on a 3-edge graph stays within 4 jobs."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string")
+    nodes = spark.createDataFrame([(x,) for x in "abcxy"], "node string")
+    group = "assign-clusters-small-graph"
+    sc.setJobGroup(group, "assign_clusters job count")
+    try:
+        rows = {r["entity_id"]: r["cluster_id"]
+                for r in assign_clusters(edges, nodes).collect()}
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    assert n_jobs <= 4, n_jobs
 
 
 def test_assign_clusters_singletons(spark):
@@ -324,12 +346,12 @@ def test_driver_union_find_matches_scalar_reference(spark):
             continue
         e = spark.createDataFrame(edge_list, "src long, dst long")
         got = {r["node"]: r["component"]
-               for r in _driver_union_find(spark, e, "bigint").collect()}
+               for r in _driver_union_find(spark, e.toPandas(), "bigint").collect()}
         assert got == scalar_uf(edge_list)
     # string ids: lexicographic min, same as the scalar comparison
     s_edges = [(f"u{a}", f"u{b}")
                for a, b in rng.integers(0, 120, size=(400, 2)) if a != b]
     e = spark.createDataFrame(s_edges, "src string, dst string")
     got = {r["node"]: r["component"]
-           for r in _driver_union_find(spark, e, "string").collect()}
+           for r in _driver_union_find(spark, e.toPandas(), "string").collect()}
     assert got == scalar_uf(s_edges)

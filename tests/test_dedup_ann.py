@@ -186,27 +186,6 @@ class TestDedup:
         assert (0, 1) in pairs and (0, 2) in pairs
         assert (0, 4) not in pairs
 
-    def test_minhash_lsh_fused_matches_explicit_sigs_path(self, spark):
-        """The fused sketch kernel (int32 sigs + packed band keys) and the
-        caller-provided-signatures path (int64 sigs, 8-byte band
-        components) must emit the identical pair set with identical
-        est_jaccard values: band keys are injective in both, so bucket
-        co-membership — and the integer component-match verify — cannot
-        differ."""
-        from entity_resolution_pipeline_spark.operators.dedup import (
-            minhash_signatures,
-        )
-
-        docs = _docs(spark)
-        fused = {(r["doc_id1"], r["doc_id2"]): r["est_jaccard"]
-                 for r in minhash_lsh_pairs(docs, threshold=0.6).collect()}
-        sigs = minhash_signatures(docs)
-        explicit = {(r["doc_id1"], r["doc_id2"]): r["est_jaccard"]
-                    for r in minhash_lsh_pairs(docs, threshold=0.6,
-                                               sigs=sigs).collect()}
-        assert fused == explicit
-        assert len(fused) > 0
-
     def test_pack_band_lists_injective(self):
         """Two signature rows get an equal band key iff the band's
         components are equal — the property that makes the packed keys
@@ -226,17 +205,16 @@ class TestDedup:
             ],
             dtype=np.int64,
         )
-        for item_bytes in (4, 8):
-            arr = _pack_band_lists(mat, bands=2, item_bytes=item_bytes)
-            keys = arr.to_pylist()
-            assert keys[0][0] == keys[1][0] and keys[0][1] != keys[1][1]
-            assert keys[0][0] != keys[2][0] and keys[0][1] == keys[2][1]
-            assert keys[0] == keys[3]
-            # band index is part of the key: band 0 of one row never
-            # collides with band 1 of another even for equal components
-            flat = [k for row in keys for k in row]
-            assert keys[0][0] != keys[0][1]
-            assert len(flat) == 8
+        arr = _pack_band_lists(mat, bands=2)
+        keys = arr.to_pylist()
+        assert keys[0][0] == keys[1][0] and keys[0][1] != keys[1][1]
+        assert keys[0][0] != keys[2][0] and keys[0][1] == keys[2][1]
+        assert keys[0] == keys[3]
+        # band index is part of the key: band 0 of one row never
+        # collides with band 1 of another even for equal components
+        flat = [k for row in keys for k in row]
+        assert keys[0][0] != keys[0][1]
+        assert len(flat) == 8
 
     def test_simhash(self, spark):
         pairs = {(r["doc_id1"], r["doc_id2"]): r["hamming"]
@@ -515,23 +493,6 @@ class TestTextStats:
         )
         assert int_ids.schema["doc_id"].dataType.simpleString() == "int"
         assert {r["doc_id"]: r["sig"] for r in int_ids.collect()} == got
-
-    def test_bands_from_sigs_rejects_bad_sigs(self, spark):
-        """Caller-provided sigs of the wrong length, or with a null sig,
-        fail with an error naming num_perm, not a numpy reshape error."""
-        from entity_resolution_pipeline_spark.operators.dedup import (
-            minhash_signatures,
-        )
-
-        docs = _docs(spark)
-        short = minhash_signatures(docs, num_perm=8)
-        with pytest.raises(Exception, match="num_perm=32"):
-            minhash_lsh_pairs(docs, num_perm=32, sigs=short).collect()
-        null_sig = spark.createDataFrame(
-            [(0, list(range(32))), (1, None)], "doc_id long, sig array<bigint>"
-        )
-        with pytest.raises(Exception, match="num_perm=32"):
-            minhash_lsh_pairs(docs, num_perm=32, sigs=null_sig).collect()
 
     def test_ngram_rarest_token_no_megablock(self, spark):
         """Docs sharing a leading stopword must NOT form one O(B^2) block:

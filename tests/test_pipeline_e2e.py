@@ -12,6 +12,7 @@ from entity_resolution_pipeline_spark.plans.pipeline import (
     STAGES,
     ERConfig,
     ERPipeline,
+    normalize_labeled_pairs,
 )
 from entity_resolution_pipeline_spark.sources.catalog import Catalog, Manifest
 from entity_resolution_pipeline_spark.sources.webpages import (
@@ -48,6 +49,14 @@ def test_cluster_outputs(pipeline_run):
     assert clusters.select("entity_id").distinct().count() == n_pages
     # ~200 entities -> between 180 and 260 clusters (nameless singletons add)
     assert 150 <= result["n_clusters"] <= n_pages
+
+
+def test_n_clusters_equals_distinct_cluster_ids(pipeline_run):
+    """n_clusters counts the members whose entity_id is their cluster_id;
+    that equals the number of distinct cluster ids."""
+    pipe, result, *_ = pipeline_run
+    clusters = pipe.catalog.read("clusters")
+    assert result["n_clusters"] == clusters.select("cluster_id").distinct().count()
 
 
 def test_observed_dup_ratio_equals_count_job(pipeline_run):
@@ -610,16 +619,6 @@ def test_table_diff(pipeline_run, spark):
     assert d["missing_sample"] == [(4,)]
 
 
-def _norm_lp(lp):
-    from entity_resolution_pipeline_spark.plans.pipeline import normalize_match
-
-    return lp.select(
-        F.least("left", "right").alias("url1"),
-        F.greatest("left", "right").alias("url2"),
-        normalize_match(F.col("match")).alias("label"),
-    )
-
-
 def test_misclassified_pairs_operator_surfaces_fns_with_evidence(pipeline_run):
     """With an impossible threshold EVERY label-1 pair becomes an error —
     scored ones as FN, never-blocked ones as FN_UNBLOCKED (blocking recall
@@ -630,7 +629,7 @@ def test_misclassified_pairs_operator_surfaces_fns_with_evidence(pipeline_run):
     pipe, _, wp, lp, wh = pipeline_run
     scored = pipe.catalog.read("scored_pairs")
     records = pipe.catalog.read("records")
-    lpn = _norm_lp(lp)
+    lpn = normalize_labeled_pairs(lp)
     errors = misclassified_pairs(scored, lpn, records, threshold=2.0)
     rows = errors.collect()
     expected = lpn.where(F.col("label") == 1).count()
@@ -685,7 +684,7 @@ def test_pipeline_misclassification_analysis(pipeline_run):
     thr = pipe.config.decision_threshold
     scored = pipe.catalog.read("scored_pairs")
     expected = (
-        _norm_lp(lp)
+        normalize_labeled_pairs(lp)
         .join(scored, ["url1", "url2"], "left")
         .where(
             F.coalesce(

@@ -18,9 +18,11 @@ JVM-side aggregations:
   (mmh3.hash128 seed=42 decimal string; 'NULL' sentinel becomes a real SQL
   NULL). Hashing is memoized per Arrow batch — values repeat heavily, so
   Python cost is ~distinct-values-per-batch, not rows.
-- dedup dimensions (unique_strings A1, string_counts A2, field_hash_mapping
-  A3, field_stats A4) are plain shuffles — Spark's partial/final hash
-  aggregation replaces the reference's 70-line batch-merge dance.
+- dedup dimensions: ``field_hash_mapping`` (A3) is one shuffle to one row
+  per (hash, field) with its count and string — Spark's partial/final hash
+  aggregation replaces the reference's 70-line batch-merge dance — and
+  ``unique_strings`` (A1), ``string_counts`` (A2) and ``field_stats`` (A4)
+  are reductions of that table.
 
 The html BINARY column is never selected here: scoring stages must show a
 pruned ReadSchema (SURVEY.md §4).
@@ -128,28 +130,30 @@ def strings_long(records: DataFrame) -> DataFrame:
     )
 
 
-def unique_strings(long_df: DataFrame) -> DataFrame:
-    """A1: hash -> one normalized string (first-writer-wins == any, values
-    hashing to the same key are identical post-normalization up to case/ws;
-    we keep the min for determinism)."""
-    return long_df.groupBy("hash").agg(F.min("value").alias("value"))
-
-
-def string_counts(long_df: DataFrame) -> DataFrame:
-    """A2: hash -> occurrence count."""
-    return long_df.groupBy("hash").agg(F.count(F.lit(1)).alias("cnt"))
-
-
 def field_hash_mapping(long_df: DataFrame) -> DataFrame:
-    """A3: (hash, field) -> count (long form beats a MapType column)."""
-    return long_df.groupBy("hash", "field").agg(F.count(F.lit(1)).alias("cnt"))
+    """A3: (hash, field) -> count and string (the min, for determinism:
+    values sharing a key are equal post-normalization up to case/ws). The
+    dims stage's one table, hash never null; A1, A2 and A4 reduce it."""
+    return long_df.groupBy("hash", "field").agg(
+        F.count(F.lit(1)).alias("cnt"), F.min("value").alias("value")
+    )
 
 
-def field_stats(long_df: DataFrame) -> DataFrame:
-    """A4: per-field totals + distinct values."""
-    return long_df.groupBy("field").agg(
-        F.count(F.lit(1)).alias("total_occurrences"),
-        F.countDistinct("hash").alias("distinct_values"),
+def unique_strings(fhm: DataFrame) -> DataFrame:
+    """A1: hash -> one normalized string, from ``field_hash_mapping``."""
+    return fhm.groupBy("hash").agg(F.min("value").alias("value"))
+
+
+def string_counts(fhm: DataFrame) -> DataFrame:
+    """A2: hash -> occurrence count, from ``field_hash_mapping``."""
+    return fhm.groupBy("hash").agg(F.sum("cnt").alias("cnt"))
+
+
+def field_stats(fhm: DataFrame) -> DataFrame:
+    """A4: per-field totals + distinct values, from ``field_hash_mapping``."""
+    return fhm.groupBy("field").agg(
+        F.sum("cnt").alias("total_occurrences"),
+        F.count(F.lit(1)).alias("distinct_values"),
     )
 
 
@@ -157,9 +161,8 @@ def null_hash_heuristic(records: DataFrame, threshold: float = 0.15) -> DataFram
     """A6: per-field hashes covering > threshold of records
     (/root/reference/src/imputation.py:468-493) — candidate NULL sentinels."""
     total = records.count()
-    long_df = strings_long(records)
     return (
-        long_df.groupBy("field", "hash")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        field_hash_mapping(strings_long(records))
         .where(F.col("cnt") > threshold * total)
+        .select("field", "hash", "cnt")
     )

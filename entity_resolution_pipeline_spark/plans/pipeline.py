@@ -1,6 +1,6 @@
 """The end-to-end entity-resolution DAG (SURVEY.md §7.1).
 
-    web_pages -> records -> dimension tables, blocking keys -> candidate pairs
+    web_pages -> records -> field_hash_mapping, blocking keys -> candidate pairs
               -> model -> scores (one Arrow pass over the pair rows, broadcast LR)
               -> edges -> clusters -> evaluation
 
@@ -44,9 +44,7 @@ from ..operators.classify import (
 )
 from ..operators.preprocess import (
     field_hash_mapping,
-    field_stats,
     preprocess_records,
-    string_counts,
     strings_long,
     unique_strings,
 )
@@ -56,7 +54,7 @@ from ..sources.catalog import Catalog, Manifest, fingerprint_df, fingerprint_fil
 # stage's manifest lineage.
 STAGE_TABLES = {
     "preprocess": ("records",),
-    "dims": ("unique_strings", "string_counts", "field_hash_mapping", "field_stats"),
+    "dims": ("field_hash_mapping",),
     "blocking": ("blocking_keys",),
     "pairs": ("candidate_pairs", "oversized_blocks"),
     "train": ("model",),
@@ -172,12 +170,9 @@ class ERPipeline:
 
         rec_fp = self._table_fp(records, ["url", "person_h"])
 
-        def build_dims():  # dedup dimensions (A1-A4)
-            long_df = strings_long(records)
-            return (unique_strings(long_df), string_counts(long_df),
-                    field_hash_mapping(long_df), field_stats(long_df))
-
-        self._run_stage("dims", rec_fp, n_pages, build_dims, force)
+        # dedup dimensions: one (hash, field) table; A1, A2 and A4 reduce it
+        self._run_stage("dims", rec_fp + "|dims", n_pages,
+                        lambda: field_hash_mapping(strings_long(records)), force)
         keys = self._run_stage(
             "blocking", rec_fp, n_pages,
             lambda: B.all_blocking_keys(records, num_perm=cfg.lsh_num_perm, bands=cfg.lsh_bands),
@@ -421,7 +416,7 @@ class ERPipeline:
         from ..operators.impute import impute_field
 
         records = self.catalog.read("records")
-        us = self.catalog.read("unique_strings")
+        us = unique_strings(self.catalog.read("field_hash_mapping"))
         emb = embed_unique_strings(us)
         emb.persist()
         counts = {}
@@ -431,7 +426,7 @@ class ERPipeline:
                 sim_threshold=sim_threshold, max_donors=max_donors, method=method,
             )
             self.catalog.write(out, f"imputed_{field_name}")
-            counts[field_name] = int(self.catalog.read(f"imputed_{field_name}").count())
+            counts[field_name] = self.catalog.num_rows(f"imputed_{field_name}")
         emb.unpersist()
         self.metrics["imputed"] = counts
         return counts

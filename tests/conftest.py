@@ -3,6 +3,9 @@ import tempfile
 
 import pytest
 
+N_ENT = 200
+N_PAIRS = 800
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -19,3 +22,20 @@ def tmp_warehouse():
     d = tempfile.mkdtemp(prefix="erp_wh_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def pipeline_run(spark, tmp_path_factory):
+    """One ``ERPipeline.run`` on 200 synthetic entities, per test module."""
+    from entity_resolution_pipeline_spark.plans.pipeline import ERConfig, ERPipeline
+    from entity_resolution_pipeline_spark.sources.webpages import (
+        labeled_pairs_pdf,
+        web_pages_df,
+    )
+
+    wh = str(tmp_path_factory.mktemp("erp_wh"))
+    wp = web_pages_df(spark, N_ENT)
+    lp = spark.createDataFrame(labeled_pairs_pdf(N_ENT, N_PAIRS))
+    pipe = ERPipeline(spark, wh, ERConfig())
+    result = pipe.run(wp, lp)
+    return pipe, result, wp, lp, wh

@@ -6,6 +6,7 @@ deterministic synthetic corpus at matched blocking keys.
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import N_ENT
 
 from entity_resolution_pipeline_spark.plans.pipeline import (
     STAGE_TABLES,
@@ -19,19 +20,6 @@ from entity_resolution_pipeline_spark.sources.webpages import (
     labeled_pairs_pdf,
     web_pages_df,
 )
-
-N_ENT = 200
-N_PAIRS = 800
-
-
-@pytest.fixture(scope="module")
-def pipeline_run(spark, tmp_path_factory):
-    wh = str(tmp_path_factory.mktemp("erp_wh"))
-    wp = web_pages_df(spark, N_ENT)
-    lp = spark.createDataFrame(labeled_pairs_pdf(N_ENT, N_PAIRS))
-    pipe = ERPipeline(spark, wh, ERConfig())
-    result = pipe.run(wp, lp)
-    return pipe, result, wp, lp, wh
 
 
 def test_f1_gate(pipeline_run):
@@ -727,10 +715,75 @@ def test_impute_enrichment(pipeline_run):
     pipe, *_ = pipeline_run
     counts = pipe.impute(fields=("provision",), sim_threshold=0.2)
     assert counts["provision"] >= 0
+    assert counts["provision"] == pipe.catalog.read("imputed_provision").count()
     if counts["provision"]:
         imp = pipe.catalog.read("imputed_provision")
         assert {"url", "imputed_value", "donor_count", "mean_sim"} <= set(imp.columns)
         assert imp.where("imputed_value IS NULL").count() == 0
+
+
+def test_dims_reductions_equal_direct_aggregations(pipeline_run):
+    """A1, A2 and A4 over the stored ``field_hash_mapping`` equal the same
+    dimensions aggregated directly over the long form of the records."""
+    from entity_resolution_pipeline_spark.operators.preprocess import (
+        field_stats,
+        string_counts,
+        strings_long,
+        unique_strings,
+    )
+
+    pipe, *_ = pipeline_run
+    fhm = pipe.catalog.read("field_hash_mapping")
+    long_df = strings_long(pipe.catalog.read("records"))
+    direct = {
+        "unique_strings": long_df.groupBy("hash").agg(F.min("value").alias("value")),
+        "string_counts": long_df.groupBy("hash").agg(F.count(F.lit(1)).alias("cnt")),
+        "field_stats": long_df.groupBy("field").agg(
+            F.count(F.lit(1)).alias("total_occurrences"),
+            F.countDistinct("hash").alias("distinct_values"),
+        ),
+    }
+    reduced = {
+        "unique_strings": unique_strings(fhm),
+        "string_counts": string_counts(fhm),
+        "field_stats": field_stats(fhm),
+    }
+    for name, want in direct.items():
+        got = reduced[name]
+        assert got.dtypes == want.dtypes, name
+        assert got.count() == want.count() > 0, name
+        assert got.exceptAll(want).count() == 0, name
+        assert want.exceptAll(got).count() == 0, name
+
+
+def test_resume_recomputes_old_layout_dims(spark, tmp_path_factory):
+    """A warehouse written when ``field_hash_mapping`` had no ``value``
+    column, with a dims ok row at the records fingerprint, recomputes dims
+    instead of skipping it, and ``impute`` then reads the new table."""
+    from entity_resolution_pipeline_spark.operators.preprocess import strings_long
+
+    wh = str(tmp_path_factory.mktemp("erp_wh_old_dims"))
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    pipe = ERPipeline(spark, wh, ERConfig())
+    pipe.run(wp, lp)
+    records = pipe.catalog.read("records")
+    old_fhm = strings_long(records).groupBy("hash", "field").agg(F.count(F.lit(1)).alias("cnt"))
+    pipe.catalog.write(old_fhm, "field_hash_mapping")
+    rec_fp = pipe._table_fp(records, ["url", "person_h"])
+    Manifest(pipe.catalog, run_id="old-layout").record_stage(
+        "dims", "field_hash_mapping", -1, 0, rec_fp
+    )
+    assert "value" not in pipe.catalog.read("field_hash_mapping").columns
+
+    pipe2 = ERPipeline(spark, wh, ERConfig())
+    pipe2.run(wp, lp)
+    m2 = pipe2.manifest.read().where(
+        (F.col("run_id") == pipe2.manifest.run_id) & (F.col("stage") == "dims")
+    )
+    assert {r["status"] for r in m2.collect()} == {"ok"}
+    assert pipe2.catalog.read("field_hash_mapping").columns == ["hash", "field", "cnt", "value"]
+    assert pipe2.impute(fields=("provision",), sim_threshold=0.2)["provision"] >= 0
 
 
 def test_stat_uris_bulk_local(tmp_path):

@@ -4,7 +4,9 @@ import pyspark.sql.functions as F
 
 from entity_resolution_pipeline_spark.functions.hashing import hash_string
 from entity_resolution_pipeline_spark.operators.preprocess import (
+    field_hash_mapping,
     field_stats,
+    null_hash_heuristic,
     preprocess_records,
     string_counts,
     strings_long,
@@ -69,14 +71,18 @@ def test_dedup_dimensions(spark):
         F.lit("en").alias("lang"),
     )
     rec = preprocess_records(wp)
-    long_df = strings_long(rec)
-    us = {r["hash"]: r["value"] for r in unique_strings(long_df).collect()}
-    sc = {r["hash"]: r["cnt"] for r in string_counts(long_df).collect()}
+    fhm = field_hash_mapping(strings_long(rec))
+    us = {r["hash"]: r["value"] for r in unique_strings(fhm).collect()}
+    sc = {r["hash"]: r["cnt"] for r in string_counts(fhm).collect()}
     h_ab = hash_string("A B")
     assert h_ab == hash_string("a  b")
     assert sc[h_ab] == 2
     assert us[h_ab] in ("A B", "a b")  # deterministic min
-    fs = {r["field"]: r for r in field_stats(long_df).collect()}
+    person_ab = fhm.where((F.col("hash") == h_ab) & (F.col("field") == "person")).collect()
+    assert len(person_ab) == 1
+    assert person_ab[0]["cnt"] == 2
+    assert person_ab[0]["value"] in ("A B", "a b")
+    fs = {r["field"]: r for r in field_stats(fhm).collect()}
     assert fs["person"]["total_occurrences"] == 3
     assert fs["person"]["distinct_values"] == 2
     assert fs["title"]["distinct_values"] == 2
@@ -93,3 +99,60 @@ def test_html_column_pruned_from_scan(spark, tmp_warehouse):
     for ln in read_schemas:
         assert "html" not in ln, ln
     assert "text" in plan
+
+
+def _pages(spark, texts):
+    return spark.createDataFrame(
+        [(f"u{i}", t) for i, t in enumerate(texts)], "url string, text string"
+    ).select(
+        "url",
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        "text",
+        F.lit("en").alias("lang"),
+    )
+
+
+def test_null_hash_heuristic(spark):
+    """A6 keeps the (field, hash) rows covering MORE than threshold x
+    records: at threshold 0.2 over 10 records, person X (3 records) and
+    provision 1900 (5) are kept and person Y (exactly 2) is not. The result
+    equals a direct groupBy over the long form."""
+    texts = (
+        [f"Name: X; Title: t{i}; Published: 1900;" for i in range(3)]
+        + [f"Name: Y; Title: t{i}; Published: 1900;" for i in range(3, 5)]
+        + [f"Title: t{i};" for i in range(5, 10)]
+    )
+    rec = preprocess_records(_pages(spark, texts))
+    got = null_hash_heuristic(rec, threshold=0.2)
+    assert got.columns == ["field", "hash", "cnt"]
+    assert {tuple(r) for r in got.collect()} == {
+        ("person", hash_string("X"), 3),
+        ("provision", hash_string("1900"), 5),
+    }
+    want = (
+        strings_long(rec).groupBy("field", "hash")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .where(F.col("cnt") > 0.2 * 10)
+    )
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_field_hash_mapping_write_jobs(spark, tmp_warehouse):
+    """Writing the dims stage's one table from stored records runs at most
+    two Spark jobs (the aggregation's shuffle map stage and the write)."""
+    src = tmp_warehouse + "/records"
+    preprocess_records(web_pages_df(spark, 40)).write.parquet(src)
+    rec = spark.read.parquet(src)
+    sc = spark.sparkContext
+    group = "fhm-write"
+    sc.setJobGroup(group, "field_hash_mapping write")
+    try:
+        field_hash_mapping(strings_long(rec)).write.parquet(tmp_warehouse + "/fhm")
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 1 <= len(jobs) <= 2, jobs
+    assert spark.read.parquet(tmp_warehouse + "/fhm").columns == ["hash", "field", "cnt", "value"]

@@ -122,6 +122,18 @@ def test_env_knob_inventory():
     }
 
 
+def test_run_writes_only_stage_tables(pipeline_run):
+    """``ERPipeline.run`` writes exactly the tables of ``STAGE_TABLES``
+    (``_run_stage`` is its only table write), each committed, plus the
+    checkpoint manifest."""
+    from entity_resolution_pipeline_spark.plans.pipeline import STAGE_TABLES
+
+    pipe, *_, wh = pipeline_run
+    tables = {t for ts in STAGE_TABLES.values() for t in ts}
+    assert set(os.listdir(wh)) == tables | {"checkpoint_manifest"}
+    assert all(pipe.catalog.exists(t) for t in tables)
+
+
 def test_erconfig_field_inventory():
     """``ERConfig`` has exactly these fields. A new field is a new option;
     it has to be added here on purpose, with the measurement that

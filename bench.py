@@ -185,8 +185,8 @@ def build_pair_fields(spark, n_entities, out_dir):
     n_pages = records.count()
     timings["preprocess_s"] = round(time.time() - t0, 3)
 
-    # min-of-2 full reps of the ENTIRE stage (keys kernel + count window +
-    # self-join + distinct + attach + parquet write, nothing cached across
+    # min-of-2 full reps of the ENTIRE stage (keys kernel + pair window +
+    # distinct + attach + parquet write, nothing cached across
     # reps): the first rep carries one-off python-worker/numpy first-touch
     # warmup (~0.5 ms/page on this VM, measured 20.6 s cold vs 6.7 s
     # steady at bench scale) that amortizes to nothing over a 100 TB run —
@@ -197,15 +197,11 @@ def build_pair_fields(spark, n_entities, out_dir):
         t0 = time.time()
         keys = B.all_blocking_keys(records).persist()
         keys.count()
-        handles = []
-        pairs, oversized = B.candidate_pairs(keys, max_block_size=64,
-                                             cache_handles=handles)
+        pairs, oversized = B.candidate_pairs(keys, max_block_size=64)
         pair_fields = P.with_pair_key(P.attach_pair_fields(pairs, records))
         pair_fields.write.mode("overwrite").parquet(out_dir)
         walls.append(round(time.time() - t0, 3))
         n_over = oversized.count()
-        for h in handles:
-            h.unpersist()
         keys.unpersist()
     timings["blocking_pairs_s"] = min(walls)
     timings["blocking_pairs_walls"] = walls

@@ -7,8 +7,8 @@ Re-expresses the capabilities of the reference single-node pipeline
 
     web_pages (url, warc_ts, html, text, lang)
       -> preprocess (normalize, field derivation, mmh3 keys, dedup dims)
-      -> blocking (normalized-name key, url-host key, MinHash/LSH bands; salted)
-      -> candidate pairs (canonical id1<id2 self-joins)
+      -> blocking (normalized-name key, url-host key, MinHash/LSH bands)
+      -> candidate pairs (one sorted window per block, canonical id1<id2)
       -> pairwise scoring (Arrow pandas UDF: 18 features + broadcast LR)
       -> edges (p >= 0.90, w >= 0.5)
       -> clusters (large-star/small-star connected components)

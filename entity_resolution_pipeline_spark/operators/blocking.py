@@ -13,13 +13,13 @@ three explicit, shuffle-friendly key families:
   token-reorder variants that exact keys miss).
 
 Skew handling is explicit (north_rule): NULL keys are dropped (they can never
-match on that key), block sizes are measured first, and blocks larger than
-``max_block_size`` are excluded from pair generation and *returned* to the
-caller for manifest logging — bounded work per key, no silent truncation.
-AQE skew-join splitting covers residual imbalance.
+match on that key), and a block larger than ``max_block_size`` pairs each row
+only with its next ``neighbor_cap`` sorted neighbours; such blocks are
+*returned* to the caller for manifest logging — bounded work per key, no
+silent truncation.
 
-Pairs are canonicalized (url1 < url2) before the union-distinct so each
-unordered pair shuffles once.
+Pairs are canonical (url1 < url2) before the distinct, so a pair that
+several keys share is emitted once.
 """
 
 from __future__ import annotations
@@ -39,8 +39,8 @@ from ..functions.years import normalize_name
 # ≈ 0.59) — measured A/B vs the round-3 64x16 (threshold 0.5): blocked-
 # pairs F1 stays 1.0000 at 200 AND 1000 entities (all-pairs recall
 # 0.9929/0.9905 vs 0.9964/0.9943) while the sketch kernel and the LSH key
-# fan-out HALVE (8 keys/doc instead of 16 — fewer rows through the count
-# window, the self-join, and the pair distinct).
+# fan-out HALVE (8 keys/doc instead of 16 — fewer rows through the pair
+# window and the pair distinct).
 DEFAULT_NUM_PERM = 32
 DEFAULT_BANDS = 8
 DEFAULT_MAX_BLOCK = 64
@@ -93,105 +93,61 @@ def candidate_pairs(
     keys: DataFrame,
     max_block_size: int = DEFAULT_MAX_BLOCK,
     neighbor_cap: int = 20,
-    cache_handles: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Self-equi-join within blocks -> canonical distinct (url1 < url2).
+    """Sorted-neighbourhood pairs per block -> canonical distinct (url1 < url2).
 
-    Skew handling (north_rule): blocks larger than ``max_block_size`` would
-    contribute O(B^2) pairs, so a hot block's rows are sorted
-    (deterministic) and each row pairs only with its next ``neighbor_cap``
-    neighbors — O(B*K) pairs, the DataFrame analogue of the reference's
-    top-K ANN fanout cap (reference ``src/batch_querying.py:651``, top-200
-    per record). Oversized blocks are *returned* for manifest logging — no
-    silent truncation.
+    One window over the block's 8-byte key hash ``kh``, ordered by url
+    (Hernández & Stolfo's sorted-neighbourhood method, run per block): each
+    row collects the urls of the rows after it. A block of at most
+    ``max_block_size`` rows pairs every row with every later row — all of
+    its pairs. A larger block would contribute O(B^2) pairs, so each row
+    keeps only its next ``neighbor_cap`` sorted neighbours — O(B*K) pairs
+    over the whole block, the DataFrame analogue of the reference's top-K
+    ANN fanout cap (reference ``src/batch_querying.py:651``, top-200 per
+    record). A url listed twice in a block never pairs with itself.
 
-    Plan shape (one scan of ``keys``): block sizes come from a count window
-    over the 8-byte key hash — ONE shuffle on ``kh`` that the self-join then
-    reuses (same partitioning, Catalyst emits a ReusedExchange for the two
-    sides) — instead of a separate groupBy + anti-join pass. There is NO
-    broadcast anywhere: the oversized-key set on a 100 TB web corpus is
-    itself unbounded, and force-broadcasting it (as round 2 did) risks
-    driver OOM; size filtering is a per-row predicate on the windowed count.
-    A 64-bit ``kh`` collision would only merge two blocks — extra candidates
-    get scored, none are lost (and a merged block crossing the size cap just
-    routes both blocks through the capped path).
+    Skew handling (north_rule): every block over the cap is *returned* as
+    ``(key, block_size)`` for manifest logging — no silent truncation. That
+    table is a plain aggregate of ``keys`` by ``kh`` and the pairs one window
+    over ``keys``, so nothing is persisted between the two outputs. There
+    is NO broadcast anywhere: the oversized-key set on a 100 TB web
+    corpus is itself unbounded. A 64-bit ``kh`` collision would only merge
+    two blocks — extra candidates get scored, none are lost (and a merged
+    block crossing the size cap is capped, and reported under its smaller
+    key, as one block).
     """
     from pyspark.sql import Window
 
-    keyed = keys.select("url", "key", F.xxhash64("key").alias("kh"))
-    # THREE consumers read the size-annotated key rows (the in-cap join
-    # sides, the capped hot branch, and the returned oversized table);
-    # without a persist each consumer re-runs the count window — measured
-    # ~2x the whole stage's useful work at bench scale. The cached rows
-    # are (url, key-hash, count): a fraction of the input record table,
-    # MEMORY_AND_DISK, exactly what a 100 TB run would materialize between
-    # the sizing and pair-generation stages. Cache ownership stays with
-    # whoever runs the action: the persist happens ONLY when the caller
-    # passes ``cache_handles`` to receive the handle and unpersist after
-    # materializing (pipeline and bench both do). With the default None
-    # the operator stays cache-stateless — no session-lifetime leak —
-    # at the cost of the window re-running per consumer.
-    sized = keyed.withColumn(
-        "block_size", F.count(F.lit(1)).over(Window.partitionBy("kh"))
-    )
-    if cache_handles is not None:
-        sized = sized.persist()
-        cache_handles.append(sized)
-    oversized = (
-        sized.where(F.col("block_size") > max_block_size)
-        .groupBy("key")
-        .agg(F.max("block_size").alias("block_size"))
-    )
-
-    # self-join on the 8-byte hash of the (long string) key: much smaller
-    # shuffle and faster comparisons. Singleton blocks (the vast majority
-    # of LSH band keys) can never produce a pair — dropping them here
-    # keeps them out of both join hash tables for free (the predicate
-    # rides the window output; no extra shuffle).
-    ok = sized.where(
-        (F.col("block_size") <= max_block_size) & (F.col("block_size") >= 2)
-    ).select("url", "kh")
-    a = ok.alias("a")
-    b = ok.alias("b")
+    w = Window.partitionBy("kh").orderBy("url")
+    # an in-cap block has at most max_block_size - 1 rows after any row
+    reach = max(max_block_size - 1, neighbor_cap)
     pairs = (
-        a.join(b, "kh")
-        .where(F.col("a.url") < F.col("b.url"))
-        .select(F.col("a.url").alias("url1"), F.col("b.url").alias("url2"))
-    )
-
-    # mega-blocks (> salt_factor * max_block_size) are pre-split by a
-    # url-hash salt so no single task sorts the whole block — the same
-    # bounded-recall trade the cap already makes (cross-salt pairs are
-    # dropped), but the per-task work is O(block/salts * log) instead of
-    # one straggler sorting millions of rows. Moderately-hot blocks
-    # (<= salt_factor * cap) keep exact neighbor-cap semantics.
-    salt_factor = 4
-    hot = sized.where(F.col("block_size") > max_block_size)
-    n_sub = F.greatest(
-        F.lit(1),
-        F.ceil(F.col("block_size") / F.lit(salt_factor * max_block_size)).cast("int"),
-    )
-    hot = hot.withColumn("salt", F.pmod(F.xxhash64("url"), n_sub))
-    w = Window.partitionBy("kh", "salt").orderBy("url")
-    ranked = hot.select("kh", "salt", "url", F.row_number().over(w).alias("rn"))
-    r1 = ranked.alias("r1")
-    r2 = ranked.alias("r2")
-    capped = (
-        r1.join(
-            r2,
-            (F.col("r1.kh") == F.col("r2.kh"))
-            & (F.col("r1.salt") == F.col("r2.salt"))
-            & (F.col("r2.rn") > F.col("r1.rn"))
-            & (F.col("r2.rn") <= F.col("r1.rn") + neighbor_cap),
+        keys.select("url", F.xxhash64("key").alias("kh"))
+        .select(
+            "url",
+            F.count(F.lit(1)).over(
+                w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            ).alias("block_size"),
+            F.collect_list("url").over(w.rowsBetween(1, reach)).alias("later"),
         )
         .select(
-            F.least(F.col("r1.url"), F.col("r2.url")).alias("url1"),
-            F.greatest(F.col("r1.url"), F.col("r2.url")).alias("url2"),
+            F.col("url").alias("url1"),
+            F.explode(
+                F.when(F.col("block_size") > max_block_size,
+                       F.slice("later", 1, neighbor_cap))
+                .otherwise(F.col("later"))
+            ).alias("url2"),
         )
+        .where(F.col("url1") < F.col("url2"))
+        .distinct()
     )
-    pairs = pairs.unionByName(capped)
-
-    return pairs.distinct(), oversized
+    oversized = (
+        keys.groupBy(F.xxhash64("key").alias("kh"))
+        .agg(F.min("key").alias("key"), F.count(F.lit(1)).alias("block_size"))
+        .where(F.col("block_size") > max_block_size)
+        .select("key", "block_size")
+    )
+    return pairs, oversized
 
 
 def name_and_lsh_keys(

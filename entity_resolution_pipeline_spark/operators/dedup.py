@@ -149,9 +149,8 @@ def ngram_jaccard_pairs(
     # Fallback blocks share the min-df token of an unbounded boilerplate
     # cluster, so the neighbor-rank window would otherwise sort the whole
     # cluster in ONE task. Blocks above ``salt_block`` docs are pre-split
-    # by a deterministic doc_id salt (same policy as the ER blocking
-    # stage's mega-block cap): per-task sort work is O(block/n_sub log),
-    # cross-salt pairs are dropped — a bounded-recall trade: a mega-
+    # by a deterministic doc_id salt: per-task sort work is O(block/n_sub
+    # log), cross-salt pairs are dropped — a bounded-recall trade: a mega-
     # cluster resolves to n_sub survivors instead of one (each salt
     # subgroup still chain-connects internally and CC closes it), the
     # same policy the neighbor cap itself applies. The salt hashes

@@ -179,19 +179,15 @@ class ERPipeline:
             force,
         )
 
-        pair_handles: list = []
         keys_fp = self._table_fp(keys, ["url", "key"])
         # oversized blocks are a table of their own, so a resumed run (pairs
         # stage skipped) still reports them; metrics keeps only a bounded
         # sample — at 100 TB the full list can itself be large.
         pairs = self._run_stage(
             "pairs", keys_fp, -1,
-            lambda: B.candidate_pairs(keys, max_block_size=cfg.max_block_size,
-                                      cache_handles=pair_handles),
+            lambda: B.candidate_pairs(keys, max_block_size=cfg.max_block_size),
             force,
         )
-        for h in pair_handles:  # both outputs are materialized in catalog now
-            h.unpersist()
         n_oversized = self.catalog.num_rows("oversized_blocks")
         self.metrics["oversized_blocks_count"] = n_oversized
         self.metrics["oversized_blocks"] = [

@@ -103,8 +103,9 @@ def test_candidate_pairs_window_cap(spark):
 
 
 def test_window_cap_salts_mega_blocks(spark):
-    """A mega hot block (> 4x cap) is salted into sub-blocks: bounded pairs,
-    no pair crosses salts, per-node fanout still <= neighbor_cap."""
+    """A mega hot block (20x cap) keeps the exact neighbor cap over the
+    whole sorted block: each row pairs with its next neighbor_cap rows, so
+    pairs are bounded by B*K and per-node fanout by 2*K."""
     rows = [(f"u{i:03d}", "mega") for i in range(100)]
     keys = _keys_df(spark, rows)
     pairs, oversized = candidate_pairs(
@@ -112,6 +113,9 @@ def test_window_cap_salts_mega_blocks(spark):
     )
     got = [(r["url1"], r["url2"]) for r in pairs.collect()]
     assert oversized.collect()[0]["block_size"] == 100
+    assert set(got) == {
+        (f"u{i:03d}", f"u{j:03d}") for i in range(100) for j in range(i + 1, min(i + 3, 100))
+    }
     # bounded: at most B*K pairs, and each node pairs with <= 2*K others
     assert 0 < len(got) <= 100 * 2
     from collections import Counter
@@ -126,6 +130,25 @@ def test_window_cap_salts_mega_blocks(spark):
         keys, max_block_size=5, neighbor_cap=2
     )[0].collect()]
     assert sorted(got) == sorted(got2)
+
+
+def test_hot_block_duplicate_url_no_self_pair(spark):
+    """A url listed twice in a hot block (a page crawled twice) never pairs
+    with itself; its other neighbors are kept."""
+    rows = [("u1", "hot")] + [(f"u{i}", "hot") for i in range(1, 8)]
+    rows += [("a", "cold"), ("b", "cold")]
+    pairs, oversized = candidate_pairs(
+        _keys_df(spark, rows), max_block_size=4, neighbor_cap=2
+    )
+    got = {(r["url1"], r["url2"]) for r in pairs.collect()}
+    assert ("u1", "u1") not in got
+    # sorted block u1 u1 u2 .. u7, each row's next 2 rows
+    assert got == {
+        ("a", "b"), ("u1", "u2"), ("u1", "u3"), ("u2", "u3"), ("u2", "u4"),
+        ("u3", "u4"), ("u3", "u5"), ("u4", "u5"), ("u4", "u6"), ("u5", "u6"),
+        ("u5", "u7"), ("u6", "u7"),
+    }
+    assert [tuple(r) for r in oversized.collect()] == [("hot", 8)]
 
 
 def test_candidate_pairs_no_forced_broadcast(spark):
@@ -148,6 +171,29 @@ def test_candidate_pairs_no_forced_broadcast(spark):
         assert ("a", "b") in {(r["url1"], r["url2"]) for r in pairs.collect()}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_candidate_pairs_write_jobs(spark, tmp_warehouse):
+    """Writing the pairs stage's two tables from a stored keys table runs
+    at most five Spark jobs: the window's and the distinct's shuffle map
+    stages and the pairs write, the aggregate's shuffle map stage and the
+    oversized write."""
+    src = tmp_warehouse + "/keys"
+    all_blocking_keys(preprocess_records(web_pages_df(spark, 40))).write.parquet(src)
+    keys = spark.read.parquet(src)
+    sc = spark.sparkContext
+    group = "pairs-write"
+    sc.setJobGroup(group, "candidate_pairs + oversized_blocks write")
+    try:
+        pairs, oversized = candidate_pairs(keys, max_block_size=4)
+        pairs.write.parquet(tmp_warehouse + "/pairs")
+        oversized.write.parquet(tmp_warehouse + "/oversized")
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 1 <= len(jobs) <= 5, jobs
+    assert spark.read.parquet(tmp_warehouse + "/oversized").count() > 0
 
 
 def test_dedup_orientation(spark):

@@ -459,6 +459,52 @@ def test_oversized_blocks_logged(pipeline_run):
     assert "oversized_blocks" in result["metrics"]
 
 
+def test_oversized_blocks_table_meaning(spark, tmp_path_factory):
+    """With a small block cap, ``oversized_blocks`` lists exactly the keys
+    whose blocks exceed it, each with its row count in ``blocking_keys``,
+    and the metrics count equals the table's rows."""
+    cap = 4
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    pipe = ERPipeline(spark, str(tmp_path_factory.mktemp("erp_wh_hot")),
+                      ERConfig(max_block_size=cap))
+    result = pipe.run(wp, lp)
+    sizes = {r["key"]: r["count"] for r in
+             pipe.catalog.read("blocking_keys").groupBy("key").count().collect()}
+    over = {r["key"]: r["block_size"] for r in pipe.catalog.read("oversized_blocks").collect()}
+    assert over  # the cap is small enough that hot blocks exist
+    # every listed block is over the cap at its key's row count, and every
+    # key over the cap is listed
+    assert over == {k: n for k, n in sizes.items() if n > cap}
+    assert result["metrics"]["oversized_blocks_count"] == len(over)
+
+
+def test_candidate_pairs_match_sorted_window_reference(pipeline_run):
+    """On the pipeline's blocking keys, candidate pairs equal a pure-Python
+    sorted-neighbourhood reference: a block of at most the cap keeps all of
+    its pairs, a larger one each row's next neighbor_cap sorted rows."""
+    from collections import defaultdict
+
+    from entity_resolution_pipeline_spark.operators.blocking import candidate_pairs
+
+    pipe, *_ = pipeline_run
+    keys = pipe.catalog.read("blocking_keys")
+    blocks = defaultdict(list)
+    for r in keys.collect():
+        blocks[r["key"]].append(r["url"])
+    # at cap 8 with 3 neighbors, the fixture's 9-15 row blocks are capped
+    for cap, neighbor_cap in ((64, 20), (8, 3)):
+        want = set()
+        for urls in blocks.values():
+            urls.sort()
+            reach = len(urls) if len(urls) <= cap else neighbor_cap
+            for i, u in enumerate(urls):
+                want.update((u, v) for v in urls[i + 1:i + 1 + reach] if u < v)
+        pairs, _ = candidate_pairs(keys, max_block_size=cap, neighbor_cap=neighbor_cap)
+        got = {(r["url1"], r["url2"]) for r in pairs.collect()}
+        assert got == want, (cap, len(got), len(want))
+
+
 def test_csv_export(pipeline_run, tmp_path_factory):
     """S7: cluster CSV export (clustering.py:1102-1136 analogue)."""
     pipe, result, *_ = pipeline_run

@@ -48,7 +48,7 @@ def test_scalar_pipeline_whole_stage_codegen(spark):
 
 
 def test_blocking_selfjoin_uses_hashed_key(spark):
-    """The candidate-pair self-join must shuffle on xxhash64(key), not the
+    """Candidate-pair generation must shuffle on xxhash64(key), not the
     long key string (8-byte shuffle keys)."""
     from entity_resolution_pipeline_spark.operators.blocking import candidate_pairs
 
@@ -113,10 +113,11 @@ def test_fused_blocking_keys_single_python_stage(spark):
     assert n_python == 1, plan
 
 
-def test_candidate_pairs_reuses_sized_cache(spark):
-    """With caller-owned caching, the self-join sides and the hot branch
-    must read the SAME InMemoryRelation of size-annotated key rows — not
-    re-run the count window per consumer."""
+def test_candidate_pairs_one_window_no_join(spark):
+    """Candidate pairs are one window per block: no join, no cached
+    relation, exactly one Window, and its shuffle is on xxhash64(key)."""
+    import re
+
     from entity_resolution_pipeline_spark.operators.blocking import (
         candidate_pairs,
     )
@@ -125,19 +126,13 @@ def test_candidate_pairs_reuses_sized_cache(spark):
         [(f"u{i}", "k1") for i in range(5)] + [(f"u{i}", f"s{i}") for i in range(5)],
         "url string, key string",
     )
-    handles = []
-    pairs, oversized = candidate_pairs(keys, max_block_size=64,
-                                       cache_handles=handles)
+    pairs, _ = candidate_pairs(keys, max_block_size=64)
     plan = _plan(pairs, mode="simple")
-    assert "InMemoryTableScan" in plan, plan
-    # stateless default: once the caller releases its handles, a fresh
-    # call must NOT leave (or pick up) any cached relation — Spark's
-    # CacheManager would otherwise substitute a still-registered
-    # fragment into the logically-identical new plan
-    for h in handles:
-        h.unpersist()
-    pairs2, _ = candidate_pairs(keys, max_block_size=64)
-    assert "InMemoryTableScan" not in _plan(pairs2, mode="simple")
+    assert "Join" not in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    kh = re.search(r"Exchange hashpartitioning\((kh#\d+L)", plan)
+    assert kh and re.search(rf"xxhash64\(key#\d+, 42\) AS {kh.group(1)}\b", plan), plan
 
 
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path_factory):

@@ -5,13 +5,16 @@
               -> edges -> clusters -> evaluation
 
 Lifecycle mirrors the reference pipeline (/root/reference/src/pipeline.py:98-190):
-a linear list of named stages (``STAGE_TABLES``), each `read -> transform ->
-write its tables` in ``ERPipeline._run_stage`` and skipped on resume when all
-its tables are committed and the manifest holds an ok row for the same input
-fingerprint (the reference's src/pipeline.py:230-261). Every stage appends
-per-partition lineage + metrics rows (north_rule); the manifest and the
-row counts reported here come from parquet footers on the driver, so
-bookkeeping runs no Spark job.
+a graph of named stages (``STAGE_TABLES``), each `read -> transform -> write
+its tables` in ``ERPipeline._run_stage`` and skipped on resume when all its
+tables are committed and the manifest holds an ok row for the same input
+fingerprint (the reference's src/pipeline.py:230-261). Branches that do not
+depend on each other run side by side on one thread pool per run: dims and
+train beside blocking -> pairs, a cold input fingerprint beside the records
+write, a stage's tables beside each other, and the cluster count beside the
+evaluation. Every stage appends per-partition lineage + metrics rows
+(north_rule); the manifest and the row counts reported here come from
+parquet footers on the driver, so bookkeeping runs no Spark job.
 
 The classifier is trained driver-side on the labeled pairs (tiny — ~2k rows,
 M1/M2), stored as the one-row ``model`` table (so a resume does not refit)
@@ -22,10 +25,12 @@ from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 import numpy as np
 import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -69,6 +74,8 @@ MODEL_METRICS = ("train", "test", "feature_importance", "rfe_selected")  # store
 # (BENCH/BASELINE.md): 42-60 s -> 25.6 s at 5.8M pairs, while at 58k pairs
 # the shuffle costs more than the memo hits save (1.39 -> 1.62 s).
 SCORE_REPARTITION_MIN_PAIRS = 2_000_000
+# the Spark local property that names a thread's job group
+JOB_GROUP = "spark.jobGroup.id"
 
 
 @dataclass
@@ -117,30 +124,69 @@ class ERPipeline:
             self.manifest.stage_complete(stage, input_fp)
         )
 
-    def _run_stage(self, stage: str, input_fp: str, rows_in: int, build_df,
-                   force: bool = False) -> DataFrame:
+    def _submit(self, pool: ThreadPoolExecutor, fn, *args) -> Future:
+        """``fn(*args)`` on ``pool``, with this thread's Spark local
+        properties (job group, job description) carried into the worker."""
+        return pool.submit(inheritable_thread_target(self.spark)(fn), *args)
+
+    def _run_stage(self, pool: ThreadPoolExecutor, stage: str, input_fp, rows_in,
+                   build_df, force: bool = False) -> DataFrame:
         """Write ``stage``'s tables unless it is done; returns its first
         table. ``build_df()`` returns one DataFrame per table of
-        ``STAGE_TABLES[stage]``, as a tuple when there are several."""
+        ``STAGE_TABLES[stage]``, as a tuple when there are several; the
+        tables are written together, the first on this thread and the rest
+        on ``pool``, and an error is raised once every write has finished.
+
+        A computed stage appends a ``started`` row before it writes and its
+        ok rows once all its tables are committed, so a run killed in
+        between leaves no older ok row counting as this stage's output
+        (``Manifest.stage_complete``). Its Spark jobs, from ``build_df()``
+        and the writes, run in the job group ``er:<run_id>:<stage>``.
+        ``input_fp`` and ``rows_in`` may be zero-argument callables, read
+        only after the writes: the cold input fingerprint is computed beside
+        the records write. Such a stage is forced, as nothing can be probed
+        before it."""
         tables = STAGE_TABLES[stage]
         if not force and self._stage_done(stage, input_fp):
             self.manifest.record_skipped(stage, input_fp)
-        else:
+            return self.catalog.read(tables[0])
+        self.manifest.record_started(stage)
+        sc = self.spark.sparkContext
+        outer_group = sc.getLocalProperty(JOB_GROUP)
+        sc.setLocalProperty(JOB_GROUP, f"er:{self.manifest.run_id}:{stage}")
+        try:
             t0 = time.time()
             out = build_df()
-            for df, name in zip(out if isinstance(out, tuple) else (out,), tables, strict=True):
-                self.catalog.write(df, name)
+            dfs = out if isinstance(out, tuple) else (out,)
+            rest = [self._submit(pool, self.catalog.write, df, name)
+                    for df, name in zip(dfs[1:], tables[1:], strict=True)]
+            try:
+                self.catalog.write(dfs[0], tables[0])
+            finally:
+                wait(rest)
+            for f in rest:
+                f.result()
             wall_ms = int((time.time() - t0) * 1000)
-            self.manifest.record_stage(stage, tables[0], rows_in, wall_ms, input_fp)
+        finally:
+            sc.setLocalProperty(JOB_GROUP, outer_group)
+        self.manifest.record_stage(stage, tables[0], _resolved(rows_in), wall_ms,
+                                   _resolved(input_fp))
         return self.catalog.read(tables[0])
 
     # ---------- full run ----------
 
     def run(self, web_pages: DataFrame, labeled_pairs: DataFrame | None = None,
             force: bool = False) -> dict:
-        cfg = self.config
         if labeled_pairs is None and not self.catalog.exists("model"):
             raise ValueError("no labeled pairs given and no saved model found")
+        # leaving the block waits for every branch still running, so an
+        # error from one branch propagates only after all writes finished
+        with ThreadPoolExecutor() as pool:
+            return self._run(pool, web_pages, labeled_pairs, force)
+
+    def _run(self, pool: ThreadPoolExecutor, web_pages: DataFrame,
+             labeled_pairs: DataFrame | None, force: bool) -> dict:
+        cfg = self.config
         # two-level resume fingerprinting for the (100 TB) input:
         # 1. metadata level — md5 of the source file manifest (path, size,
         #    mtime_ns): a stat-only probe, so deciding to SKIP the input
@@ -156,13 +202,20 @@ class ERPipeline:
             n_pages = self.catalog.num_rows("records")
         else:
             # content-sensitive fingerprint: url alone would silently reuse
-            # stale records when the same urls arrive with changed text
-            input_fp = fingerprint_df(web_pages, ["url", "text"])
-            n_pages = int(input_fp.split(":")[0])
+            # stale records when the same urls arrive with changed text.
+            # With no committed records (or force) no stored row can match
+            # it, so it only labels the manifest row and runs beside the
+            # records write; otherwise it decides the skip, so it runs first.
+            cold = force or not self.catalog.exists("records")
+            if cold:
+                input_fp = self._submit(pool, fingerprint_df, web_pages, ["url", "text"]).result
+            else:
+                input_fp = fingerprint_df(web_pages, ["url", "text"])
             records = self._run_stage(
-                "preprocess", input_fp, n_pages,
-                lambda: preprocess_records(web_pages), force,
+                pool, "preprocess", input_fp, lambda: _page_count(_resolved(input_fp)),
+                lambda: preprocess_records(web_pages), cold,
             )
+            n_pages = _page_count(_resolved(input_fp))
             if meta_fp is not None:
                 # register the manifest fingerprint too, so the NEXT run can
                 # skip on metadata alone
@@ -170,11 +223,34 @@ class ERPipeline:
 
         rec_fp = self._table_fp(records, ["url", "person_h"])
 
+        # dims and train read only the records and the labels, so they run
+        # beside blocking -> pairs; train is joined before score, dims
+        # before the run returns.
         # dedup dimensions: one (hash, field) table; A1, A2 and A4 reduce it
-        self._run_stage("dims", rec_fp + "|dims", n_pages,
-                        lambda: field_hash_mapping(strings_long(records)), force)
+        dims = self._submit(pool, self._run_stage, pool, "dims", rec_fp + "|dims", n_pages,
+                            lambda: field_hash_mapping(strings_long(records)), force)
+        trained = None
+        if labeled_pairs is not None:
+            def train_stage():
+                lp_fp = self._table_fp(labeled_pairs, ["left", "right", "match"])
+                train_fp = (f"{rec_fp}|train|{lp_fp}|{cfg.train_frac}|{cfg.seed}"
+                            f"|{cfg.rfe_min_features}|{cfg.decision_threshold}")
+
+                def build_model():
+                    model = self.train(records, labeled_pairs)
+                    metrics = {k: self.metrics[k] for k in MODEL_METRICS if k in self.metrics}
+                    # a JVM-side row: a Python-side DataFrame would start Python workers
+                    return self.spark.range(1, numPartitions=1).select(
+                        F.lit(json.dumps(model.to_dict())).alias("model"),
+                        F.lit(json.dumps(metrics)).alias("metrics"),
+                    )
+
+                self._run_stage(pool, "train", train_fp, -1, build_model, force)
+
+            trained = self._submit(pool, train_stage)
+
         keys = self._run_stage(
-            "blocking", rec_fp, n_pages,
+            pool, "blocking", rec_fp, n_pages,
             lambda: B.all_blocking_keys(records, num_perm=cfg.lsh_num_perm, bands=cfg.lsh_bands),
             force,
         )
@@ -184,7 +260,7 @@ class ERPipeline:
         # stage skipped) still reports them; metrics keeps only a bounded
         # sample — at 100 TB the full list can itself be large.
         pairs = self._run_stage(
-            "pairs", keys_fp, -1,
+            pool, "pairs", keys_fp, -1,
             lambda: B.candidate_pairs(keys, max_block_size=cfg.max_block_size),
             force,
         )
@@ -198,22 +274,8 @@ class ERPipeline:
         n_pairs = self.catalog.num_rows("candidate_pairs")
         self.metrics["candidate_pairs"] = n_pairs
 
-        # ---- train classifier on labeled pairs (driver-side, tiny) ----
-        if labeled_pairs is not None:
-            lp_fp = self._table_fp(labeled_pairs, ["left", "right", "match"])
-            train_fp = (f"{rec_fp}|train|{lp_fp}|{cfg.train_frac}|{cfg.seed}"
-                        f"|{cfg.rfe_min_features}|{cfg.decision_threshold}")
-
-            def build_model():
-                model = self.train(records, labeled_pairs)
-                metrics = {k: self.metrics[k] for k in MODEL_METRICS if k in self.metrics}
-                # a JVM-side row: a Python-side DataFrame would start Python workers
-                return self.spark.range(1, numPartitions=1).select(
-                    F.lit(json.dumps(model.to_dict())).alias("model"),
-                    F.lit(json.dumps(metrics)).alias("metrics"),
-                )
-
-            self._run_stage("train", train_fp, -1, build_model, force)
+        if trained is not None:
+            trained.result()
         stored = pq.read_table(self.catalog.data_files("model")).to_pylist()[0]
         model = LRModel.from_dict(json.loads(stored["model"]))
         self.metrics.update(json.loads(stored["metrics"]))
@@ -243,7 +305,7 @@ class ERPipeline:
             )
 
         t_score0 = time.time()
-        scored = self._run_stage("score", score_fp, int(n_pairs), build_scores, force)
+        scored = self._run_stage(pool, "score", score_fp, int(n_pairs), build_scores, force)
         self.metrics["score_wall_s"] = time.time() - t_score0
         if dup_obs:  # get() raises on an Observation whose stage was skipped
             d = dup_obs[0].get["d"]
@@ -253,7 +315,7 @@ class ERPipeline:
         )
 
         edges = self._run_stage(
-            "edges", score_fp + "|edges", int(n_pairs),
+            pool, "edges", score_fp + "|edges", int(n_pairs),
             lambda: C.build_edges(scored, cfg.min_edge_weight, cfg.decision_threshold), force,
         )
 
@@ -261,20 +323,26 @@ class ERPipeline:
             nodes = records.select(F.col("url").alias("node"))
             return C.assign_clusters(edges, nodes)
 
-        clusters = self._run_stage("cluster", score_fp + "|cluster", int(n_pairs), build_clusters, force)
+        clusters = self._run_stage(
+            pool, "cluster", score_fp + "|cluster", int(n_pairs), build_clusters, force)
 
         # a cluster id is the min url of its component and every edge
         # endpoint is a record url, so each cluster has exactly one member
-        # whose entity_id is its cluster_id
-        n_clusters = clusters.where(F.col("entity_id") == F.col("cluster_id")).count()
+        # whose entity_id is its cluster_id; counted beside the evaluation
+        n_clusters = self._submit(
+            pool, clusters.where(F.col("entity_id") == F.col("cluster_id")).count
+        )
+        evaluation = (self.evaluate(clusters, labeled_pairs, pairs)
+                      if labeled_pairs is not None else None)
+        dims.result()
         result = {
             "n_pages": n_pages,
             "candidate_pairs": int(n_pairs),
-            "n_clusters": int(n_clusters),
+            "n_clusters": int(n_clusters.result()),
             "metrics": self.metrics,
         }
-        if labeled_pairs is not None:
-            result["evaluation"] = self.evaluate(clusters, labeled_pairs, pairs)
+        if evaluation is not None:
+            result["evaluation"] = evaluation
         return result
 
     # ---------- training ----------
@@ -432,6 +500,16 @@ class ERPipeline:
         self.catalog.read("clusters").select("cluster_id", "entity_id").write.mode(
             "overwrite"
         ).option("header", True).csv(path)
+
+
+def _resolved(value):
+    """``value``, or its result when it is a deferred (zero-argument) one."""
+    return value() if callable(value) else value
+
+
+def _page_count(content_fp: str) -> int:
+    """The row count a ``fingerprint_df`` fingerprint starts with."""
+    return int(content_fp.split(":")[0])
 
 
 def normalize_match(col):

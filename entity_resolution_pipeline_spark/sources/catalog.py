@@ -495,6 +495,11 @@ class Manifest:
     def record_skipped(self, stage: str, input_fingerprint: str) -> None:
         self._append([(self.run_id, stage, -1, "skipped", 0, 0, 0, input_fingerprint)])
 
+    def record_started(self, stage: str) -> None:
+        """Mark the start of a write of the stage's tables: until an ok row
+        follows it, no earlier ok row counts (``stage_complete``)."""
+        self._append([(self.run_id, stage, -1, "started", 0, 0, 0, None)])
+
     def read(self) -> DataFrame | None:
         if not self.catalog.data_files(self.TABLE):
             return None
@@ -505,22 +510,30 @@ class Manifest:
     def stage_complete(self, stage: str, input_fingerprint: str) -> bool:
         """True when the stage's tables hold its output for this input: an
         ok row with the fingerprint was recorded at or after the stage's
-        latest write (its latest ok row that is not an alias). An older ok
-        row does not count — a run on other input rewrote the tables since.
-        Alias rows recorded after that write count: a run records one only
-        once the tables match its input."""
+        latest write — its latest ``started`` row, or its latest ok row
+        that is not an alias (logs written before ``started`` rows existed
+        have only those). An older ok row does not count: a run on other
+        input began rewriting the tables since, even if it was killed
+        before it recorded its own ok row. Alias rows recorded after that
+        write count: a run records one only once the tables match its
+        input."""
         files = self.catalog.data_files(self.TABLE)
         if not files:
             return False
         m = pq.read_table(
             files, columns=["stage", "partition_id", "status", "input_fingerprint", "committed_at"]
         )
-        m = m.filter(pc.and_(pc.equal(m["stage"], stage), pc.equal(m["status"], "ok")))
-        last_write = pc.max(m.filter(pc.not_equal(m["partition_id"], -2))["committed_at"])
+        m = m.filter(pc.equal(m["stage"], stage))
+        ok = pc.equal(m["status"], "ok")
+        writes = pc.or_(
+            pc.equal(m["status"], "started"),
+            pc.and_(ok, pc.not_equal(m["partition_id"], -2)),
+        )
+        last_write = pc.max(m.filter(writes)["committed_at"])
         if not last_write.is_valid:
             return False
         hit = pc.and_(
-            pc.greater_equal(m["committed_at"], last_write),
+            pc.and_(ok, pc.greater_equal(m["committed_at"], last_write)),
             pc.equal(m["input_fingerprint"], input_fingerprint),
         )
         return m.filter(hit).num_rows > 0

@@ -160,6 +160,49 @@ def test_manifest_reads_spark_written_rows(spark, tmp_path):
     assert got == {"old": ("ok", True), "new": ("skipped", True)}
 
 
+def test_manifest_concurrent_records(spark, tmp_path):
+    """Stages recorded from several threads at once (more threads than
+    cores, with a short switch interval) lose no manifest row, and each
+    stage reads complete for its own fingerprint only."""
+    import sys
+    import threading
+
+    cat = Catalog(spark, str(tmp_path))
+    man = Manifest(cat, run_id="threads")
+    cat.write(spark.range(3).repartition(1), "t")
+    n_threads, n_rounds = 8, 5
+    errors: list = []
+
+    def record(i):
+        try:
+            for r in range(n_rounds):
+                man.record_started(f"s{i}")
+                man.record_stage(f"s{i}", "t", 3, 1, f"fp{i}-{r}")
+                assert man.stage_complete(f"s{i}", f"fp{i}-{r}")
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=record, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    got = {(r["stage"], r["status"]): r["n"] for r in
+           man.read().groupBy("stage", "status").agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert got == {(f"s{i}", st): n_rounds for i in range(n_threads) for st in ("started", "ok")}
+    for i in range(n_threads):
+        assert man.stage_complete(f"s{i}", f"fp{i}-{n_rounds - 1}")
+        assert not man.stage_complete(f"s{i}", f"fp{i}-0")
+        assert not man.stage_complete(f"s{i}", f"fp{(i + 1) % n_threads}-{n_rounds - 1}")
+
+
 def _record_writes_and_training(monkeypatch) -> list:
     """Log every ``Catalog.write`` table name and ``ERPipeline.train`` call."""
     calls: list = []
@@ -393,7 +436,7 @@ def test_resume_recomputes_uncommitted_table(spark, tmp_path_factory):
     m2 = pipe2.manifest.read().where(
         (F.col("run_id") == pipe2.manifest.run_id) & (F.col("stage") == "score")
     )
-    assert {r["status"] for r in m2.collect()} == {"ok"}
+    assert {r["status"] for r in m2.collect()} == {"started", "ok"}
     assert os.path.isfile(os.path.join(wh, "scored_pairs", "_SUCCESS"))
 
 
@@ -440,7 +483,7 @@ def test_resume_reruns_stage_killed_before_its_record(stage, spark, tmp_path_fac
     status = {}
     for r in m2.collect():
         status.setdefault(r["stage"], set()).add(r["status"])
-    assert status[stage] == {"ok"}
+    assert status[stage] == {"started", "ok"}
     assert all(status[s] == {"skipped"} for s in STAGES[:STAGES.index(stage)])
 
     for key in ("n_pages", "candidate_pairs", "n_clusters", "evaluation"):
@@ -449,6 +492,169 @@ def test_resume_reruns_stage_killed_before_its_record(stage, spark, tmp_path_fac
         got = pipe2.catalog.read(table)
         want = clean.catalog.read(table)
         assert sorted(got.collect()) == sorted(want.select(*got.columns).collect()), table
+
+
+def test_resume_after_killed_input_switch(spark, tmp_path_factory, monkeypatch):
+    """Input A, then input B killed after its records committed but before
+    its preprocess record, then A again on one warehouse. B's started row
+    postdates A's ok rows, so the third run recomputes preprocess instead
+    of serving B's records, and ends equal to the first run."""
+    wh = str(tmp_path_factory.mktemp("erp_wh_killed_switch"))
+    inputs = {}
+    for name, n_ent in (("a", 40), ("b", 60)):
+        src = str(tmp_path_factory.mktemp(f"wp_{name}"))
+        web_pages_df(spark, n_ent).write.mode("overwrite").parquet(src)
+        inputs[name] = (src, spark.createDataFrame(labeled_pairs_pdf(n_ent, 200)))
+
+    def run(name):
+        src, lp = inputs[name]
+        pipe = ERPipeline(spark, wh, ERConfig())
+        return pipe, pipe.run(spark.read.parquet(src), lp)
+
+    pipe_a, res_a = run("a")
+    clusters_a = sorted(pipe_a.catalog.read("clusters").collect())
+    record_stage = Manifest.record_stage
+
+    def killed_record(self, name, *args, **kwargs):
+        if name == "preprocess":
+            raise RuntimeError("killed before the preprocess record")
+        return record_stage(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(Manifest, "record_stage", killed_record)
+    with pytest.raises(RuntimeError, match="killed"):
+        run("b")
+    monkeypatch.undo()
+    assert pipe_a.catalog.num_rows("records") > res_a["n_pages"]  # B's records committed
+
+    pipe_a2, res_a2 = run("a")
+    assert "preprocess" not in _skipped_stages(pipe_a2)
+    assert res_a2["n_pages"] == res_a["n_pages"]
+    assert res_a2["n_clusters"] == res_a["n_clusters"]
+    assert sorted(pipe_a2.catalog.read("clusters").collect()) == clusters_a
+    assert res_a2["evaluation"] == res_a["evaluation"]
+
+
+def test_stage_job_groups(spark, tmp_path):
+    """A computed stage's Spark jobs run in the job group
+    ``er:<run_id>:<stage>``; a resumed run, which skips every stage, runs
+    none there. The caller's job description and group are left as they
+    were."""
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        ERPipeline(spark, str(tmp_path), ERConfig(), run_id="groups-cold").run(wp, lp)
+        resumed = ERPipeline(spark, str(tmp_path), ERConfig(), run_id="groups-warm")
+        resumed.run(wp, lp)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert sc.getLocalProperty("spark.jobGroup.id") is None
+    finally:
+        sc.setJobDescription(None)
+    assert _skipped_stages(resumed) == set(STAGES)
+
+    def jobs(run_id, stage):
+        return list(sc.statusTracker().getJobIdsForGroup(f"er:{run_id}:{stage}"))
+
+    for stage in STAGES:
+        assert jobs("groups-cold", stage), stage
+        assert jobs("groups-warm", stage) == [], stage
+
+
+def test_train_runs_beside_blocking(spark, tmp_path, monkeypatch):
+    """Training does not wait for blocking -> pairs: the blocking_keys write
+    is held until training has started, and the run still completes."""
+    import threading
+
+    train_started = threading.Event()
+    write, train = Catalog.write, ERPipeline.train
+
+    def gated_write(self, df, name, *args, **kwargs):
+        if name == "blocking_keys":
+            assert train_started.wait(60), "blocking_keys waited 60 s for training to start"
+        return write(self, df, name, *args, **kwargs)
+
+    def flagged_train(self, *args, **kwargs):
+        train_started.set()
+        return train(self, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "write", gated_write)
+    monkeypatch.setattr(ERPipeline, "train", flagged_train)
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    pipe = ERPipeline(spark, str(tmp_path), ERConfig())
+    res = pipe.run(wp, lp)
+    assert res["candidate_pairs"] > 0
+    assert all(pipe.catalog.exists(t) for tables in STAGE_TABLES.values() for t in tables)
+
+
+def test_failed_branch_waits_for_writes_and_resumes(spark, tmp_path_factory, monkeypatch):
+    """A branch that fails (training) makes ``run`` raise its error, but only
+    once no Spark job is still running; every stage is then either
+    committed with an ok row or not recorded as done, and the rerun skips
+    the completed stages and ends equal to a clean run."""
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    clean = ERPipeline(spark, str(tmp_path_factory.mktemp("erp_wh_branch_clean")), ERConfig())
+    clean_res = clean.run(wp, lp)
+
+    def failing_train(self, *args, **kwargs):
+        raise RuntimeError("training failed")
+
+    monkeypatch.setattr(ERPipeline, "train", failing_train)
+    wh = str(tmp_path_factory.mktemp("erp_wh_branch_failed"))
+    pipe = ERPipeline(spark, wh, ERConfig())
+    sc = spark.sparkContext
+    with pytest.raises(RuntimeError, match="training failed"):
+        pipe.run(wp, lp)
+    # drain the listener bus, so a finished job is not still listed as active
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    monkeypatch.undo()
+
+    m = pipe.manifest.read().where(
+        (F.col("run_id") == pipe.manifest.run_id) & (F.col("status") == "ok")
+    )
+    ok = {r["stage"] for r in m.select("stage").distinct().collect()}
+    assert ok == {"preprocess", "dims", "blocking", "pairs"}
+    for stage, tables in STAGE_TABLES.items():
+        assert (stage in ok) == all(pipe.catalog.exists(t) for t in tables), stage
+
+    pipe2 = ERPipeline(spark, wh, ERConfig())
+    res2 = pipe2.run(wp, lp)
+    assert _skipped_stages(pipe2) == ok
+    for key in ("n_pages", "candidate_pairs", "n_clusters", "evaluation"):
+        assert res2[key] == clean_res[key], key
+    for key in ("train", "test"):
+        assert res2["metrics"][key] == clean_res["metrics"][key], key
+    for table in ("candidate_pairs", "scored_pairs", "edges", "clusters"):
+        got, want = pipe2.catalog.read(table), clean.catalog.read(table)
+        assert got.exceptAll(want).count() == 0, table
+        assert want.exceptAll(got).count() == 0, table
+
+
+@pytest.mark.parametrize("force", [False, True])
+def test_cold_fingerprint_labels_preprocess_row(force, spark, tmp_path):
+    """When no stored row can match (an empty warehouse, or ``force``), the
+    content fingerprint runs beside the records write; the preprocess ok
+    rows still carry exactly ``fingerprint_df``'s string, and ``n_pages``
+    is the row count it starts with."""
+    from entity_resolution_pipeline_spark.sources.catalog import fingerprint_df
+
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    want = fingerprint_df(wp, ["url", "text"])
+    if force:
+        ERPipeline(spark, str(tmp_path), ERConfig()).run(wp, lp)
+    pipe = ERPipeline(spark, str(tmp_path), ERConfig())
+    res = pipe.run(wp, lp, force=force)
+    pre = pipe.manifest.read().where(
+        (F.col("run_id") == pipe.manifest.run_id) & (F.col("stage") == "preprocess")
+        & (F.col("status") == "ok")
+    )
+    got = {(r["input_fingerprint"], r["rows_in"]) for r in pre.collect()}
+    assert got == {(want, res["n_pages"])}
+    assert res["n_pages"] == int(want.split(":")[0]) == pipe.catalog.num_rows("records")
 
 
 def test_oversized_blocks_logged(pipeline_run):
@@ -827,7 +1033,7 @@ def test_resume_recomputes_old_layout_dims(spark, tmp_path_factory):
     m2 = pipe2.manifest.read().where(
         (F.col("run_id") == pipe2.manifest.run_id) & (F.col("stage") == "dims")
     )
-    assert {r["status"] for r in m2.collect()} == {"ok"}
+    assert {r["status"] for r in m2.collect()} == {"started", "ok"}
     assert pipe2.catalog.read("field_hash_mapping").columns == ["hash", "field", "cnt", "value"]
     assert pipe2.impute(fields=("provision",), sim_threshold=0.2)["provision"] >= 0
 

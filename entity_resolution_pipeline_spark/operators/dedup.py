@@ -28,13 +28,17 @@ round-1 `persist()` leaks are gone by construction).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from ..functions.text import normalize_col
 from .util import ensure_parallelism
+
+# Hot-bucket cap of the per-bucket verify kernels (minhash_lsh_pairs,
+# _block_gram_pairs): a bucket gathers into one Arrow value, and 128k rows
+# is ~32 MB of signatures at num_perm=32, far under Arrow's ~2 GB value
+# limit. Buckets past it are excluded from verification.
+MAX_BUCKET_ROWS = 128 * 1024
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -442,14 +446,11 @@ def minhash_lsh_pairs(
     # past the cap are EXCLUDED from verification here (their pairs are
     # sacrificed — at such sizes the bucket is boilerplate-degenerate and
     # needs narrower bands upstream); the filter is a visible plan predicate
-    # and costs nothing: size() rides the same aggregate. Cap is env-tunable
-    # (SPARK_GRAFT_MAX_BUCKET, default 128k rows ~ 32 MB of signatures per
-    # bucket at num_perm=32 — far under the Arrow value limit).
-    max_bucket = int(os.environ.get("SPARK_GRAFT_MAX_BUCKET", str(128 * 1024)))
+    # and costs nothing: size() rides the same aggregate (MAX_BUCKET_ROWS).
     buckets = (
         banded.groupBy("band")
         .agg(F.collect_list(F.struct("doc_id", "sig")).alias("ms"))
-        .where((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
+        .where((F.size("ms") >= 2) & (F.size("ms") <= MAX_BUCKET_ROWS))
     )
     thr = float(threshold)
     npm = num_perm
@@ -776,15 +777,14 @@ def _block_gram_pairs(
     row_ch, col_ch = 512, 4096
 
     # hot-block guard: same degrade-loudly cap as minhash_lsh_pairs — a
-    # block past SPARK_GRAFT_MAX_BUCKET rows would gather vectors into one
-    # Arrow value (dim floats each: the OOM cliff is lower than for
-    # signatures); such blocks are excluded by a visible plan predicate and
-    # need upstream splitting, as the docstring states.
-    max_bucket = int(os.environ.get("SPARK_GRAFT_MAX_BUCKET", str(128 * 1024)))
+    # block past MAX_BUCKET_ROWS rows would gather vectors into one Arrow
+    # value (dim floats each: the OOM cliff is lower than for signatures);
+    # such blocks are excluded by a visible plan predicate and need
+    # upstream splitting, as the docstring states.
     buckets = (
         rows.groupBy(block_col)
         .agg(F.collect_list(F.struct(id_col, vec_col)).alias("ms"))
-        .where((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
+        .where((F.size("ms") >= 2) & (F.size("ms") <= MAX_BUCKET_ROWS))
     )
 
     def run(batches):

@@ -43,6 +43,8 @@ from ..functions.hashing import hash_string
 from ..functions.text import normalize_text
 
 FIELDS = ["composite", "person", "title", "provision", "subjects"]
+# the web_pages columns a record is derived from
+PAGE_COLUMNS = ("url", "warc_ts", "lang", "text")
 
 _SEG_RES = {
     "person": re.compile(r"Name:\s*([^;]*);"),
@@ -102,13 +104,21 @@ def _derive_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def preprocess_records(web_pages: DataFrame) -> DataFrame:
     """web_pages -> records (one Arrow pass; html column pruned away)."""
-    src = ensure_parallelism(web_pages.select("url", "warc_ts", "lang", "text"))
+    return derive_records(ensure_parallelism(web_pages.select(*PAGE_COLUMNS)))
+
+
+def derive_records(pages: DataFrame) -> DataFrame:
+    """The Arrow pass of ``preprocess_records`` over ``PAGE_COLUMNS`` rows,
+    partitioned as given. A caller that adds to the plan after
+    ``ensure_parallelism`` calls this: a second ``ensure_parallelism``
+    would ask a repartitioned plan for its partition count, which AQE
+    answers by running the shuffle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _derive_batch(pdf)
 
-    return src.mapInPandas(run, schema=RECORD_SCHEMA)
+    return pages.mapInPandas(run, schema=RECORD_SCHEMA)
 
 
 def strings_long(records: DataFrame) -> DataFrame:

@@ -10,11 +10,15 @@ its tables` in ``ERPipeline._run_stage`` and skipped on resume when all its
 tables are committed and the manifest holds an ok row for the same input
 fingerprint (the reference's src/pipeline.py:230-261). Branches that do not
 depend on each other run side by side on one thread pool per run: dims and
-train beside blocking -> pairs, a cold input fingerprint beside the records
-write, a stage's tables beside each other, and the cluster count beside the
-evaluation. Every stage appends per-partition lineage + metrics rows
-(north_rule); the manifest and the row counts reported here come from
-parquet footers on the driver, so bookkeeping runs no Spark job.
+train beside blocking -> pairs, and a stage's tables beside each other.
+Every stage appends per-partition lineage + metrics rows (north_rule); the
+manifest and the row counts reported here come from parquet footers on the
+driver, so bookkeeping runs no Spark job. The other values a run reports
+about a stage are observed by the stage's own write (``DataFrame.observe``)
+and kept on its manifest row, so a resumed run reads them with no job:
+the input's content fingerprint, the score dup ratio and ``n_clusters``.
+Every Spark job of a run is in a job group ``er:<run_id>:run``, or
+``er:<run_id>:<stage>`` inside a stage.
 
 The classifier is trained driver-side on the labeled pairs (tiny — ~2k rows,
 M1/M2), stored as the one-row ``model`` table (so a resume does not refit)
@@ -26,7 +30,9 @@ from __future__ import annotations
 import json
 import time
 from concurrent.futures import Future, ThreadPoolExecutor, wait
+from contextlib import contextmanager
 from dataclasses import dataclass
+from decimal import Decimal
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -48,12 +54,21 @@ from ..operators.classify import (
     stratified_split,
 )
 from ..operators.preprocess import (
+    PAGE_COLUMNS,
+    derive_records,
     field_hash_mapping,
-    preprocess_records,
     strings_long,
     unique_strings,
 )
-from ..sources.catalog import Catalog, Manifest, fingerprint_df, fingerprint_files
+from ..operators.util import ensure_parallelism
+from ..sources.catalog import (
+    Catalog,
+    Manifest,
+    content_aggs,
+    content_fingerprint,
+    fingerprint_df,
+    fingerprint_files,
+)
 
 # The tables each stage writes, in run order; the first carries the
 # stage's manifest lineage.
@@ -105,6 +120,7 @@ class ERPipeline:
         self.manifest = Manifest(self.catalog, run_id=run_id)
         self.config = config or ERConfig()
         self.metrics: dict = {}
+        self.observed: dict[str, dict] = {}  # stage -> values (see _run_stage)
 
     # ---------- stage runner ----------
 
@@ -119,18 +135,36 @@ class ERPipeline:
         downstream (the input itself changed in that case anyway)."""
         return fingerprint_files(df) or fingerprint_df(df, key_cols)
 
-    def _stage_done(self, stage: str, input_fp: str) -> bool:
-        return all(self.catalog.exists(t) for t in STAGE_TABLES[stage]) and (
-            self.manifest.stage_complete(stage, input_fp)
-        )
+    def _stored(self, stage: str, input_fp: str, observes: bool = False) -> dict | None:
+        """The values a completed stage recorded (``{}`` if it observes
+        none), or None when it has to run: a table is not committed, no ok
+        row counts for this input, or an observing stage's row has none."""
+        if not (all(self.catalog.exists(t) for t in STAGE_TABLES[stage])
+                and self.manifest.stage_complete(stage, input_fp)):
+            return None
+        return self.manifest.observed(stage, input_fp) if observes else {}
 
     def _submit(self, pool: ThreadPoolExecutor, fn, *args) -> Future:
         """``fn(*args)`` on ``pool``, with this thread's Spark local
         properties (job group, job description) carried into the worker."""
         return pool.submit(inheritable_thread_target(self.spark)(fn), *args)
 
-    def _run_stage(self, pool: ThreadPoolExecutor, stage: str, input_fp, rows_in,
-                   build_df, force: bool = False) -> DataFrame:
+    @contextmanager
+    def _job_group(self, name: str):
+        """Run the Spark jobs started on this thread (and on pool tasks
+        submitted from it) in the job group ``er:<run_id>:<name>``; the
+        caller's group is restored after."""
+        sc = self.spark.sparkContext
+        outer_group = sc.getLocalProperty(JOB_GROUP)
+        sc.setLocalProperty(JOB_GROUP, f"er:{self.manifest.run_id}:{name}")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty(JOB_GROUP, outer_group)
+
+    def _run_stage(self, pool: ThreadPoolExecutor, stage: str, input_fp: str | None,
+                   rows_in: int | None, build_df, force: bool = False,
+                   obs: Observation | None = None) -> DataFrame:
         """Write ``stage``'s tables unless it is done; returns its first
         table. ``build_df()`` returns one DataFrame per table of
         ``STAGE_TABLES[stage]``, as a tuple when there are several; the
@@ -142,19 +176,24 @@ class ERPipeline:
         between leaves no older ok row counting as this stage's output
         (``Manifest.stage_complete``). Its Spark jobs, from ``build_df()``
         and the writes, run in the job group ``er:<run_id>:<stage>``.
-        ``input_fp`` and ``rows_in`` may be zero-argument callables, read
-        only after the writes: the cold input fingerprint is computed beside
-        the records write. Such a stage is forced, as nothing can be probed
-        before it."""
+
+        ``obs``, an Observation ``build_df()`` attached to its plan, is
+        computed by the writes; its values (Decimals as strings) go on the
+        ok rows and into ``self.observed[stage]``. A skipped stage takes
+        them from its ok row; one whose row carries none runs again. With
+        ``input_fp`` None the stage fingerprints its own input: it runs, and
+        its ok rows carry the ``n`` and ``content_fingerprint`` of the
+        ``content_aggs`` it observed, so no separate scan labels them."""
         tables = STAGE_TABLES[stage]
-        if not force and self._stage_done(stage, input_fp):
+        stored = None
+        if not force and input_fp is not None:
+            stored = self._stored(stage, input_fp, observes=obs is not None)
+        if stored is not None:
+            self.observed[stage] = stored
             self.manifest.record_skipped(stage, input_fp)
             return self.catalog.read(tables[0])
         self.manifest.record_started(stage)
-        sc = self.spark.sparkContext
-        outer_group = sc.getLocalProperty(JOB_GROUP)
-        sc.setLocalProperty(JOB_GROUP, f"er:{self.manifest.run_id}:{stage}")
-        try:
+        with self._job_group(stage):
             t0 = time.time()
             out = build_df()
             dfs = out if isinstance(out, tuple) else (out,)
@@ -167,10 +206,14 @@ class ERPipeline:
             for f in rest:
                 f.result()
             wall_ms = int((time.time() - t0) * 1000)
-        finally:
-            sc.setLocalProperty(JOB_GROUP, outer_group)
-        self.manifest.record_stage(stage, tables[0], _resolved(rows_in), wall_ms,
-                                   _resolved(input_fp))
+        observed = None
+        if obs is not None:
+            observed = {k: str(v) if isinstance(v, Decimal) else v for k, v in obs.get.items()}
+            self.observed[stage] = observed
+        if input_fp is None:
+            rows_in, input_fp = observed["n"], content_fingerprint(observed)
+        self.manifest.record_stage(stage, tables[0], rows_in, wall_ms, input_fp,
+                                   observed=observed)
         return self.catalog.read(tables[0])
 
     # ---------- full run ----------
@@ -179,9 +222,10 @@ class ERPipeline:
             force: bool = False) -> dict:
         if labeled_pairs is None and not self.catalog.exists("model"):
             raise ValueError("no labeled pairs given and no saved model found")
-        # leaving the block waits for every branch still running, so an
-        # error from one branch propagates only after all writes finished
-        with ThreadPoolExecutor() as pool:
+        # leaving the pool's block waits for every branch still running, so
+        # an error from one branch propagates only after all writes
+        # finished; pool tasks inherit the run's job group
+        with self._job_group("run"), ThreadPoolExecutor() as pool:
             return self._run(pool, web_pages, labeled_pairs, force)
 
     def _run(self, pool: ThreadPoolExecutor, web_pages: DataFrame,
@@ -194,32 +238,39 @@ class ERPipeline:
         #    snapshot ids.
         # 2. content level — only when the manifest changed (or the input is
         #    not file-backed): xxhash64(url,text) aggregate. Content-
-        #    sensitive, catches rewritten-but-identical files, costs a scan.
+        #    sensitive, catches rewritten-but-identical files, costs a scan
+        #    when records are committed (else the records write observes it).
         meta_fp = fingerprint_files(web_pages)
-        if not force and meta_fp is not None and self._stage_done("preprocess", meta_fp):
-            self.manifest.record_skipped("preprocess", meta_fp)
-            records = self.catalog.read("records")
-            n_pages = self.catalog.num_rows("records")
-        else:
+        done_fp = None  # the fingerprint the committed records match, if any
+        if not force and meta_fp is not None and self._stored("preprocess", meta_fp) is not None:
+            done_fp = meta_fp
+        elif not force and self.catalog.exists("records"):
             # content-sensitive fingerprint: url alone would silently reuse
             # stale records when the same urls arrive with changed text.
             # With no committed records (or force) no stored row can match
-            # it, so it only labels the manifest row and runs beside the
-            # records write; otherwise it decides the skip, so it runs first.
-            cold = force or not self.catalog.exists("records")
-            if cold:
-                input_fp = self._submit(pool, fingerprint_df, web_pages, ["url", "text"]).result
-            else:
-                input_fp = fingerprint_df(web_pages, ["url", "text"])
-            records = self._run_stage(
-                pool, "preprocess", input_fp, lambda: _page_count(_resolved(input_fp)),
-                lambda: preprocess_records(web_pages), cold,
-            )
-            n_pages = _page_count(_resolved(input_fp))
-            if meta_fp is not None:
-                # register the manifest fingerprint too, so the NEXT run can
-                # skip on metadata alone
-                self.manifest.record_alias("preprocess", meta_fp)
+            # it, so no scan runs: the records write observes it instead.
+            content_fp = fingerprint_df(web_pages, ["url", "text"])
+            if self._stored("preprocess", content_fp) is not None:
+                done_fp = content_fp
+        if done_fp is not None:
+            self.manifest.record_skipped("preprocess", done_fp)
+            records = self.catalog.read("records")
+        else:
+            pages_obs = Observation("preprocess")
+
+            def build_records():
+                # observed after the repartition, in the write's own stage,
+                # whose tasks count once however often they are retried
+                src = ensure_parallelism(web_pages.select(*PAGE_COLUMNS))
+                return derive_records(src.observe(pages_obs, *content_aggs(["url", "text"])))
+
+            records = self._run_stage(pool, "preprocess", None, None, build_records,
+                                      obs=pages_obs)
+        if meta_fp is not None and done_fp != meta_fp:
+            # register the manifest fingerprint too, so the NEXT run can
+            # skip on metadata alone
+            self.manifest.record_alias("preprocess", meta_fp)
+        n_pages = self.catalog.num_rows("records")
 
         rec_fp = self._table_fp(records, ["url", "person_h"])
 
@@ -289,7 +340,7 @@ class ERPipeline:
         # the dup ratio (pair rows per distinct field tuple) is observed by
         # the scored_pairs write itself; HLL registers merge by max, so a
         # retried task cannot inflate it
-        dup_obs: list[Observation] = []
+        score_obs = Observation("score")
 
         def build_scores():
             pair_fields = P.with_pair_key(P.attach_pair_fields(pairs, records))
@@ -297,19 +348,16 @@ class ERPipeline:
             # with no job
             if n_pairs >= SCORE_REPARTITION_MIN_PAIRS:
                 pair_fields = pair_fields.repartition("person1")
-            obs = Observation("score_dup_ratio")
-            dup_obs.append(obs)
             scored = P.score(pair_fields, model.to_dict(), passthrough=("url1", "url2"))
-            return scored.observe(obs, F.approx_count_distinct("pair_key").alias("d")).select(
+            return scored.observe(score_obs, F.approx_count_distinct("pair_key").alias("d")).select(
                 "url1", "url2", "confidence", "prefilter"
             )
 
         t_score0 = time.time()
-        scored = self._run_stage(pool, "score", score_fp, int(n_pairs), build_scores, force)
+        scored = self._run_stage(pool, "score", score_fp, int(n_pairs), build_scores, force,
+                                 score_obs)
         self.metrics["score_wall_s"] = time.time() - t_score0
-        if dup_obs:  # get() raises on an Observation whose stage was skipped
-            d = dup_obs[0].get["d"]
-            self.metrics["score_dup_ratio"] = round(n_pairs / max(1, d), 3)
+        self.metrics["score_dup_ratio"] = round(n_pairs / max(1, self.observed["score"]["d"]), 3)
         self.metrics["pairs_scored_per_sec"] = (
             n_pairs / self.metrics["score_wall_s"] if self.metrics["score_wall_s"] > 0 else None
         )
@@ -319,26 +367,28 @@ class ERPipeline:
             lambda: C.build_edges(scored, cfg.min_edge_weight, cfg.decision_threshold), force,
         )
 
-        def build_clusters():
-            nodes = records.select(F.col("url").alias("node"))
-            return C.assign_clusters(edges, nodes)
-
-        clusters = self._run_stage(
-            pool, "cluster", score_fp + "|cluster", int(n_pairs), build_clusters, force)
-
         # a cluster id is the min url of its component and every edge
         # endpoint is a record url, so each cluster has exactly one member
-        # whose entity_id is its cluster_id; counted beside the evaluation
-        n_clusters = self._submit(
-            pool, clusters.where(F.col("entity_id") == F.col("cluster_id")).count
-        )
+        # whose entity_id is its cluster_id; the clusters write counts them
+        cluster_obs = Observation("cluster")
+
+        def build_clusters():
+            nodes = records.select(F.col("url").alias("node"))
+            return C.assign_clusters(edges, nodes).observe(
+                cluster_obs, F.count_if(F.col("entity_id") == F.col("cluster_id")).alias("n_clusters")
+            )
+
+        clusters = self._run_stage(
+            pool, "cluster", score_fp + "|cluster", int(n_pairs), build_clusters, force,
+            cluster_obs)
+
         evaluation = (self.evaluate(clusters, labeled_pairs, pairs)
                       if labeled_pairs is not None else None)
         dims.result()
         result = {
             "n_pages": n_pages,
             "candidate_pairs": int(n_pairs),
-            "n_clusters": int(n_clusters.result()),
+            "n_clusters": int(self.observed["cluster"]["n_clusters"]),
             "metrics": self.metrics,
         }
         if evaluation is not None:
@@ -500,16 +550,6 @@ class ERPipeline:
         self.catalog.read("clusters").select("cluster_id", "entity_id").write.mode(
             "overwrite"
         ).option("header", True).csv(path)
-
-
-def _resolved(value):
-    """``value``, or its result when it is a deferred (zero-argument) one."""
-    return value() if callable(value) else value
-
-
-def _page_count(content_fp: str) -> int:
-    """The row count a ``fingerprint_df`` fingerprint starts with."""
-    return int(content_fp.split(":")[0])
 
 
 def normalize_match(col):

@@ -15,16 +15,21 @@ checkpoints (/root/reference/src/data_manager.py:60-91,
   first data file's parquet footer, so opening a table runs no Spark job.
 
 - ``Manifest`` is the north_rule lineage table: one row per (run, stage,
-  partition) with rows_in/rows_out/wall_ms and the stage input fingerprint.
+  partition) with rows_in/rows_out/wall_ms and the stage input fingerprint,
+  plus the values the stage observed on its own write (``observed``, JSON).
   It is a driver-only log of small pyarrow parquet files: per-partition
   row counts come from the output table's parquet footers, so recording or
   probing a stage runs no Spark job.
   Stage completion probing (resume) = a manifest read + output-table
   existence check, mirroring /root/reference/src/pipeline.py:230-261.
+- ``fingerprint_df`` and an observed write share one content fingerprint:
+  ``content_aggs`` (row count ``n``, decimal sum ``s`` of the key hashes)
+  and ``content_fingerprint`` of their values.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 from datetime import datetime, timezone
@@ -32,7 +37,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import (
@@ -418,18 +423,27 @@ def fingerprint_files(df: DataFrame, stat_fn=None) -> str | None:
     return f"meta:{len(files)}:{h.hexdigest()}"
 
 
+def content_aggs(key_cols: list[str]) -> list[Column]:
+    """The aggregates a content fingerprint is made of: the row count ``n``
+    and the decimal sum ``s`` of xxhash64(keys), order-insensitive. An
+    ``agg`` or an ``observe`` on the write computes them alike."""
+    h = F.xxhash64(*[F.col(c).cast("string") for c in key_cols])
+    return [F.count(F.lit(1)).alias("n"), F.sum(h.cast("decimal(38,0)")).alias("s")]
+
+
+def content_fingerprint(values) -> str:
+    """The fingerprint string of ``content_aggs``' values, a Row or a dict
+    (``s`` a Decimal or its string form)."""
+    return f"{values['n']}:{values['s']}"
+
+
 def fingerprint_df(df: DataFrame, key_cols: list[str]) -> str:
-    """Order-insensitive content fingerprint: sum + xor-ish of xxhash64(keys).
+    """Order-insensitive content fingerprint of ``df`` over ``key_cols``.
 
     One cheap agg job; used as the manifest ``input_fingerprint`` so resume
     can prove the stage input is unchanged.
     """
-    h = F.xxhash64(*[F.col(c).cast("string") for c in key_cols])
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(h.cast("decimal(38,0)")).alias("s"),
-    ).collect()[0]
-    return f"{row['n']}:{row['s']}"
+    return content_fingerprint(df.agg(*content_aggs(key_cols)).collect()[0])
 
 
 class Manifest:
@@ -441,20 +455,27 @@ class Manifest:
     a whole file or none. ``read()`` returns the log as a Spark DataFrame
     of ``MANIFEST_SCHEMA``; files written by Spark into the same directory
     read together with these. Recording and probing run no Spark job.
+
+    The files also hold one nullable ``observed`` string column after
+    ``MANIFEST_SCHEMA``'s: on a stage's ok rows, the JSON of the values the
+    stage observed on its own write (Decimals as strings), read back by
+    ``observed()``. Files written before the column existed, or by Spark,
+    read it as null.
     """
 
     TABLE = "checkpoint_manifest"
-    _SCHEMA = to_arrow_schema(MANIFEST_SCHEMA)
+    _SCHEMA = to_arrow_schema(MANIFEST_SCHEMA).append(pa.field("observed", pa.string()))
 
     def __init__(self, catalog: Catalog, run_id: str | None = None):
         self.catalog = catalog
         self.run_id = run_id or uuid.uuid4().hex[:12]
 
-    def _append(self, rows: list[tuple]) -> None:
-        """Write ``rows`` (every column but ``committed_at``) as one file."""
+    def _append(self, rows: list[tuple], observed: str | None = None) -> None:
+        """Write ``rows`` (every ``MANIFEST_SCHEMA`` column but
+        ``committed_at``) as one file, each row with ``observed``."""
         now = datetime.now(timezone.utc)
         table = pa.Table.from_pylist(
-            [dict(zip(self._SCHEMA.names, (*r, now))) for r in rows],
+            [dict(zip(self._SCHEMA.names, (*r, now, observed))) for r in rows],
             schema=self._SCHEMA,
         )
         d = self.catalog.path(self.TABLE)
@@ -472,10 +493,12 @@ class Manifest:
         wall_ms: int,
         input_fingerprint: str,
         status: str = "ok",
+        observed: dict | None = None,
     ) -> None:
         """Append one manifest row per output partition of ``table``: the
         task number in each ``part-NNNNN-...`` file name, with the row
-        count from that file's footer."""
+        count from that file's footer. Each row carries ``observed`` as
+        JSON."""
         rows_out: dict[int, int] = {}
         for f in self.catalog.data_files(table):
             pid = int(os.path.basename(f).split("-")[1])
@@ -483,7 +506,7 @@ class Manifest:
         self._append([
             (self.run_id, stage, pid, status, rows_in, n, wall_ms, input_fingerprint)
             for pid, n in sorted((rows_out or {0: 0}).items())
-        ])
+        ], None if observed is None else json.dumps(observed, default=str))
 
     def record_alias(self, stage: str, input_fingerprint: str) -> None:
         """Record an ALTERNATE fingerprint under which this stage also
@@ -517,12 +540,20 @@ class Manifest:
         before it recorded its own ok row. Alias rows recorded after that
         write count: a run records one only once the tables match its
         input."""
+        return self._matches(stage, input_fingerprint).num_rows > 0
+
+    def observed(self, stage: str, input_fingerprint: str) -> dict | None:
+        """The values recorded on the ok rows ``stage_complete`` counts for
+        this input, or None when no such row carries any."""
+        m = self._matches(stage, input_fingerprint)
+        values = [v for v in m["observed"].to_pylist() if v is not None]
+        return json.loads(values[0]) if values else None
+
+    def _matches(self, stage: str, input_fingerprint: str) -> pa.Table:
+        """The stage's ok rows that count as its output for this input."""
         files = self.catalog.data_files(self.TABLE)
-        if not files:
-            return False
-        m = pq.read_table(
-            files, columns=["stage", "partition_id", "status", "input_fingerprint", "committed_at"]
-        )
+        # the full schema: a file without the observed column reads it as null
+        m = pq.read_table(files, schema=self._SCHEMA) if files else self._SCHEMA.empty_table()
         m = m.filter(pc.equal(m["stage"], stage))
         ok = pc.equal(m["status"], "ok")
         writes = pc.or_(
@@ -531,12 +562,12 @@ class Manifest:
         )
         last_write = pc.max(m.filter(writes)["committed_at"])
         if not last_write.is_valid:
-            return False
+            return m.slice(0, 0)
         hit = pc.and_(
             pc.and_(ok, pc.greater_equal(m["committed_at"], last_write)),
             pc.equal(m["input_fingerprint"], input_fingerprint),
         )
-        return m.filter(hit).num_rows > 0
+        return m.filter(hit)
 
 
 def table_diff(df_new, df_old, key_cols: list[str]) -> dict:

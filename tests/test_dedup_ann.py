@@ -994,3 +994,21 @@ def test_decontaminate_counts_distinct_shared_fps(spark):
     assert one == three  # duplicate eval docs change nothing
     assert three[0][1] is True and three[0][0] > 0
     assert three[1] == (0, False)
+
+
+@pytest.mark.parametrize("cap, n_pairs", [(2, 0), (3, 3)])
+def test_hot_bucket_cap(cap, n_pairs, spark, monkeypatch):
+    """A bucket of more than ``MAX_BUCKET_ROWS`` members is excluded from
+    verification: three identical documents (one 3-member bucket per band)
+    and three equal vectors in one block give no pairs at a cap of 2 and
+    all three pairs at 3."""
+    from entity_resolution_pipeline_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "MAX_BUCKET_ROWS", cap)
+    text = "the same hot bucket text repeated for every document in it"
+    docs = spark.createDataFrame([(i, text) for i in range(3)], "doc_id long, text string")
+    assert dedup.minhash_lsh_pairs(docs, threshold=0.5).count() == n_pairs
+    emb = spark.createDataFrame([(i, 0, [1.0, 0.0]) for i in range(3)],
+                                "vec_id long, blk int, embedding array<double>")
+    got = dedup.embedding_cosine_pairs(emb, threshold=0.9, block_col="blk")
+    assert got.count() == n_pairs

@@ -4,6 +4,8 @@ The F1 >= 0.99 acceptance gate (BASELINE.json north_rule) runs on the
 deterministic synthetic corpus at matched blocking keys.
 """
 
+import json
+
 import pyspark.sql.functions as F
 import pytest
 from conftest import N_ENT
@@ -60,6 +62,121 @@ def test_observed_dup_ratio_equals_count_job(pipeline_run):
     d = pair_fields.agg(F.approx_count_distinct("pair_key")).collect()[0][0]
     n_pairs = result["candidate_pairs"]
     assert result["metrics"]["score_dup_ratio"] == round(n_pairs / d, 3)
+
+
+def test_observed_values_equal_count_jobs(pipeline_run):
+    """The input fingerprint the records write observed equals
+    ``fingerprint_df``'s, and each observing stage's ok rows carry exactly
+    the values the run used (the dup ratio and ``n_clusters`` are checked
+    against their count jobs above)."""
+    import pyarrow.parquet as pq
+
+    from entity_resolution_pipeline_spark.sources.catalog import (
+        content_fingerprint,
+        fingerprint_df,
+    )
+
+    pipe, result, wp, *_ = pipeline_run
+    seen = pipe.observed
+    assert content_fingerprint(seen["preprocess"]) == fingerprint_df(wp, ["url", "text"])
+    assert seen["preprocess"]["n"] == result["n_pages"]
+    assert seen["cluster"]["n_clusters"] == result["n_clusters"]
+
+    rows = pq.read_table(pipe.catalog.data_files(Manifest.TABLE),
+                         schema=Manifest._SCHEMA).to_pylist()
+    recorded = {}
+    for r in rows:
+        if r["run_id"] == pipe.manifest.run_id and r["status"] == "ok" and r["observed"]:
+            recorded.setdefault(r["stage"], set()).add(r["observed"])
+    assert {k: [json.loads(v) for v in vs] for k, vs in recorded.items()} == {
+        k: [seen[k]] for k in ("preprocess", "score", "cluster")
+    }
+
+
+def test_observed_records_write_adds_no_job(spark, tmp_path):
+    """On an input with fewer partitions than cores (so it is repartitioned
+    first), the preprocess stage, whose records write observes the input
+    fingerprint, runs as many Spark jobs as a plain ``preprocess_records``
+    write, and its ok rows carry ``fingerprint_df``'s string."""
+    from entity_resolution_pipeline_spark.operators.preprocess import preprocess_records
+    from entity_resolution_pipeline_spark.sources.catalog import fingerprint_df
+
+    wp = web_pages_df(spark, 40).coalesce(1)
+    sc = spark.sparkContext
+    sc.setJobGroup("plain-records-write", "plain records write")
+    try:
+        preprocess_records(wp).write.parquet(str(tmp_path / "plain"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    pipe = ERPipeline(spark, str(tmp_path / "wh"), ERConfig(), run_id="observed-write")
+    pipe.run(wp, spark.createDataFrame(labeled_pairs_pdf(40, 200)))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    def jobs(group):
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("er:observed-write:preprocess") == jobs("plain-records-write") > 0
+    pre = pipe.manifest.read().where(
+        (F.col("stage") == "preprocess") & (F.col("status") == "ok")
+    )
+    assert {r["input_fingerprint"] for r in pre.collect()} == {
+        fingerprint_df(wp, ["url", "text"])
+    }
+
+
+def test_observed_fingerprint_survives_task_retry(tmp_path):
+    """In a session that retries failed tasks (``local[2,2]``), a UDF fails
+    the first attempt of one partition after the observation. The count
+    and hash sum observed after a repartition still equal the count job's:
+    the failed attempt's partial values are dropped, the retry's counted
+    once."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import json, os
+from pyspark import TaskContext
+from pyspark.sql import Observation, functions as F
+from entity_resolution_pipeline_spark.session import build_spark
+from entity_resolution_pipeline_spark.sources.catalog import (
+    content_aggs, content_fingerprint, fingerprint_df)
+
+spark = build_spark(master="local[2,2]", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+marker = {str(tmp_path / "failed")!r}
+pages = spark.range(4000).select(
+    F.col("id").cast("string").alias("url"),
+    F.concat(F.lit("text "), (F.col("id") % 97).cast("string")).alias("text"))
+
+@F.udf("string")
+def flaky(text):
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        open(marker, "w").close()
+        raise RuntimeError("injected failure of attempt 0")
+    return text
+
+obs = Observation("retried")
+src = pages.repartition(4).observe(obs, *content_aggs(["url", "text"]))
+src.withColumn("text", flaky("text")).write.parquet({str(tmp_path / "out")!r})
+got = obs.get
+print(json.dumps({{"observed": content_fingerprint(got),
+                  "count_job": fingerprint_df(pages, ["url", "text"]),
+                  "retried": os.path.exists(marker)}}))
+spark.stop()
+"""
+    env = {**os.environ, "PYTHONPATH": repo, "SPARK_DRIVER_MEMORY": "1g",
+           "PYSPARK_PYTHON": sys.executable}
+    proc = subprocess.run([sys.executable, "-c", script], env=env, capture_output=True,
+                          text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads([ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1])
+    assert out["retried"]
+    assert out["observed"] == out["count_job"]
+    assert out["observed"].startswith("4000:")
 
 
 def test_score_repartition_branch_matches_default(spark, tmp_path_factory, monkeypatch):
@@ -561,6 +678,71 @@ def test_stage_job_groups(spark, tmp_path):
         assert jobs("groups-warm", stage) == [], stage
 
 
+def test_every_run_job_in_a_group(spark, tmp_path):
+    """Every Spark job of a run is in an ``er:<run_id>:`` group: a cold run
+    and a resume add no job to the jobs without a group. The jobs outside
+    the stages (the content probe, the oversized-block sample and the
+    evaluation) run in ``er:<run_id>:run``."""
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    sc = spark.sparkContext
+
+    def ungrouped():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = ungrouped()
+    cfg = ERConfig(max_block_size=4)  # oversized blocks, so their sample runs
+    cold = ERPipeline(spark, str(tmp_path), cfg, run_id="ungrouped-cold").run(wp, lp)
+    after_cold = ungrouped()
+    assert cold["metrics"]["oversized_blocks"]
+    ERPipeline(spark, str(tmp_path), cfg, run_id="ungrouped-warm").run(wp, lp)
+    assert after_cold - before == set()
+    assert ungrouped() - after_cold == set()
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    for run_id in ("ungrouped-cold", "ungrouped-warm"):
+        assert list(sc.statusTracker().getJobIdsForGroup(f"er:{run_id}:run")), run_id
+
+
+def test_stage_row_without_observed_values_recomputes_once(spark, tmp_path):
+    """A ``cluster`` ok row without observed values (as a warehouse written
+    before rows carried them has) does not count: the next run recomputes
+    ``cluster`` alone and reports the same ``n_clusters``, and the run
+    after that skips every stage."""
+    import pyarrow.parquet as pq
+
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    wh = str(tmp_path)
+    first = ERPipeline(spark, wh, ERConfig()).run(wp, lp)
+    cat = Catalog(spark, wh)
+    rewritten = 0
+    for f in cat.data_files(Manifest.TABLE):
+        t = pq.read_table(f)
+        if "cluster" in t["stage"].to_pylist() and "ok" in t["status"].to_pylist():
+            pq.write_table(t.drop_columns(["observed"]), f)  # the older file schema
+            rewritten += 1
+    assert rewritten == 1
+
+    def statuses(pipe):
+        got: dict = {}
+        for r in pipe.manifest.read().where(F.col("run_id") == pipe.manifest.run_id).collect():
+            got.setdefault(r["stage"], set()).add(r["status"])
+        return got
+
+    second = ERPipeline(spark, wh, ERConfig())
+    res2 = second.run(wp, lp)
+    assert statuses(second) == {
+        **{s: {"skipped"} for s in STAGES}, "cluster": {"started", "ok"}
+    }
+    assert res2["n_clusters"] == first["n_clusters"]
+    third = ERPipeline(spark, wh, ERConfig())
+    res3 = third.run(wp, lp)
+    assert statuses(third) == {s: {"skipped"} for s in STAGES}
+    assert res3["n_clusters"] == first["n_clusters"]
+    assert res3["metrics"]["score_dup_ratio"] == first["metrics"]["score_dup_ratio"]
+
+
 def test_train_runs_beside_blocking(spark, tmp_path, monkeypatch):
     """Training does not wait for blocking -> pairs: the blocking_keys write
     is held until training has started, and the run still completes."""
@@ -774,6 +956,57 @@ def test_merge_upsert_crash_recovery(spark, tmp_path_factory):
                      "t", ["k"])
     got = {r["k"]: r["v"] for r in cat.read("t").collect()}
     assert got == {1: "a", 2: "B", 3: "c"}  # pre-crash rows recovered, merge applied
+    assert not os.path.isdir(cat.path("t__backup"))
+
+
+@pytest.mark.parametrize("op", ["merge_upsert", "compact"])
+@pytest.mark.parametrize("kill", ["second_rename", "backup_drop"])
+def test_commit_killed_inside_swap_heals(op, kill, spark, tmp_path, monkeypatch):
+    """``merge_upsert`` and ``compact`` killed inside the table swap: at the
+    second rename (the table sits at ``t__backup``, the new copy at
+    ``t__staging``), or at the final backup drop (both copies left). The
+    next call heals the table, gives the expected rows and leaves no
+    staging or backup directory."""
+    import os
+
+    cat = Catalog(spark, str(tmp_path))
+    cat.write(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), "t")
+    batch = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
+    want = {1: "a", 2: "B", 3: "c"} if op == "merge_upsert" else {1: "a", 2: "b"}
+
+    def call():
+        if op == "merge_upsert":
+            cat.merge_upsert(batch, "t", ["k"])
+        else:
+            cat.compact("t")
+
+    if kill == "second_rename":
+        rename = os.rename
+
+        def killed_rename(src, dst):
+            if src == cat.path("t__staging"):
+                raise OSError("killed at the second swap rename")
+            return rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", killed_rename)
+    else:
+        drop = Catalog.drop
+
+        def killed_drop(self, name):
+            if name == "t__backup" and os.path.isdir(self.path(name)):
+                raise OSError("killed at the backup drop")
+            return drop(self, name)
+
+        monkeypatch.setattr(Catalog, "drop", killed_drop)
+    with pytest.raises(OSError, match="killed"):
+        call()
+    monkeypatch.undo()
+    assert os.path.isdir(cat.path("t__backup"))
+    assert cat.exists("t") == (kill == "backup_drop")
+
+    call()
+    assert {r["k"]: r["v"] for r in cat.read("t").collect()} == want
+    assert not os.path.isdir(cat.path("t__staging"))
     assert not os.path.isdir(cat.path("t__backup"))
 
 

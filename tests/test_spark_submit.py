@@ -95,9 +95,9 @@ def test_spark_submit_pyfiles_two_parallelism_levels(tmp_path):
 
 def test_env_knob_inventory():
     """The package reads exactly these environment variables: three
-    deployment settings (cores, master URL, driver heap) plus the
-    near-dup hot-bucket cap. A new env read is a new knob; it has to be
-    added here on purpose, with the measurement that justifies it."""
+    deployment settings (cores, master URL, driver heap). A new env read
+    is a new knob; it has to be added here on purpose, with the
+    measurement that justifies it."""
     import glob
     import re
 
@@ -118,7 +118,6 @@ def test_env_knob_inventory():
         "SPARK_GRAFT_CPUS",
         "SPARK_MASTER",
         "SPARK_DRIVER_MEMORY",
-        "SPARK_GRAFT_MAX_BUCKET",
     }
 
 

@@ -559,6 +559,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    id_t = docs.schema["doc_id"].dataType.simpleString()
     d = ensure_parallelism(docs.select("doc_id", text_col)).select(
         "doc_id", F.lower(normalize_col(F.col(text_col))).alias("nt")
     )
@@ -582,7 +583,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 out.append(int(weights[2 * counts > len(toks)].sum()))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
 
-    return d.mapInPandas(run, schema="doc_id long, simhash long")
+    return d.mapInPandas(run, schema=f"doc_id {id_t}, simhash long")
 
 
 def simhash_pairs(docs: DataFrame, text_col: str = "text", max_hamming: int = 3) -> DataFrame:

@@ -15,9 +15,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F  # noqa: N812
-from pyspark.sql.types import LongType, StructField, StructType
 
 from .util import ensure_parallelism
 from ..functions.text import (
@@ -480,35 +479,38 @@ def bm25_search(
 
 
 PII_PATTERNS = {
-    # RE2-safe (no lookaround/backrefs) so Spark's Java regex and the DuckDB
-    # oracle's RE2 agree match for match
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "ipv4": r"\b(\d{1,3}\.){3}\d{1,3}\b",
-    "longnum": r"\b\d{9,}\b",
+    # tag -> pattern, in replacement order: emails first (they contain
+    # dotted digit substrings an IP pattern could claim). RE2-safe (no
+    # lookaround/backrefs) so Spark's Java regex and the DuckDB oracle's RE2
+    # agree match for match
+    "<EMAIL>": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
+    "<IP>": r"\b(\d{1,3}\.){3}\d{1,3}\b",
+    "<ID>": r"\b\d{9,}\b",
 }
 
 
+def redact_text(text: Column) -> Column:
+    """``text`` with emails -> <EMAIL>, IPv4 -> <IP>, long digit runs
+    (ids/phones/accounts) -> <ID>. Pure JVM regexp_replace, map-only."""
+    for tag, pattern in PII_PATTERNS.items():
+        text = F.regexp_replace(text, pattern, tag)
+    return text
+
+
 def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """PII scrub for training text: emails -> <EMAIL>, IPv4 -> <IP>, long
-    digit runs (ids/phones/accounts) -> <ID>; plus per-doc match counts.
-    Pure JVM regexp_replace/regexp_count — at 100 TB this is a map-only
-    stage with zero shuffle. Replacement order matters: emails first (they
-    contain dotted digit substrings an IP pattern could claim).
+    """PII scrub for training text: ``clean_text`` is ``redact_text`` of
+    the text, plus per-doc match counts. At 100 TB this is a map-only stage
+    with zero shuffle. A kind's count is the number of its tags in the
+    clean text less those the text already held: no pattern matches ``<``
+    or ``>``, so a tag is never rewritten, and each match leaves one tag.
     """
     t = F.col(text_col)
-    n_email = F.regexp_count(t, F.lit(PII_PATTERNS["email"]))
-    clean = F.regexp_replace(t, PII_PATTERNS["email"], "<EMAIL>")
-    n_ip = F.regexp_count(clean, F.lit(PII_PATTERNS["ipv4"]))
-    clean = F.regexp_replace(clean, PII_PATTERNS["ipv4"], "<IP>")
-    n_num = F.regexp_count(clean, F.lit(PII_PATTERNS["longnum"]))
-    clean = F.regexp_replace(clean, PII_PATTERNS["longnum"], "<ID>")
-    return docs.select(
-        "doc_id",
-        clean.alias("clean_text"),
-        n_email.cast("long").alias("n_emails"),
-        n_ip.cast("long").alias("n_ips"),
-        n_num.cast("long").alias("n_longnums"),
-    )
+    clean = redact_text(t)
+    counts = [
+        (F.regexp_count(clean, F.lit(tag)) - F.regexp_count(t, F.lit(tag))).cast("long").alias(name)
+        for tag, name in zip(PII_PATTERNS, ("n_emails", "n_ips", "n_longnums"))
+    ]
+    return docs.select("doc_id", clean.alias("clean_text"), *counts)
 
 
 def language_id_v2(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -569,13 +571,9 @@ def language_id_v2(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-_BPE_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("n_tokens_bpe", LongType())]
-)
-
-
 def token_counts_bpeish(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """BPE-ish regex token counts (Arrow pass)."""
+    id_t = docs.schema["doc_id"].dataType.simpleString()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -586,7 +584,9 @@ def token_counts_bpeish(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 }
             )
 
-    return ensure_parallelism(docs.select("doc_id", text_col)).mapInPandas(run, schema=_BPE_SCHEMA)
+    return ensure_parallelism(docs.select("doc_id", text_col)).mapInPandas(
+        run, schema=f"doc_id {id_t}, n_tokens_bpe long"
+    )
 
 
 def _winnow_mins_expr(k: int, window: int) -> tuple[str, str, str]:

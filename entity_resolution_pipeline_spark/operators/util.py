@@ -112,6 +112,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     task. The round-robin shuffle of the (narrow) input columns is orders of
     magnitude cheaper than serializing the kernel. No-op when the scan
     already has enough splits (the 100 TB case).
+
+    Reading the partition count costs no Spark job only for a plan without
+    an exchange, such as a scan or a checkpoint. Under AQE,
+    ``df.rdd.getNumPartitions()`` runs the shuffle of a plan that has one,
+    and a later action plans that shuffle again.
     """
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism

@@ -16,6 +16,10 @@ Returns the curated DataFrame plus a funnel dict (rows surviving each
 stage) — the no-silent-caps accounting: every drop is counted and
 attributable. Each count is one bounded aggregate job; at 100 TB the
 funnel numbers are exactly what an operator dashboard shows.
+
+Each survivor set is an eager ``localCheckpoint``: its count, the next
+stage and the caller's action plan a flat scan of it, not the upstream
+funnel, which each stage would otherwise plan twice (so doubling per stage).
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from ..operators.dedup import exact_dedup, near_dup_clusters
 from ..operators.sample import split_train_holdout
-from ..operators.textstats import decontaminate, gopher_quality, redact_pii
+from ..operators.textstats import decontaminate, gopher_quality, redact_text
 
 
 @dataclass
@@ -50,27 +54,18 @@ def curate_corpus(
 ) -> tuple[DataFrame, dict]:
     """documents (doc_id, text, ...) -> curated training table + funnel.
 
-    Output columns: the input columns (text replaced by the redacted text
-    when ``config.redact``), plus ``split`` ('train' | 'holdout').
+    Output columns: the input columns (text replaced in place by the
+    redacted text when ``config.redact``), plus ``split`` ('train' |
+    'holdout'). Each funnel stage is checkpointed and counted; the returned
+    frame is a projection over the last checkpoint, and nothing is left in
+    the session's cache.
     """
     cfg = config or CurationConfig()
     funnel: dict = {"input": docs.count()}
 
-    # each survivor set is persisted and the stage count materializes it:
-    # without this, every downstream funnel count (and the caller's first
-    # action on the result) would re-run the whole upstream funnel —
-    # gopher shuffle, dedup, and the MinHash sweep — from raw documents.
-    # Intermediates unpersist as soon as the next stage is materialized;
-    # the FINAL survivor set stays cached so materializing the returned
-    # frame reads it (write the result, then let it age out or unpersist).
-    cached: list[DataFrame] = []
-
     def _stage(df: DataFrame, label: str) -> DataFrame:
-        df = df.persist()
+        df = df.localCheckpoint(eager=True)
         funnel[label] = df.count()
-        if cached:
-            cached.pop().unpersist()
-        cached.append(df)
         return df
 
     # 1. quality gate — map-side signals, drops junk before any shuffle
@@ -117,11 +112,7 @@ def curate_corpus(
 
     # 5. PII redaction — map-only text rewrite, row count unchanged
     if cfg.redact:
-        red = redact_pii(d)
-        other_cols = [c for c in d.columns if c != "text"]
-        d = d.select(*other_cols).join(
-            red.select("doc_id", F.col("clean_text").alias("text")), "doc_id"
-        )
+        d = d.withColumn("text", redact_text(F.col("text")))
 
     # 6. deterministic split — decontamination-stable across reruns
     out = split_train_holdout(

@@ -60,6 +60,7 @@ MANIFEST_SCHEMA = StructType(
         StructField("wall_ms", LongType()),
         StructField("input_fingerprint", StringType()),
         StructField("committed_at", TimestampType()),
+        StructField("observed", StringType()),
     ]
 )
 
@@ -456,22 +457,21 @@ class Manifest:
     of ``MANIFEST_SCHEMA``; files written by Spark into the same directory
     read together with these. Recording and probing run no Spark job.
 
-    The files also hold one nullable ``observed`` string column after
-    ``MANIFEST_SCHEMA``'s: on a stage's ok rows, the JSON of the values the
-    stage observed on its own write (Decimals as strings), read back by
-    ``observed()``. Files written before the column existed, or by Spark,
-    read it as null.
+    The last column, ``observed``, is a nullable string: on a stage's ok
+    rows, the JSON of the values the stage observed on its own write
+    (Decimals as strings), read back by ``observed()``. Files written
+    before the column existed read it as null.
     """
 
     TABLE = "checkpoint_manifest"
-    _SCHEMA = to_arrow_schema(MANIFEST_SCHEMA).append(pa.field("observed", pa.string()))
+    _SCHEMA = to_arrow_schema(MANIFEST_SCHEMA)
 
     def __init__(self, catalog: Catalog, run_id: str | None = None):
         self.catalog = catalog
         self.run_id = run_id or uuid.uuid4().hex[:12]
 
     def _append(self, rows: list[tuple], observed: str | None = None) -> None:
-        """Write ``rows`` (every ``MANIFEST_SCHEMA`` column but
+        """Write ``rows`` (every ``MANIFEST_SCHEMA`` column before
         ``committed_at``) as one file, each row with ``observed``."""
         now = datetime.now(timezone.utc)
         table = pa.Table.from_pylist(

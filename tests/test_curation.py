@@ -82,6 +82,29 @@ class TestTfidf:
         assert out == {1: "y", 2: "z"}  # equal scores -> lexicographic
 
 
+def _full_funnel_inputs(spark):
+    """8 documents, each dropped by a known stage or kept, plus an eval set."""
+    base = ("the quick brown fox jumps over the lazy dog while many "
+            "common words fill this perfectly ordinary document body")
+    near = base.replace("lazy dog", "lazy cat")
+    eval_passage = "the held out benchmark answer phrase nobody should train on"
+    rows = [
+        (0, base),
+        (1, base),                             # exact dup of 0
+        (2, near),                             # near dup of 0
+        (3, f"intro text {eval_passage} outro text words words words"),
+        (4, "spam spam spam spam spam spam"),  # top_word_frac = 1.0
+        (5, "# $ % ^ & * ( )"),                # no alpha words
+        (6, "contact me at someone@example.org for more details about "
+            "this otherwise clean and unique document text"),
+        (7, "a second completely distinct clean document with plenty of "
+            "different vocabulary spread across the line"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    ev = spark.createDataFrame([(100, eval_passage)], "doc_id long, text string")
+    return docs, ev
+
+
 class TestCurateCorpus:
     def test_full_funnel(self, spark):
         """Every funnel stage drops exactly what it should: junk at the
@@ -93,24 +116,7 @@ class TestCurateCorpus:
             curate_corpus,
         )
 
-        base = ("the quick brown fox jumps over the lazy dog while many "
-                "common words fill this perfectly ordinary document body")
-        near = base.replace("lazy dog", "lazy cat")
-        eval_passage = "the held out benchmark answer phrase nobody should train on"
-        rows = [
-            (0, base),
-            (1, base),                             # exact dup of 0
-            (2, near),                             # near dup of 0
-            (3, f"intro text {eval_passage} outro text words words words"),
-            (4, "spam spam spam spam spam spam"),  # top_word_frac = 1.0
-            (5, "# $ % ^ & * ( )"),                # no alpha words
-            (6, "contact me at someone@example.org for more details about "
-                "this otherwise clean and unique document text"),
-            (7, "a second completely distinct clean document with plenty of "
-                "different vocabulary spread across the line"),
-        ]
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        ev = spark.createDataFrame([(100, eval_passage)], "doc_id long, text string")
+        docs, ev = _full_funnel_inputs(spark)
         out, funnel = curate_corpus(
             docs, ev, CurationConfig(holdout_frac=0.25, redact=True)
         )
@@ -134,6 +140,20 @@ class TestCurateCorpus:
         assert {(r["doc_id"], r["split"]) for r in out2.collect()} == {
             (r["doc_id"], r["split"]) for r in out.collect()
         }
+
+    def test_funnel_plan_is_flat_and_uncached(self, spark):
+        """Each stage is checkpointed: the returned frame's analyzed plan
+        has one leaf (the last checkpoint), not the whole funnel, and the
+        call leaves nothing in the session's cache."""
+        from entity_resolution_pipeline_spark.plans.curation import curate_corpus
+
+        docs, ev = _full_funnel_inputs(spark)
+        spark.catalog.clearCache()
+        out, funnel = curate_corpus(docs, ev)
+        assert out._jdf.queryExecution().analyzed().collectLeaves().size() == 1
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert out.columns == ["doc_id", "text", "split"]
+        assert out.count() == funnel["train"] + funnel["holdout"] == 3
 
     def test_funnel_without_eval_set(self, spark):
         from entity_resolution_pipeline_spark.plans.curation import curate_corpus
@@ -284,6 +304,17 @@ class TestRedactPII:
         assert out[2]["clean_text"] == "no pii here at all"
         assert out[2]["n_emails"] == out[2]["n_ips"] == out[2]["n_longnums"] == 0
         assert out[3]["n_emails"] == 2 and out[3]["n_ips"] == 1
+
+    def test_counts_ignore_tags_already_in_text(self, spark):
+        """A tag the input already holds is kept and is not counted."""
+        df = spark.createDataFrame(
+            [(0, "<EMAIL> <IP> <ID> x@y.com 1.2.3.4"), (1, None)],
+            "doc_id long, text string",
+        )
+        out = {r["doc_id"]: r for r in redact_pii(df).collect()}
+        assert out[0]["clean_text"] == "<EMAIL> <IP> <ID> <EMAIL> <IP>"
+        assert (out[0]["n_emails"], out[0]["n_ips"], out[0]["n_longnums"]) == (1, 1, 0)
+        assert out[1]["clean_text"] is None and out[1]["n_emails"] is None
 
     def test_email_takes_precedence_over_digits(self, spark):
         df = spark.createDataFrame([(0, "x 1.2.3.4@host.com y")], "doc_id long, text string")

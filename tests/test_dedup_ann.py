@@ -27,6 +27,7 @@ from entity_resolution_pipeline_spark.operators.textstats import (
     language_id,
     quality,
     token_counts,
+    token_counts_bpeish,
 )
 
 
@@ -41,6 +42,10 @@ def _docs(spark):
         (5, ""),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _string_ids(docs):
+    return docs.select(F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"), "text")
 
 
 class TestDedup:
@@ -222,6 +227,25 @@ class TestDedup:
         assert pairs[(0, 1)] == 0
         assert (0, 4) not in pairs
 
+    def test_simhash_keeps_string_ids(self, spark):
+        """String doc_ids get the same signatures as long ones, and the
+        simhash near-dup closure keeps them."""
+        from entity_resolution_pipeline_spark.operators.dedup import (
+            near_dup_clusters,
+            simhash_signatures,
+        )
+
+        docs = _docs(spark)
+        sdocs = _string_ids(docs)
+        want = {f"d{r['doc_id']}": r["simhash"] for r in simhash_signatures(docs).collect()}
+        got = {r["doc_id"]: r["simhash"] for r in simhash_signatures(sdocs).collect()}
+        assert got == want
+        keep = {r["doc_id"]: r["keep_id"] for r in near_dup_clusters(
+            sdocs, method="simhash", max_hamming=6
+        ).collect()}
+        assert keep["d0"] == keep["d1"] == keep["d2"] == "d0"
+        assert keep["d4"] == "d4"
+
     def test_embedding_cosine(self, spark):
         emb = spark.createDataFrame(
             [
@@ -330,6 +354,13 @@ class TestANN:
 
 
 class TestTextStats:
+    def test_token_counts_bpeish_keeps_string_ids(self, spark):
+        docs = _docs(spark)
+        want = {f"d{r['doc_id']}": r["n_tokens_bpe"] for r in token_counts_bpeish(docs).collect()}
+        got = token_counts_bpeish(_string_ids(docs))
+        assert got.schema["doc_id"].dataType.simpleString() == "string"
+        assert {r["doc_id"]: r["n_tokens_bpe"] for r in got.collect()} == want
+
     def test_token_counts_vs_python(self, spark):
         docs = _docs(spark)
         out = {r["doc_id"]: r["n_tokens_ws"] for r in token_counts(docs).collect()}

@@ -93,6 +93,18 @@ def test_observed_values_equal_count_jobs(pipeline_run):
     }
 
 
+def test_manifest_read_shows_observed(pipeline_run):
+    """``Manifest.read()`` carries the ``observed`` column: the cluster
+    stage's ok rows hold the run's ``n_clusters``."""
+    pipe, result, *_ = pipeline_run
+    rows = pipe.manifest.read().where(
+        (F.col("run_id") == pipe.manifest.run_id)
+        & (F.col("stage") == "cluster") & (F.col("status") == "ok")
+    ).collect()
+    assert rows
+    assert {json.loads(r["observed"])["n_clusters"] for r in rows} == {result["n_clusters"]}
+
+
 def test_observed_records_write_adds_no_job(spark, tmp_path):
     """On an input with fewer partitions than cores (so it is repartitioned
     first), the preprocess stage, whose records write observes the input
@@ -263,7 +275,7 @@ def test_manifest_reads_spark_written_rows(spark, tmp_path):
 
     cat = Catalog(spark, str(tmp_path))
     old = spark.createDataFrame(
-        [("old", "score", 0, "ok", 5, 5, 7, "fp-old", datetime(2026, 1, 1))],
+        [("old", "score", 0, "ok", 5, 5, 7, "fp-old", datetime(2026, 1, 1), None)],
         MANIFEST_SCHEMA,
     )
     cat.append(old, Manifest.TABLE)

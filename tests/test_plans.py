@@ -177,3 +177,31 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         spark.sql("DROP TABLE IF EXISTS bt_pairs")
         spark.sql("DROP TABLE IF EXISTS bt_scored")
+
+
+def test_ensure_parallelism_runs_no_job_without_exchange(spark, tmp_path):
+    """Reading the partition count of a parquet scan or a checkpoint runs
+    no Spark job; under AQE a plan with an exchange runs its shuffle."""
+    from entity_resolution_pipeline_spark.operators.util import ensure_parallelism
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "t")
+    spark.range(100).write.parquet(path)
+    inputs = {  # built outside the job groups: the scan infers its schema
+        "scan": spark.read.parquet(path),
+        "checkpoint": spark.range(100).repartition(3).localCheckpoint(eager=True),
+        "exchange": spark.range(100).repartition(3),
+    }
+    jobs = {}
+    for name, df in inputs.items():
+        group = f"ensure-parallelism-{name}"
+        sc.setJobGroup(group, "ensure_parallelism job count")
+        try:
+            ensure_parallelism(df)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    assert jobs["scan"] == 0 and jobs["checkpoint"] == 0, jobs
+    assert jobs["exchange"] > 0, jobs

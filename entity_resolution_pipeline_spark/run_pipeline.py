@@ -5,9 +5,11 @@
         entity_resolution_pipeline_spark/run_pipeline.py \
         --warehouse /path/wh --entities 3000 [--input /path/web_pages_parquet]
 
-Under spark-submit the session config (master, executors) comes from the
-submit command; locally this falls back to the build_spark defaults. Prints
-one JSON line with counts, metrics, and evaluation.
+Prints one JSON line with counts, metrics, and evaluation. The session is a
+bare ``SparkSession.builder``: its config comes from the submit command, so
+locally it runs on Spark's defaults, not ``build_spark``'s. spark-submit
+starts the driver JVM before any Python runs, so a short local submit needs
+``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1`` itself.
 """
 
 from __future__ import annotations

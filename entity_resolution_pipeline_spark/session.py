@@ -1,8 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
-Single place where shuffle/AQE/Arrow knobs are set so tests, bench.py and
-spark-submit entrypoints agree. Designed for a real multi-executor cluster;
-in this sandbox ``master`` defaults to ``local[N]``.
+Single place where shuffle/AQE/Arrow/JIT knobs are set for tests, bench.py
+and library callers. spark-submit starts the driver JVM before any Python
+runs, so a short local submit passes its own ``--conf
+spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1``. Designed for a
+real multi-executor cluster; without one, ``master`` defaults to local[N].
 """
 
 from __future__ import annotations
@@ -18,6 +20,10 @@ def build_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """The driver JVM (``local[N]``: also the executor) runs C1 only. C2 cost
+    ~40 % of a 1,000-entity run's CPU; at 5,000 C1 still used less CPU, with
+    wall ~5 % longer. For longer runs put ``-XX:TieredStopAtLevel=4`` in
+    ``spark.driver.extraJavaOptions``: it comes after this default."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
@@ -41,6 +47,8 @@ def build_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # C1-only JIT: C2 recompiling Spark's planner buys nothing on short runs
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

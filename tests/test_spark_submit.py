@@ -93,6 +93,49 @@ def test_spark_submit_pyfiles_two_parallelism_levels(tmp_path):
     assert r2["evaluation"]["blocked_pairs"] == r8["evaluation"]["blocked_pairs"]
 
 
+def _jit_tier(jvm) -> str:
+    mx = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return mx.getVMOption("TieredStopAtLevel").getValue()
+
+
+def test_build_spark_driver_jvm_is_c1_only(spark):
+    """``build_spark`` starts the driver JVM with ``-XX:TieredStopAtLevel=1``
+    (C1 only); HotSpot's default is 4 (C1 then C2)."""
+    assert _jit_tier(spark.sparkContext._jvm) == "1"
+
+
+_CALLER_JVM_OPTS = """
+import json
+from entity_resolution_pipeline_spark.session import build_spark
+
+spark = build_spark(master="local[1]", extra_conf={
+    "spark.driver.extraJavaOptions": "-Derp.probe=1 -XX:TieredStopAtLevel=4"})
+jvm = spark.sparkContext._jvm
+mx = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+tier = mx.getVMOption("TieredStopAtLevel").getValue()
+print(json.dumps([jvm.System.getProperty("erp.probe"), tier]))
+spark.stop()
+"""
+
+
+def test_build_spark_caller_jvm_options_win():
+    """A caller's ``spark.driver.extraJavaOptions`` stays in effect and comes
+    after ``build_spark``'s JIT default, so a long local run can take C2 back
+    with ``-XX:TieredStopAtLevel=4``. Needs its own JVM: the flag is fixed
+    when the driver starts."""
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)}
+    proc = subprocess.run(
+        [sys.executable, "-c", _CALLER_JVM_OPTS],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert json.loads(proc.stdout.splitlines()[-1]) == ["1", "4"]
+
+
 def test_env_knob_inventory():
     """The package reads exactly these environment variables: three
     deployment settings (cores, master URL, driver heap). A new env read

@@ -23,10 +23,9 @@ libraries exist and otherwise fall back to deterministic fakes:
 fallback on undecodable bytes), 'real' (STRICT: NotImplementedError when
 no codec exists, and a per-row ValueError when a row fails to decode —
 real or error, never a silent fake), 'fake' (always the stub — what the
-deterministic tests pin). The legacy ``use_fake_decoder`` flag maps onto
-these when explicitly passed. PIL/imageio do not ship in this
-container, so those branches are import-gated; the purepng branch runs
-for real here and is pytest-pinned end-to-end.
+deterministic tests pin). PIL/imageio are optional, so those branches
+are import-gated; the purepng branch needs no library and is
+pytest-pinned end-to-end.
 
 Pattern note: keep binary columns OUT of shuffles — derive features early,
 write them to their own table, and join by id. ``html`` in the ER pipeline
@@ -122,21 +121,6 @@ def _video_backend() -> str | None:
         return None
 
 
-def _mode(decoder: str | None, use_fake_decoder: bool | None) -> str:
-    """Resolve the effective decode mode.
-
-    ``decoder`` wins when given; otherwise the legacy ``use_fake_decoder``
-    flag (only when EXPLICITLY passed) maps True->'fake', False->'real';
-    with neither given the default is 'auto' — real codecs picked up when
-    the executor has them, deterministic fakes otherwise (matches the
-    module docstring)."""
-    if decoder is not None:
-        return decoder
-    if use_fake_decoder is not None:
-        return "fake" if use_fake_decoder else "real"
-    return "auto"
-
-
 def _resolve(mode: str, backend: str | None, what: str) -> str:
     """-> 'fake' or the backend name. Raises for decoder='real' w/o codec.
 
@@ -187,8 +171,7 @@ def decode_image_features(
     df: DataFrame,
     id_col: str = "id",
     bin_col: str = "payload",
-    use_fake_decoder: bool | None = None,
-    decoder: str | None = None,
+    decoder: str = "auto",
 ) -> DataFrame:
     """binary -> fixed-width feature vector + real-or-fake ``kernel`` tag.
 
@@ -200,13 +183,12 @@ def decode_image_features(
     to fakes is exactly what 'real' exists to prevent. The fake kernel is
     a deterministic 16-bin byte histogram.
     """
-    mode = _mode(decoder, use_fake_decoder)
-    strict = mode == "real"  # real = decode for real or FAIL, never fake
-    _resolve(mode, _image_backend(), "image decoding")  # fast driver-side fail
+    strict = decoder == "real"  # real = decode for real or FAIL, never fake
+    _resolve(decoder, _image_backend(), "image decoding")  # fast driver-side fail
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # re-resolve on the EXECUTOR: its codec environment governs
-        kernel = _resolve(mode, _image_backend(), "image decoding")
+        kernel = _resolve(decoder, _image_backend(), "image decoding")
         if kernel == "pil":
             import io
 
@@ -276,8 +258,7 @@ def resize_images(
     target_h: int = 64,
     id_col: str = "id",
     bin_col: str = "payload",
-    use_fake_decoder: bool | None = None,
-    decoder: str | None = None,
+    decoder: str = "auto",
 ) -> DataFrame:
     """binary -> fixed-size binary + dims + ``kernel`` tag.
 
@@ -288,9 +269,8 @@ def resize_images(
     bytes, like decode_image_features.
     """
     out_len = target_w * target_h
-    mode = _mode(decoder, use_fake_decoder)
-    strict = mode == "real"
-    _resolve(mode, _image_backend(), "image resizing")  # fast driver-side fail
+    strict = decoder == "real"
+    _resolve(decoder, _image_backend(), "image resizing")  # fast driver-side fail
 
     def _fake(b) -> bytes:
         if b is None or len(b) == 0:
@@ -300,7 +280,7 @@ def resize_images(
         return arr[idx].tobytes()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = _resolve(mode, _image_backend(), "image resizing")
+        kernel = _resolve(decoder, _image_backend(), "image resizing")
         if kernel == "pil":
             import io
 
@@ -365,8 +345,7 @@ def sample_video_frames(
     n_frames: int = 4,
     id_col: str = "id",
     bin_col: str = "payload",
-    use_fake_decoder: bool | None = None,
-    decoder: str | None = None,
+    decoder: str = "auto",
 ) -> DataFrame:
     """binary video -> one row per sampled frame (1 -> N batch shape).
 
@@ -378,9 +357,8 @@ def sample_video_frames(
     produce zero rows — exactly how a corrupt video behaves; a payload that
     fails real decoding falls back to fake strides for that row.
     """
-    mode = _mode(decoder, use_fake_decoder)
-    strict = mode == "real"
-    _resolve(mode, _video_backend(), "frame sampling")  # fast driver-side fail
+    strict = decoder == "real"
+    _resolve(decoder, _video_backend(), "frame sampling")  # fast driver-side fail
 
     def _fake_rows(rid, b, ids, idxs, frames, ks):
         arr = np.frombuffer(b, dtype=np.uint8)
@@ -393,7 +371,7 @@ def sample_video_frames(
             ks.append("fake")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = _resolve(mode, _video_backend(), "frame sampling")
+        kernel = _resolve(decoder, _video_backend(), "frame sampling")
         if kernel == "imageio":
             import imageio.v3 as iio
         for pdf in batches:

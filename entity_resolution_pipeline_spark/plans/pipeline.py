@@ -7,10 +7,10 @@
 Lifecycle mirrors the reference pipeline (/root/reference/src/pipeline.py:98-190):
 a graph of named stages (``STAGE_TABLES``), each `read -> transform -> write
 its tables` in ``ERPipeline._run_stage`` and skipped on resume when all its
-tables are committed and the manifest holds an ok row for the same input
-fingerprint (the reference's src/pipeline.py:230-261). Branches that do not
-depend on each other run side by side on one thread pool per run: dims and
-train beside blocking -> pairs, and a stage's tables beside each other.
+tables are committed and the manifest holds an ok row for the same
+``resume_key`` (the reference's src/pipeline.py:230-261). Branches that do
+not depend on each other run side by side on one thread pool per run: dims
+and train beside blocking -> pairs, and a stage's tables beside each other.
 Every stage appends per-partition lineage + metrics rows (north_rule); the
 manifest and the row counts reported here come from parquet footers on the
 driver, so bookkeeping runs no Spark job. The other values a run reports
@@ -93,6 +93,16 @@ SCORE_REPARTITION_MIN_PAIRS = 2_000_000
 JOB_GROUP = "spark.jobGroup.id"
 
 
+def resume_key(upstream: str, stage: str, *reads) -> str:
+    """A stage's resume key: its upstream stage's key, its name, then the
+    values it reads beyond its upstream tables (config fields, the model
+    digest, the labels' fingerprint). Resume assumes every stage's output
+    is a deterministic function of its key, so a stage recomputed at an
+    unchanged key leaves later stages' keys, and their skips, as they were.
+    The root is the file fingerprint of the committed ``records``."""
+    return "|".join(str(v) for v in (upstream, stage, *reads))
+
+
 @dataclass
 class ERConfig:
     decision_threshold: float = 0.90   # config.yml:129
@@ -124,25 +134,14 @@ class ERPipeline:
 
     # ---------- stage runner ----------
 
-    def _table_fp(self, df: DataFrame, key_cols: list[str]) -> str:
-        """Resume fingerprint for an INTERNAL catalog table: the stat-only
-        file-manifest hash when the table is file-backed (it always is in
-        the warehouse; in-memory only in unit-test paths), else the content
-        hash. Internal tables are rewritten exactly when their stage reran,
-        so the manifest is the right granularity — and probing it never
-        re-scans a table that can be arbitrarily large. Conservative by
-        design: a byte-identical rewrite changes the manifest and recomputes
-        downstream (the input itself changed in that case anyway)."""
-        return fingerprint_files(df) or fingerprint_df(df, key_cols)
-
-    def _stored(self, stage: str, input_fp: str, observes: bool = False) -> dict | None:
+    def _stored(self, stage: str, key: str, observes: bool = False) -> dict | None:
         """The values a completed stage recorded (``{}`` if it observes
         none), or None when it has to run: a table is not committed, no ok
-        row counts for this input, or an observing stage's row has none."""
+        row counts for this key, or an observing stage's row has none."""
         if not (all(self.catalog.exists(t) for t in STAGE_TABLES[stage])
-                and self.manifest.stage_complete(stage, input_fp)):
+                and self.manifest.stage_complete(stage, key)):
             return None
-        return self.manifest.observed(stage, input_fp) if observes else {}
+        return self.manifest.observed(stage, key) if observes else {}
 
     def _submit(self, pool: ThreadPoolExecutor, fn, *args) -> Future:
         """``fn(*args)`` on ``pool``, with this thread's Spark local
@@ -162,7 +161,7 @@ class ERPipeline:
         finally:
             sc.setLocalProperty(JOB_GROUP, outer_group)
 
-    def _run_stage(self, pool: ThreadPoolExecutor, stage: str, input_fp: str | None,
+    def _run_stage(self, pool: ThreadPoolExecutor, stage: str, key: str | None,
                    rows_in: int | None, build_df, force: bool = False,
                    obs: Observation | None = None) -> DataFrame:
         """Write ``stage``'s tables unless it is done; returns its first
@@ -170,6 +169,10 @@ class ERPipeline:
         ``STAGE_TABLES[stage]``, as a tuple when there are several; the
         tables are written together, the first on this thread and the rest
         on ``pool``, and an error is raised once every write has finished.
+
+        ``key`` is the stage's ``resume_key``: a new ``ERConfig`` field, or
+        any other value a stage reads, goes into the key of the stage that
+        reads it, or a rerun with it changed serves the old tables.
 
         A computed stage appends a ``started`` row before it writes and its
         ok rows once all its tables are committed, so a run killed in
@@ -181,16 +184,16 @@ class ERPipeline:
         computed by the writes; its values (Decimals as strings) go on the
         ok rows and into ``self.observed[stage]``. A skipped stage takes
         them from its ok row; one whose row carries none runs again. With
-        ``input_fp`` None the stage fingerprints its own input: it runs, and
+        ``key`` None the stage fingerprints its own input: it runs, and
         its ok rows carry the ``n`` and ``content_fingerprint`` of the
         ``content_aggs`` it observed, so no separate scan labels them."""
         tables = STAGE_TABLES[stage]
         stored = None
-        if not force and input_fp is not None:
-            stored = self._stored(stage, input_fp, observes=obs is not None)
+        if not force and key is not None:
+            stored = self._stored(stage, key, observes=obs is not None)
         if stored is not None:
             self.observed[stage] = stored
-            self.manifest.record_skipped(stage, input_fp)
+            self.manifest.record_skipped(stage, key)
             return self.catalog.read(tables[0])
         self.manifest.record_started(stage)
         with self._job_group(stage):
@@ -210,9 +213,9 @@ class ERPipeline:
         if obs is not None:
             observed = {k: str(v) if isinstance(v, Decimal) else v for k, v in obs.get.items()}
             self.observed[stage] = observed
-        if input_fp is None:
-            rows_in, input_fp = observed["n"], content_fingerprint(observed)
-        self.manifest.record_stage(stage, tables[0], rows_in, wall_ms, input_fp,
+        if key is None:
+            rows_in, key = observed["n"], content_fingerprint(observed)
+        self.manifest.record_stage(stage, tables[0], rows_in, wall_ms, key,
                                    observed=observed)
         return self.catalog.read(tables[0])
 
@@ -237,19 +240,19 @@ class ERPipeline:
         #    never scans it. The parquet-dir analogue of comparing Iceberg
         #    snapshot ids.
         # 2. content level — only when the manifest changed (or the input is
-        #    not file-backed): xxhash64(url,text) aggregate. Content-
-        #    sensitive, catches rewritten-but-identical files, costs a scan
-        #    when records are committed (else the records write observes it).
+        #    not file-backed): an xxhash64 aggregate over every column
+        #    preprocess reads (PAGE_COLUMNS). Catches rewritten-but-identical
+        #    files; costs a scan when records are committed (else the
+        #    records write observes it).
         meta_fp = fingerprint_files(web_pages)
         done_fp = None  # the fingerprint the committed records match, if any
         if not force and meta_fp is not None and self._stored("preprocess", meta_fp) is not None:
             done_fp = meta_fp
         elif not force and self.catalog.exists("records"):
-            # content-sensitive fingerprint: url alone would silently reuse
-            # stale records when the same urls arrive with changed text.
             # With no committed records (or force) no stored row can match
-            # it, so no scan runs: the records write observes it instead.
-            content_fp = fingerprint_df(web_pages, ["url", "text"])
+            # the content fingerprint, so no scan runs: the records write
+            # observes it instead.
+            content_fp = fingerprint_df(web_pages, PAGE_COLUMNS)
             if self._stored("preprocess", content_fp) is not None:
                 done_fp = content_fp
         if done_fp is not None:
@@ -262,7 +265,7 @@ class ERPipeline:
                 # observed after the repartition, in the write's own stage,
                 # whose tasks count once however often they are retried
                 src = ensure_parallelism(web_pages.select(*PAGE_COLUMNS))
-                return derive_records(src.observe(pages_obs, *content_aggs(["url", "text"])))
+                return derive_records(src.observe(pages_obs, *content_aggs(PAGE_COLUMNS)))
 
             records = self._run_stage(pool, "preprocess", None, None, build_records,
                                       obs=pages_obs)
@@ -272,20 +275,23 @@ class ERPipeline:
             self.manifest.record_alias("preprocess", meta_fp)
         n_pages = self.catalog.num_rows("records")
 
-        rec_fp = self._table_fp(records, ["url", "person_h"])
+        # every later key chains from the committed records' files: the same
+        # whichever level skipped preprocess
+        rec_fp = fingerprint_files(records)
 
         # dims and train read only the records and the labels, so they run
         # beside blocking -> pairs; train is joined before score, dims
         # before the run returns.
         # dedup dimensions: one (hash, field) table; A1, A2 and A4 reduce it
-        dims = self._submit(pool, self._run_stage, pool, "dims", rec_fp + "|dims", n_pages,
-                            lambda: field_hash_mapping(strings_long(records)), force)
+        dims = self._submit(pool, self._run_stage, pool, "dims", resume_key(rec_fp, "dims"),
+                            n_pages, lambda: field_hash_mapping(strings_long(records)), force)
         trained = None
         if labeled_pairs is not None:
             def train_stage():
-                lp_fp = self._table_fp(labeled_pairs, ["left", "right", "match"])
-                train_fp = (f"{rec_fp}|train|{lp_fp}|{cfg.train_frac}|{cfg.seed}"
-                            f"|{cfg.rfe_min_features}|{cfg.decision_threshold}")
+                lp_fp = (fingerprint_files(labeled_pairs)
+                         or fingerprint_df(labeled_pairs, ["left", "right", "match"]))
+                train_key = resume_key(rec_fp, "train", lp_fp, cfg.train_frac, cfg.seed,
+                                       cfg.rfe_min_features, cfg.decision_threshold)
 
                 def build_model():
                     model = self.train(records, labeled_pairs)
@@ -296,22 +302,23 @@ class ERPipeline:
                         F.lit(json.dumps(metrics)).alias("metrics"),
                     )
 
-                self._run_stage(pool, "train", train_fp, -1, build_model, force)
+                self._run_stage(pool, "train", train_key, -1, build_model, force)
 
             trained = self._submit(pool, train_stage)
 
+        blocking_key = resume_key(rec_fp, "blocking", cfg.lsh_num_perm, cfg.lsh_bands)
         keys = self._run_stage(
-            pool, "blocking", rec_fp, n_pages,
+            pool, "blocking", blocking_key, n_pages,
             lambda: B.all_blocking_keys(records, num_perm=cfg.lsh_num_perm, bands=cfg.lsh_bands),
             force,
         )
 
-        keys_fp = self._table_fp(keys, ["url", "key"])
+        pairs_key = resume_key(blocking_key, "pairs", cfg.max_block_size)
         # oversized blocks are a table of their own, so a resumed run (pairs
         # stage skipped) still reports them; metrics keeps only a bounded
         # sample — at 100 TB the full list can itself be large.
         pairs = self._run_stage(
-            pool, "pairs", keys_fp, -1,
+            pool, "pairs", pairs_key, -1,
             lambda: B.candidate_pairs(keys, max_block_size=cfg.max_block_size),
             force,
         )
@@ -331,11 +338,9 @@ class ERPipeline:
         model = LRModel.from_dict(json.loads(stored["model"]))
         self.metrics.update(json.loads(stored["metrics"]))
 
-        # the score-stage fingerprint mixes in the model digest: retraining
-        # with new labels must invalidate cached scored_pairs even when the
-        # blocking keys are unchanged.
-        model_fp = model.digest()
-        score_fp = f"{keys_fp}|score|{model_fp}"
+        # retraining with new labels must invalidate cached scored_pairs even
+        # when the pairs are unchanged
+        score_key = resume_key(pairs_key, "score", model.digest())
 
         # the dup ratio (pair rows per distinct field tuple) is observed by
         # the scored_pairs write itself; HLL registers merge by max, so a
@@ -354,7 +359,7 @@ class ERPipeline:
             )
 
         t_score0 = time.time()
-        scored = self._run_stage(pool, "score", score_fp, int(n_pairs), build_scores, force,
+        scored = self._run_stage(pool, "score", score_key, int(n_pairs), build_scores, force,
                                  score_obs)
         self.metrics["score_wall_s"] = time.time() - t_score0
         self.metrics["score_dup_ratio"] = round(n_pairs / max(1, self.observed["score"]["d"]), 3)
@@ -362,8 +367,9 @@ class ERPipeline:
             n_pairs / self.metrics["score_wall_s"] if self.metrics["score_wall_s"] > 0 else None
         )
 
+        edges_key = resume_key(score_key, "edges", cfg.min_edge_weight, cfg.decision_threshold)
         edges = self._run_stage(
-            pool, "edges", score_fp + "|edges", int(n_pairs),
+            pool, "edges", edges_key, int(n_pairs),
             lambda: C.build_edges(scored, cfg.min_edge_weight, cfg.decision_threshold), force,
         )
 
@@ -379,8 +385,8 @@ class ERPipeline:
             )
 
         clusters = self._run_stage(
-            pool, "cluster", score_fp + "|cluster", int(n_pairs), build_clusters, force,
-            cluster_obs)
+            pool, "cluster", resume_key(edges_key, "cluster"), int(n_pairs), build_clusters,
+            force, cluster_obs)
 
         evaluation = (self.evaluate(clusters, labeled_pairs, pairs)
                       if labeled_pairs is not None else None)

@@ -47,8 +47,12 @@ def build_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # C1-only JIT: C2 recompiling Spark's planner buys nothing on short runs
-        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        # C1-only JIT: C2 recompiling Spark's planner buys nothing on short runs.
+        # C1-only caps the code cache at 48 MB, which back-to-back runs in one
+        # session reach (the JIT then flushes code, or stops when full); 240m
+        # is the tiered default.
+        .config("spark.driver.defaultJavaOptions",
+                "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Sequence
 from datetime import datetime, timezone
 
 import pyarrow as pa
@@ -424,7 +425,7 @@ def fingerprint_files(df: DataFrame, stat_fn=None) -> str | None:
     return f"meta:{len(files)}:{h.hexdigest()}"
 
 
-def content_aggs(key_cols: list[str]) -> list[Column]:
+def content_aggs(key_cols: Sequence[str]) -> list[Column]:
     """The aggregates a content fingerprint is made of: the row count ``n``
     and the decimal sum ``s`` of xxhash64(keys), order-insensitive. An
     ``agg`` or an ``observe`` on the write computes them alike."""
@@ -438,7 +439,7 @@ def content_fingerprint(values) -> str:
     return f"{values['n']}:{values['s']}"
 
 
-def fingerprint_df(df: DataFrame, key_cols: list[str]) -> str:
+def fingerprint_df(df: DataFrame, key_cols: Sequence[str]) -> str:
     """Order-insensitive content fingerprint of ``df`` over ``key_cols``.
 
     One cheap agg job; used as the manifest ``input_fingerprint`` so resume

@@ -763,8 +763,6 @@ class TestMultimodal:
         assert _video_backend() is None
         with _pytest.raises(NotImplementedError):
             sample_video_frames(df, decoder="real").collect()
-        with _pytest.raises(NotImplementedError):
-            sample_video_frames(df, use_fake_decoder=False).collect()
 
     def test_purepng_codec_roundtrip_and_filters(self):
         """Vendored PNG codec: encode->decode roundtrip is bit-exact for

@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import N_ENT
 
+from entity_resolution_pipeline_spark.operators.preprocess import PAGE_COLUMNS
 from entity_resolution_pipeline_spark.plans.pipeline import (
     STAGE_TABLES,
     STAGES,
@@ -78,7 +79,7 @@ def test_observed_values_equal_count_jobs(pipeline_run):
 
     pipe, result, wp, *_ = pipeline_run
     seen = pipe.observed
-    assert content_fingerprint(seen["preprocess"]) == fingerprint_df(wp, ["url", "text"])
+    assert content_fingerprint(seen["preprocess"]) == fingerprint_df(wp, PAGE_COLUMNS)
     assert seen["preprocess"]["n"] == result["n_pages"]
     assert seen["cluster"]["n_clusters"] == result["n_clusters"]
 
@@ -133,7 +134,7 @@ def test_observed_records_write_adds_no_job(spark, tmp_path):
         (F.col("stage") == "preprocess") & (F.col("status") == "ok")
     )
     assert {r["input_fingerprint"] for r in pre.collect()} == {
-        fingerprint_df(wp, ["url", "text"])
+        fingerprint_df(wp, PAGE_COLUMNS)
     }
 
 
@@ -350,6 +351,14 @@ def _record_writes_and_training(monkeypatch) -> list:
     return calls
 
 
+def _statuses(pipe) -> dict:
+    """stage -> the set of statuses this run recorded for it."""
+    got: dict = {}
+    for r in pipe.manifest.read().where(F.col("run_id") == pipe.manifest.run_id).collect():
+        got.setdefault(r["stage"], set()).add(r["status"])
+    return got
+
+
 def _skipped_stages(pipe) -> set:
     m = pipe.manifest.read().where(
         (F.col("run_id") == pipe.manifest.run_id) & (F.col("status") == "skipped")
@@ -548,25 +557,95 @@ def test_resume_retrain_invalidates_scores(spark, tmp_path_factory):
     assert scores1 != scores2, "flipped labels must change model scores"
 
 
-def test_resume_recomputes_uncommitted_table(spark, tmp_path_factory):
+@pytest.fixture(scope="module")
+def parquet_pages(spark, tmp_path_factory):
+    """40 entities' pages as a parquet input, so preprocess resumes on its
+    file metadata, and their labels."""
+    src = str(tmp_path_factory.mktemp("wp_parquet40"))
+    web_pages_df(spark, 40).write.mode("overwrite").parquet(src)
+    return src, spark.createDataFrame(labeled_pairs_pdf(40, 200))
+
+
+# field -> (a new value, the stages a rerun with it recomputes)
+CONFIG_CHANGES = {
+    "lsh_num_perm": (16, {"blocking", "pairs", "score", "edges", "cluster"}),
+    "lsh_bands": (4, {"blocking", "pairs", "score", "edges", "cluster"}),
+    "max_block_size": (8, {"pairs", "score", "edges", "cluster"}),
+    "min_edge_weight": (0.95, {"edges", "cluster"}),
+    # train reads the threshold for its test metrics only: same model digest
+    "decision_threshold": (0.999, {"train", "edges", "cluster"}),
+}
+
+
+@pytest.mark.parametrize("field", list(CONFIG_CHANGES))
+def test_resume_recomputes_on_config_change(field, spark, parquet_pages, tmp_path_factory):
+    """A rerun with one ``ERConfig`` field changed recomputes the first
+    stage that reads it and every stage after it in the chain, and skips
+    the others."""
+    from dataclasses import replace
+
+    value, recomputed = CONFIG_CHANGES[field]
+    src, lp = parquet_pages
+    wh = str(tmp_path_factory.mktemp(f"erp_wh_cfg_{field}"))
+    ERPipeline(spark, wh, ERConfig()).run(spark.read.parquet(src), lp)
+    cfg = replace(ERConfig(), **{field: value})
+    pipe2 = ERPipeline(spark, wh, cfg)
+    pipe2.run(spark.read.parquet(src), lp)
+    assert _statuses(pipe2) == {
+        s: {"started", "ok"} if s in recomputed else {"skipped"} for s in STAGES
+    }
+    if field == "min_edge_weight":
+        fresh = ERPipeline(spark, str(tmp_path_factory.mktemp("erp_wh_cfg_fresh")), cfg)
+        fresh.run(spark.read.parquet(src), lp)
+        got, want = pipe2.catalog.read("clusters"), fresh.catalog.read("clusters")
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_resume_recomputes_on_page_column_change(spark, tmp_path_factory):
+    """An input rewritten with the same url and text but another ``lang``
+    recomputes preprocess: the content key covers every column it reads."""
+    src = str(tmp_path_factory.mktemp("wp_lang"))
+    wp = web_pages_df(spark, 40)
+    wp.write.mode("overwrite").parquet(src)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    wh = str(tmp_path_factory.mktemp("erp_wh_lang"))
+    ERPipeline(spark, wh, ERConfig()).run(spark.read.parquet(src), lp)
+
+    wp.withColumn("lang", F.lit("xx")).write.mode("overwrite").parquet(src)
+    pipe2 = ERPipeline(spark, wh, ERConfig())
+    pipe2.run(spark.read.parquet(src), lp)
+    assert _statuses(pipe2)["preprocess"] == {"started", "ok"}
+    langs = pipe2.catalog.read("records").select("lang").distinct().collect()
+    assert [r["lang"] for r in langs] == ["xx"]
+
+
+@pytest.mark.parametrize("table", ["scored_pairs", "blocking_keys"])
+def test_resume_recomputes_uncommitted_table(table, spark, tmp_path_factory):
     """A table without ``_SUCCESS`` (left by a killed overwrite) is not a
     completed stage, even when the manifest holds an ok row for the same
-    input fingerprint: the stage reruns instead of being skipped."""
+    resume key: the stage reruns instead of being skipped. It reruns at an
+    unchanged key, so every other stage is skipped, and the pair, score,
+    edge and cluster tables still equal the clean run's."""
     import os
 
     wh = str(tmp_path_factory.mktemp("erp_wh_uncommitted"))
     wp = web_pages_df(spark, 40)
     lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
-    ERPipeline(spark, wh, ERConfig()).run(wp, lp)
-    os.remove(os.path.join(wh, "scored_pairs", "_SUCCESS"))
+    pipe = ERPipeline(spark, wh, ERConfig())
+    pipe.run(wp, lp)
+    later = ("candidate_pairs", "scored_pairs", "edges", "clusters")
+    clean = {t: sorted(pipe.catalog.read(t).collect()) for t in later}
+    os.remove(os.path.join(wh, table, "_SUCCESS"))
 
     pipe2 = ERPipeline(spark, wh, ERConfig())
     pipe2.run(wp, lp)
-    m2 = pipe2.manifest.read().where(
-        (F.col("run_id") == pipe2.manifest.run_id) & (F.col("stage") == "score")
-    )
-    assert {r["status"] for r in m2.collect()} == {"started", "ok"}
-    assert os.path.isfile(os.path.join(wh, "scored_pairs", "_SUCCESS"))
+    stage = next(s for s, tables in STAGE_TABLES.items() if table in tables)
+    assert _statuses(pipe2) == {
+        **{s: {"skipped"} for s in STAGES}, stage: {"started", "ok"}
+    }
+    assert os.path.isfile(os.path.join(wh, table, "_SUCCESS"))
+    for t in later:
+        assert sorted(pipe2.catalog.read(t).collect()) == clean[t], t
 
 
 @pytest.mark.parametrize("stage", ["score", "pairs"])
@@ -830,14 +909,14 @@ def test_failed_branch_waits_for_writes_and_resumes(spark, tmp_path_factory, mon
 @pytest.mark.parametrize("force", [False, True])
 def test_cold_fingerprint_labels_preprocess_row(force, spark, tmp_path):
     """When no stored row can match (an empty warehouse, or ``force``), the
-    content fingerprint runs beside the records write; the preprocess ok
-    rows still carry exactly ``fingerprint_df``'s string, and ``n_pages``
-    is the row count it starts with."""
+    records write observes the content fingerprint; the preprocess ok rows
+    still carry exactly ``fingerprint_df``'s string, and ``n_pages`` is the
+    row count it starts with."""
     from entity_resolution_pipeline_spark.sources.catalog import fingerprint_df
 
     wp = web_pages_df(spark, 40)
     lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
-    want = fingerprint_df(wp, ["url", "text"])
+    want = fingerprint_df(wp, PAGE_COLUMNS)
     if force:
         ERPipeline(spark, str(tmp_path), ERConfig()).run(wp, lp)
     pipe = ERPipeline(spark, str(tmp_path), ERConfig())
@@ -1258,6 +1337,7 @@ def test_resume_recomputes_old_layout_dims(spark, tmp_path_factory):
     column, with a dims ok row at the records fingerprint, recomputes dims
     instead of skipping it, and ``impute`` then reads the new table."""
     from entity_resolution_pipeline_spark.operators.preprocess import strings_long
+    from entity_resolution_pipeline_spark.sources.catalog import fingerprint_files
 
     wh = str(tmp_path_factory.mktemp("erp_wh_old_dims"))
     wp = web_pages_df(spark, 40)
@@ -1267,7 +1347,7 @@ def test_resume_recomputes_old_layout_dims(spark, tmp_path_factory):
     records = pipe.catalog.read("records")
     old_fhm = strings_long(records).groupBy("hash", "field").agg(F.count(F.lit(1)).alias("cnt"))
     pipe.catalog.write(old_fhm, "field_hash_mapping")
-    rec_fp = pipe._table_fp(records, ["url", "person_h"])
+    rec_fp = fingerprint_files(records)
     Manifest(pipe.catalog, run_id="old-layout").record_stage(
         "dims", "field_hash_mapping", -1, 0, rec_fp
     )

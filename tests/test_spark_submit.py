@@ -93,17 +93,24 @@ def test_spark_submit_pyfiles_two_parallelism_levels(tmp_path):
     assert r2["evaluation"]["blocked_pairs"] == r8["evaluation"]["blocked_pairs"]
 
 
-def _jit_tier(jvm) -> str:
+def _vm_option(jvm, name: str) -> str:
     mx = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
-    return mx.getVMOption("TieredStopAtLevel").getValue()
+    return mx.getVMOption(name).getValue()
 
 
 def test_build_spark_driver_jvm_is_c1_only(spark):
     """``build_spark`` starts the driver JVM with ``-XX:TieredStopAtLevel=1``
     (C1 only); HotSpot's default is 4 (C1 then C2)."""
-    assert _jit_tier(spark.sparkContext._jvm) == "1"
+    assert _vm_option(spark.sparkContext._jvm, "TieredStopAtLevel") == "1"
+
+
+def test_build_spark_driver_code_cache_is_tiered_default(spark):
+    """The C1-only driver JVM keeps the tiered code cache size, 240 MB:
+    C1-only alone caps it at 48 MB, which a long session fills, and HotSpot
+    then turns the JIT compiler off."""
+    assert _vm_option(spark.sparkContext._jvm, "ReservedCodeCacheSize") == "251658240"
 
 
 _CALLER_JVM_OPTS = """
@@ -179,7 +186,9 @@ def test_run_writes_only_stage_tables(pipeline_run):
 def test_erconfig_field_inventory():
     """``ERConfig`` has exactly these fields. A new field is a new option;
     it has to be added here on purpose, with the measurement that
-    justifies it."""
+    justifies it, and into the ``resume_key`` of the stage that reads it
+    (``ERPipeline._run_stage``), or a rerun with it changed serves the old
+    tables."""
     from dataclasses import fields
 
     from entity_resolution_pipeline_spark.plans.pipeline import ERConfig

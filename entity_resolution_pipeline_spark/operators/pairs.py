@@ -461,53 +461,42 @@ def with_pair_key(df: DataFrame) -> DataFrame:
 
     The eq flags keep the 39-char decimal hash strings out of the Arrow
     transfer to the scoring kernel (they exist only for equality tests).
+    Few projections: each PySpark call analyzes the plan built so far.
     """
-    out = df.withColumn(
-        "pair_key",
-        F.sha1(
-            F.concat_ws(
-                "",
-                *[F.coalesce(F.col(f + "_h1"), F.lit("NULL")) for f in FIELDS],
-                *[F.coalesce(F.col(f + "_h2"), F.lit("NULL")) for f in FIELDS],
-            )
-        ),
-    )
-    for f in FIELDS:
-        out = out.withColumn(
-            f + "_eq",
-            F.coalesce(F.col(f + "_h1") == F.col(f + "_h2"), F.lit(False)),
-        )
+    hashes = [f + s for s in ("_h1", "_h2") for f in FIELDS]
+    pair_key = F.sha1(F.concat_ws("", *[F.coalesce(F.col(h), F.lit("NULL")) for h in hashes]))
+    eq = {f: F.coalesce(F.col(f + "_h1") == F.col(f + "_h2"), F.lit(False)) for f in FIELDS}
     # person Levenshtein similarity JVM-side (whole-stage codegen) — the
     # heaviest round-1 Python kernel. person_eq short-circuits to 1.0: the
     # reference looks both sides up from unique_strings by normalized hash,
     # so hash-equal pairs compare one shared representative (sim 1.0).
     p1, p2 = F.col("person1"), F.col("person2")
+    both = p1.isNotNull() & p2.isNotNull()
     max_len = F.greatest(F.length(p1), F.length(p2))
-    lev_sim = F.when(F.col("person_eq"), F.lit(1.0)).otherwise(
+    lev_sim = F.when(eq["person"], F.lit(1.0)).otherwise(
         F.when(max_len == 0, F.lit(1.0)).otherwise(
             F.lit(1.0) - F.levenshtein(p1, p2).cast("double") / max_len.cast("double")
         )
     )
-    out = out.withColumn(
-        "person_lev",
-        F.when(p1.isNotNull() & p2.isNotNull(), lev_sim).otherwise(
-            F.lit(None).cast("double")
-        ),
-    )
-    # P12 person-dissimilarity auto-FALSE (parallel_features.py:1044-1110):
-    # both sides present and (max_len == 0 or lev < 0.3)
-    out = out.withColumn(
-        "pf_false",
-        F.when(
-            p1.isNotNull() & p2.isNotNull(),
-            (max_len == 0) | (F.col("person_lev") < 0.3),
-        ).otherwise(F.lit(False)),
-    )
+    person_lev = F.when(both, lev_sim).otherwise(F.lit(None).cast("double"))
     # the 39-char hash strings exist only to derive pair_key + eq flags:
     # nothing downstream reads them, and leaving them in made every
     # materialized pair_fields table (and its re-read) carry ~20 dead
     # string columns per row
-    return out.drop(*[f + "_h1" for f in FIELDS], *[f + "_h2" for f in FIELDS])
+    out = df.select(
+        *[c for c in df.columns if c not in hashes],
+        pair_key.alias("pair_key"),
+        *[eq[f].alias(f + "_eq") for f in FIELDS],
+        person_lev.alias("person_lev"),
+    )
+    # P12 person-dissimilarity auto-FALSE (parallel_features.py:1044-1110):
+    # both sides present and (max_len == 0 or lev < 0.3). A projection of
+    # its own: in the one above, the optimizer pushes ``< 0.3`` into
+    # person_lev's CASE and codegen runs levenshtein twice per row.
+    return out.withColumn(
+        "pf_false",
+        F.when(both, (max_len == 0) | (F.col("person_lev") < 0.3)).otherwise(F.lit(False)),
+    )
 
 
 def _kernel_pass(df: DataFrame, passthrough: tuple[str, ...],
@@ -574,14 +563,6 @@ def attach_pair_fields(pairs: DataFrame, records: DataFrame) -> DataFrame:
     scale Catalyst broadcasts it.
     """
     side_cols = ["url"] + FIELDS + [f + "_h" for f in FIELDS]
-    r1 = records.select(
-        *[F.col(c).alias(c + "1" if c != "url" else "url1") for c in side_cols]
-    )
-    r1 = r1.select("url1", *[F.col(f + "1").alias(f + "1") for f in FIELDS],
-                   *[F.col(f + "_h1").alias(f + "_h1") for f in FIELDS])
-    r2 = records.select(
-        *[F.col(c).alias(c + "2" if c != "url" else "url2") for c in side_cols]
-    )
-    r2 = r2.select("url2", *[F.col(f + "2").alias(f + "2") for f in FIELDS],
-                   *[F.col(f + "_h2").alias(f + "_h2") for f in FIELDS])
+    r1 = records.select(*[F.col(c).alias(c + "1") for c in side_cols])
+    r2 = records.select(*[F.col(c).alias(c + "2") for c in side_cols])
     return pairs.join(r1, "url1").join(r2, "url2")

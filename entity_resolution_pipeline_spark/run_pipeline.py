@@ -2,6 +2,8 @@
 
     zip -r erp.zip entity_resolution_pipeline_spark
     spark-submit --py-files erp.zip \
+        --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
+        --conf spark.sql.icu.caseMappings.enabled=false \
         entity_resolution_pipeline_spark/run_pipeline.py \
         --warehouse /path/wh --entities 3000 [--input /path/web_pages_parquet]
 
@@ -9,7 +11,9 @@ Prints one JSON line with counts, metrics, and evaluation. The session is a
 bare ``SparkSession.builder``: its config comes from the submit command, so
 locally it runs on Spark's defaults, not ``build_spark``'s. spark-submit
 starts the driver JVM before any Python runs, so a short local submit needs
-``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1`` itself.
+the C1-only ``defaultJavaOptions`` itself. A submit without
+``spark.sql.icu.caseMappings.enabled=false`` lowercases with ICU4J and pays
+its ~2 s first-use stall in the first job that calls ``lower()``.
 """
 
 from __future__ import annotations

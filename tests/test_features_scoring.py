@@ -167,6 +167,42 @@ class TestBatchKernel:
             assert p == pref[i], (i, row, p, pref[i])
             np.testing.assert_allclose(X[i], np.asarray(fv), atol=1e-12, err_msg=str((i, row)))
 
+    def test_pair_fields_columns_and_jvm_flags(self, spark):
+        """``with_pair_key(attach_pair_fields(...))`` yields the scoring
+        input's columns in this order, with these types, and its JVM-side
+        eq flags, ``person_lev`` and ``pf_false`` equal the formulas
+        ``_fuzz_pair_data`` emulates."""
+        from entity_resolution_pipeline_spark.operators.pairs import (
+            attach_pair_fields,
+            with_pair_key,
+        )
+
+        n = 200
+        data = _fuzz_pair_data(n, seed=5)
+        recs = [
+            (f"{side}{i}", *[data[f + k][i] for f in FIELDS],
+             *[None if data[f + k][i] is None else hash_string(data[f + k][i]) for f in FIELDS])
+            for i in range(n) for side, k in (("a", "1"), ("b", "2"))
+        ]
+        records = spark.createDataFrame(recs, "url string, " + ", ".join(
+            [f"{f} string" for f in FIELDS] + [f"{f}_h string" for f in FIELDS]))
+        pairs = spark.createDataFrame([(f"a{i}", f"b{i}") for i in range(n)], "url1 string, url2 string")
+        wide = with_pair_key(attach_pair_fields(pairs, records))
+
+        assert [(c.name, c.dataType.simpleString()) for c in wide.schema] == [
+            ("url2", "string"), ("url1", "string"),
+            *[(f + "1", "string") for f in FIELDS],
+            *[(f + "2", "string") for f in FIELDS],
+            ("pair_key", "string"),
+            *[(f + "_eq", "boolean") for f in FIELDS],
+            ("person_lev", "double"), ("pf_false", "boolean"),
+        ]
+        flags = [f + "_eq" for f in FIELDS] + ["person_lev", "pf_false"]
+        got = {int(r["url1"][1:]): r for r in wide.select("url1", *flags).collect()}
+        assert len(got) == n
+        for i, r in got.items():
+            assert [r[c] for c in flags] == [data[c][i] for c in flags], i
+
     def test_jvm_featurize_matches_rowwise_fuzz(self, spark):
         """The Arrow ``featurize`` plan (one mapInPandas pass over the pair
         rows) must agree with the row-wise reference on the same fuzzed rows."""

@@ -214,6 +214,42 @@ def test_normalize_col_matches_normalize_text_every_code_point(spark):
     assert mismatched.count() == 0, [hex(r["cp"]) for r in mismatched.limit(20).collect()]
 
 
+# Code points whose F.lower differs from Python's str.lower, alone or between
+# two letters: the capitals Unicode 14 added (Vithkuqi U+10570-U+10595,
+# Glagolitic U+2C2F, Latin U+A7C0, U+A7D0, U+A7D6, U+A7D8).
+JVM_LOWER_DIFFS = [
+    0x2C2F, 0xA7C0, 0xA7D0, 0xA7D6, 0xA7D8,
+    0x10570, 0x10571, 0x10572, 0x10573, 0x10574, 0x10575, 0x10576, 0x10577,
+    0x10578, 0x10579, 0x1057A, 0x1057C, 0x1057D, 0x1057E, 0x1057F, 0x10580,
+    0x10581, 0x10582, 0x10583, 0x10584, 0x10585, 0x10586, 0x10587, 0x10588,
+    0x10589, 0x1058A, 0x1058C, 0x1058D, 0x1058E, 0x1058F, 0x10590, 0x10591,
+    0x10592, 0x10594, 0x10595,
+]
+
+
+def test_lower_is_the_jvm_case_mapping_every_code_point(spark):
+    """``F.lower`` in a ``build_spark`` session equals Python's
+    ``str.lower`` on every code point, alone and between two letters, in one
+    Spark job, except on ``JVM_LOWER_DIFFS``: Java 17's case mapping knows
+    Unicode 13 and Python 3.11's knows Unicode 14, so the JVM leaves the
+    capitals Unicode 14 added as they are. ICU4J's ``lower`` (the Spark
+    default) knows Unicode 16 and differs on other code points instead. A
+    JDK or Python upgrade changes this list."""
+    import pandas as pd
+    import pyspark.sql.functions as F
+
+    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    alone = [chr(c) for c in cps]
+    inner = [f"x{ch}y" for ch in alone]
+    pdf = pd.DataFrame({"cp": cps, "alone": alone, "inner": inner,
+                        "alone_l": [s.lower() for s in alone],
+                        "inner_l": [s.lower() for s in inner]})
+    mismatched = spark.createDataFrame(pdf).where(
+        (F.lower("alone") != F.col("alone_l")) | (F.lower("inner") != F.col("inner_l"))
+    )
+    assert sorted(r["cp"] for r in mismatched.select("cp").collect()) == JVM_LOWER_DIFFS
+
+
 class TestBitParallelKernels:
     """Bit-parallel Myers/Allison-Dix must equal the DP references."""
 

@@ -106,6 +106,12 @@ def test_build_spark_driver_jvm_is_c1_only(spark):
     assert _vm_option(spark.sparkContext._jvm, "TieredStopAtLevel") == "1"
 
 
+def test_build_spark_lowercases_without_icu(spark):
+    """``build_spark`` turns ICU case mapping off, so ``lower()`` takes the
+    JVM's ``UTF8String.toLowerCase`` and no job waits on ICU4J's first use."""
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+
+
 def test_build_spark_driver_code_cache_is_tiered_default(spark):
     """The C1-only driver JVM keeps the tiered code cache size, 240 MB:
     C1-only alone caps it at 48 MB, which a long session fills, and HotSpot

@@ -3,17 +3,15 @@
     zip -r erp.zip entity_resolution_pipeline_spark
     spark-submit --py-files erp.zip \
         --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
-        --conf spark.sql.icu.caseMappings.enabled=false \
         entity_resolution_pipeline_spark/run_pipeline.py \
         --warehouse /path/wh --entities 3000 [--input /path/web_pages_parquet]
 
 Prints one JSON line with counts, metrics, and evaluation. The session is a
 bare ``SparkSession.builder``: its config comes from the submit command, so
-locally it runs on Spark's defaults, not ``build_spark``'s. spark-submit
-starts the driver JVM before any Python runs, so a short local submit needs
-the C1-only ``defaultJavaOptions`` itself. A submit without
-``spark.sql.icu.caseMappings.enabled=false`` lowercases with ICU4J and pays
-its ~2 s first-use stall in the first job that calls ``lower()``.
+locally it runs on Spark's defaults, not ``build_spark``'s, except that it
+lowercases as ``build_spark`` sessions do (JVM case mapping, ``en_US``).
+spark-submit starts the driver JVM before any Python runs, so a short local
+submit needs the C1-only ``defaultJavaOptions`` itself.
 """
 
 from __future__ import annotations
@@ -46,12 +44,16 @@ def main(argv: list[str] | None = None) -> int:
     # absolute imports: spark-submit executes this file as a top-level
     # script, with the package shipped via --py-files
     from entity_resolution_pipeline_spark.plans.pipeline import ERConfig, ERPipeline
+    from entity_resolution_pipeline_spark.session import LOWER_CONF
     from entity_resolution_pipeline_spark.sources.webpages import (
         labeled_pairs_pdf,
         web_pages_df,
     )
 
-    spark = SparkSession.builder.appName("er-pipeline").getOrCreate()
+    spark = SparkSession.builder.appName("er-pipeline").config(map=LOWER_CONF).getOrCreate()
+    # the driver JVM (local[N]: also the executor) started before this line
+    jvm = spark.sparkContext._jvm
+    jvm.java.util.Locale.setDefault(jvm.java.util.Locale.US)
     spark.sparkContext.setLogLevel("WARN")
 
     if args.input:

@@ -3,16 +3,8 @@
 Single place where shuffle/AQE/Arrow/JIT/case-mapping knobs are set for
 tests, bench.py and library callers. spark-submit starts the driver JVM
 before any Python runs, so a short local submit passes its own ``--conf
-spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1``, and ``--conf
-spark.sql.icu.caseMappings.enabled=false`` to lowercase as sessions built
-here do. Designed for a real multi-executor cluster; without one,
-``master`` defaults to local[N].
-
-``lower()`` uses the JVM's case mapping, not ICU4J: an ASCII fast path, and
-``String.toLowerCase()`` in the JVM's default locale for other strings. A
-``tr``, ``az`` or ``lt`` default locale would lowercase ``I`` differently in
-strings with a non-ASCII character (dotless ``ı`` in Turkish), and so change
-MinHash sketch text; the package's outputs assume a locale such as ``en_US``.
+spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1``. Designed for a
+real multi-executor cluster; without one, ``master`` defaults to local[N].
 """
 
 from __future__ import annotations
@@ -20,6 +12,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# lower() takes the JVM's case mapping (see build_spark). For non-ASCII
+# strings that is String.toLowerCase() in the JVM's default locale, which
+# maps I to dotless ı under tr or az and so changes MinHash sketch text:
+# every JVM runs in en_US.
+EN_US = "-Duser.language=en -Duser.country=US"
+LOWER_CONF = {
+    "spark.sql.icu.caseMappings.enabled": "false",
+    "spark.executor.defaultJavaOptions": EN_US,
+}
 
 
 def build_spark(
@@ -35,10 +37,8 @@ def build_spark(
 
     ``lower()`` skips ICU4J: the first ``lower()`` of a process initializes
     it for ~2 s while the other task threads wait on a monitor, and that
-    stall fell on blocking's sketch job and train. Without it a cold
-    1,000-entity run's blocking job took 1.3–1.4 s (was 3.0–3.7 s), train
-    2.4–3.1 s (6.6–7.9 s), and ``wall_s`` fell ~21 % (medians of 10,
-    12.90 → 10.17 s). ``extra_conf`` can turn it back on."""
+    stall fell on blocking's sketch job and train. ``extra_conf`` can turn
+    it back on."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
@@ -67,9 +67,8 @@ def build_spark(
         # session reach (the JIT then flushes code, or stops when full); 240m
         # is the tiered default.
         .config("spark.driver.defaultJavaOptions",
-                "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m")
-        # JVM case mapping for lower(): ICU4J's first use stalls a job ~2 s
-        .config("spark.sql.icu.caseMappings.enabled", "false")
+                f"-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m {EN_US}")
+        .config(map=LOWER_CONF)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

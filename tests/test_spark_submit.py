@@ -112,6 +112,43 @@ def test_build_spark_lowercases_without_icu(spark):
     assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
 
 
+def test_build_spark_lowercases_in_en_us(spark):
+    """``build_spark`` pins the JVM's default locale to ``en_US``, which
+    ``lower()`` of a string with a non-ASCII character goes through."""
+    import pyspark.sql.functions as F
+
+    jvm = spark.sparkContext._jvm
+    assert jvm.java.util.Locale.getDefault().toString() == "en_US"
+    assert spark.range(1).select(F.lower(F.lit("IÉ"))).first()[0] == "ié"
+
+
+_LOWER_IE = """
+import json
+import pyspark.sql.functions as F
+from entity_resolution_pipeline_spark.session import build_spark
+
+spark = build_spark(master="local[1]")
+print(json.dumps(spark.range(1).select(F.lower(F.lit("IÉ"))).first()[0]))
+spark.stop()
+"""
+
+
+def test_build_spark_lowercases_in_en_us_on_a_turkish_host():
+    """A JVM whose environment asks for a Turkish default locale, where
+    ``String.toLowerCase()`` maps ``I`` to dotless ``ı``, still lowercases
+    ``IÉ`` to ``ié``: ``build_spark``'s locale options come after
+    ``JAVA_TOOL_OPTIONS``. Needs its own JVM."""
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
+        "JAVA_TOOL_OPTIONS": "-Duser.language=tr -Duser.country=TR"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _LOWER_IE],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert json.loads(proc.stdout.splitlines()[-1]) == "ié"
+
+
 def test_build_spark_driver_code_cache_is_tiered_default(spark):
     """The C1-only driver JVM keeps the tiered code cache size, 240 MB:
     C1-only alone caps it at 48 MB, which a long session fills, and HotSpot

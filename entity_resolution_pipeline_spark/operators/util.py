@@ -2,8 +2,27 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
+
+# the Spark local property that names a thread's job group
+JOB_GROUP = "spark.jobGroup.id"
+
+
+@contextmanager
+def job_group(spark: SparkSession, group: str):
+    """Run the Spark jobs started on this thread (and on pool tasks that
+    inherit its local properties) in job group ``group``; the caller's group
+    is restored after."""
+    sc = spark.sparkContext
+    outer_group = sc.getLocalProperty(JOB_GROUP)
+    sc.setLocalProperty(JOB_GROUP, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(JOB_GROUP, outer_group)
 
 
 def md5_hash60(c: Column | str) -> Column:

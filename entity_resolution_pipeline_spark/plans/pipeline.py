@@ -30,7 +30,6 @@ from __future__ import annotations
 import json
 import time
 from concurrent.futures import Future, ThreadPoolExecutor, wait
-from contextlib import contextmanager
 from dataclasses import dataclass
 from decimal import Decimal
 
@@ -60,7 +59,7 @@ from ..operators.preprocess import (
     strings_long,
     unique_strings,
 )
-from ..operators.util import ensure_parallelism
+from ..operators.util import ensure_parallelism, job_group
 from ..sources.catalog import (
     Catalog,
     Manifest,
@@ -89,8 +88,6 @@ MODEL_METRICS = ("train", "test", "feature_importance", "rfe_selected")  # store
 # (BENCH/BASELINE.md): 42-60 s -> 25.6 s at 5.8M pairs, while at 58k pairs
 # the shuffle costs more than the memo hits save (1.39 -> 1.62 s).
 SCORE_REPARTITION_MIN_PAIRS = 2_000_000
-# the Spark local property that names a thread's job group
-JOB_GROUP = "spark.jobGroup.id"
 
 
 def resume_key(upstream: str, stage: str, *reads) -> str:
@@ -148,18 +145,10 @@ class ERPipeline:
         properties (job group, job description) carried into the worker."""
         return pool.submit(inheritable_thread_target(self.spark)(fn), *args)
 
-    @contextmanager
     def _job_group(self, name: str):
         """Run the Spark jobs started on this thread (and on pool tasks
-        submitted from it) in the job group ``er:<run_id>:<name>``; the
-        caller's group is restored after."""
-        sc = self.spark.sparkContext
-        outer_group = sc.getLocalProperty(JOB_GROUP)
-        sc.setLocalProperty(JOB_GROUP, f"er:{self.manifest.run_id}:{name}")
-        try:
-            yield
-        finally:
-            sc.setLocalProperty(JOB_GROUP, outer_group)
+        submitted from it) in the job group ``er:<run_id>:<name>``."""
+        return job_group(self.spark, f"er:{self.manifest.run_id}:{name}")
 
     def _run_stage(self, pool: ThreadPoolExecutor, stage: str, key: str | None,
                    rows_in: int | None, build_df, force: bool = False,

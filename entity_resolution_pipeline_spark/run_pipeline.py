@@ -11,7 +11,9 @@ bare ``SparkSession.builder``: its config comes from the submit command, so
 locally it runs on Spark's defaults, not ``build_spark``'s, except that it
 lowercases as ``build_spark`` sessions do (JVM case mapping, ``en_US``).
 spark-submit starts the driver JVM before any Python runs, so a short local
-submit needs the C1-only ``defaultJavaOptions`` itself.
+submit needs the C1-only ``defaultJavaOptions`` itself, and it runs without
+the class archive that ``build_spark`` sessions share: every submit loads
+Spark's classes from its jars.
 """
 
 from __future__ import annotations

@@ -259,6 +259,16 @@ def labeled_pairs_pdf(n_entities: int, n_pairs: int = 2000, seed: int = SEED) ->
         by_surname.setdefault(prof["surname"], []).append(e)
 
     n_pos = int(n_pairs * 0.35)
+    # urls are unique, so these are the distinct pairs the draws below can
+    # find; asking for more would draw forever
+    sizes = [len(urls) for urls in by_ent.values()]
+    n_within = sum(k * (k - 1) // 2 for k in sizes)
+    n_across = sum(sizes) * (sum(sizes) - 1) // 2 - n_within
+    if n_within < n_pos or n_across < n_pairs - n_pos:
+        raise ValueError(
+            f"labeled_pairs_pdf: n_pairs={n_pairs} needs {n_pos} positive and "
+            f"{n_pairs - n_pos} negative pairs; {n_entities} entities hold "
+            f"{n_within} distinct positive and {n_across} negative pairs")
     ents = sorted(by_ent)
     pos, neg = [], []
     seen = set()

@@ -1,3 +1,5 @@
+import atexit
+import os
 import shutil
 import tempfile
 
@@ -5,6 +7,15 @@ import pytest
 
 N_ENT = 200
 N_PAIRS = 800
+
+# build_spark keeps a class archive under tempfile.gettempdir(). This run,
+# and every subprocess it starts, keeps its own, so a run does not depend on
+# what earlier runs left there. Removed after the JVMs' exit hooks (atexit
+# runs hooks registered later first).
+_TMPDIR = tempfile.mkdtemp(prefix="erp-tests-")
+os.environ["TMPDIR"] = _TMPDIR
+tempfile.tempdir = None
+atexit.register(shutil.rmtree, _TMPDIR, True)
 
 
 @pytest.fixture(scope="session")

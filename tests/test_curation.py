@@ -155,6 +155,29 @@ class TestCurateCorpus:
         assert out.columns == ["doc_id", "text", "split"]
         assert out.count() == funnel["train"] + funnel["holdout"] == 3
 
+    def test_funnel_phases_run_in_job_groups(self, spark):
+        """Each funnel phase runs its Spark jobs in the job group
+        ``curation:<phase>``; the caller's group is set again after."""
+        from entity_resolution_pipeline_spark.plans.curation import curate_corpus
+
+        docs, ev = _full_funnel_inputs(spark)
+        sc = spark.sparkContext
+        phases = ["input", "quality", "exact_dedup", "near_dup", "decontaminate", "split"]
+
+        def jobs(phase):
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return set(sc.statusTracker().getJobIdsForGroup(f"curation:{phase}"))
+
+        before = {p: jobs(p) for p in phases}
+        sc.setLocalProperty("spark.jobGroup.id", "caller")
+        try:
+            curate_corpus(docs, ev)
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        for p in phases:
+            assert jobs(p) - before[p], p
+
     def test_funnel_without_eval_set(self, spark):
         from entity_resolution_pipeline_spark.plans.curation import curate_corpus
 

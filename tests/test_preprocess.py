@@ -1,5 +1,9 @@
 """Preprocess-stage tests incl. the byte-identical-text invariant."""
 
+import os
+import subprocess
+import sys
+
 import pyspark.sql.functions as F
 
 from entity_resolution_pipeline_spark.functions.hashing import hash_string
@@ -156,3 +160,16 @@ def test_field_hash_mapping_write_jobs(spark, tmp_warehouse):
         sc.setLocalProperty("spark.job.description", None)
     assert 1 <= len(jobs) <= 2, jobs
     assert spark.read.parquet(tmp_warehouse + "/fhm").columns == ["hash", "field", "cnt", "value"]
+
+
+def test_labeled_pairs_beyond_the_corpus_raise():
+    """Asking a 20-entity corpus for 2,000 labeled pairs (700 positives, of
+    about 200 it holds) raises a ValueError naming ``n_pairs`` at once; the
+    draws used to loop forever. Run in a subprocess so a hang times out."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("from entity_resolution_pipeline_spark.sources.webpages import labeled_pairs_pdf\n"
+            "labeled_pairs_pdf(20, 2000)")
+    proc = subprocess.run([sys.executable, "-c", code], cwd=repo, capture_output=True,
+                          text=True, timeout=60)
+    assert proc.returncode != 0
+    assert "ValueError: labeled_pairs_pdf: n_pairs=2000 needs 700 positive" in proc.stderr

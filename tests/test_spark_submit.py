@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import stat
 import subprocess
 import sys
 import time
@@ -186,9 +187,183 @@ def test_build_spark_caller_jvm_options_win():
     assert json.loads(proc.stdout.splitlines()[-1]) == ["1", "4"]
 
 
+_SESSION = """
+import json, os, sys
+import pyspark.sql.functions as F
+from entity_resolution_pipeline_spark.session import build_spark
+
+before = dict(os.environ)
+log = sys.argv[1] if len(sys.argv) > 1 else None
+spark = build_spark(master="local[1]", extra_conf={
+    "spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={log}"} if log else None)
+unchanged = all(os.environ.get(k) == v for k, v in before.items())
+jvm = spark.sparkContext._jvm
+print(json.dumps({
+    "lower": spark.range(1).select(F.lower(F.lit("IÉ"))).first()[0],
+    "env_unchanged": unchanged and ("SPARK_CONF_DIR" in os.environ) == ("SPARK_CONF_DIR" in before),
+    "jvm_conf_dir": jvm.System.getenv("SPARK_CONF_DIR"),
+    "java_options": spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions"),
+    "probe": spark.sparkContext.getConf().get("spark.erp.probe", None),
+}))
+spark.stop()
+"""
+_TOP = "org.apache.spark.SparkContext source: shared objects file (top)"
+
+
+def _session(tmp_path, *args, **env):
+    """Run ``_SESSION`` in its own Python and JVM with ``TMPDIR`` under
+    ``tmp_path``; returns its stdout lines. ``subprocess.run`` returns when
+    the JVM, which holds the pipe, has exited, so after any dump."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir(exist_ok=True)
+    env = {**os.environ, "TMPDIR": str(tmp), **env, "PYTHONPATH": os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)}
+    proc = subprocess.run(
+        [sys.executable, "-c", _SESSION, *args],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return proc.stdout.splitlines()
+
+
+def _cache(tmp_path):
+    return tmp_path / "tmp" / f"erp-cds-{os.getuid()}"
+
+
+def _archive_key(memory=None):
+    """The archive key of a ``_SESSION`` run with this driver heap."""
+    import pyspark.find_spark_home
+
+    from entity_resolution_pipeline_spark.session import DRIVER_JAVA_OPTIONS, _archive_key
+
+    memory = memory or os.environ.get("SPARK_DRIVER_MEMORY", "8g")
+    return _archive_key(pyspark.find_spark_home._find_spark_home(),
+                        os.path.realpath(shutil.which("java")), f"{memory} {DRIVER_JAVA_OPTIONS}")
+
+
+def _dead_pid() -> int:
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    return proc.pid
+
+
+def test_class_archive_written_at_exit_then_mapped(tmp_path):
+    """A first session, with an empty cache, writes the driver JVM's class
+    archive as it exits, in a private cache under ``TMPDIR``, without a
+    ``[cds]`` log line on the caller's stdout; the next session promotes
+    it and loads Spark's classes from it. A session with another driver
+    heap does not map it, and writes its own. ``os.environ`` is left as it
+    was."""
+    first = _session(tmp_path)
+    assert not [ln for ln in first if "[cds" in ln], first
+    out = json.loads(first[-1])
+    assert out["lower"] == "ié" and out["env_unchanged"]
+    assert "-XX:ArchiveClassesAtExit=" in out["java_options"]
+    cache = _cache(tmp_path)
+    assert stat.S_IMODE(cache.stat().st_mode) == 0o700
+    (dump,) = cache.glob("*.tmp")
+    assert dump.read_bytes()[:4] == bytes.fromhex("a8ab0bf0")
+
+    log = tmp_path / "class-load.log"
+    out = json.loads(_session(tmp_path, str(log))[-1])
+    assert out["lower"] == "ié" and out["env_unchanged"]
+    assert "-XX:SharedArchiveFile=" in out["java_options"]
+    assert out["jvm_conf_dir"] == str(cache / "conf")
+    assert {p.name for p in cache.iterdir()} == {"conf", f"{_archive_key()}.jsa"}
+    assert _TOP in log.read_text()
+
+    other = tmp_path / "other-heap.log"
+    out = json.loads(_session(tmp_path, str(other), SPARK_DRIVER_MEMORY="1500m")[-1])
+    assert "-XX:ArchiveClassesAtExit=" in out["java_options"]
+    assert "shared objects file (top)" not in other.read_text()
+    assert (cache / f"{_archive_key()}.jsa").exists()
+    assert _archive_key("1500m") != _archive_key()
+    (dump,) = cache.glob(f"{_archive_key('1500m')}.*.tmp")
+
+
+def test_bad_class_archives_are_never_mapped(tmp_path):
+    """A dump with a zero header (its writer killed midway) and an archive
+    of garbage are deleted, not mapped: the session starts, lowercases and
+    writes a new archive. A configured conf dir holding only templates is
+    replaced for the JVM and restored in ``os.environ``."""
+    cache = _cache(tmp_path)
+    cache.mkdir(parents=True, mode=0o700)
+    key = _archive_key()
+    (cache / f"{key}.{_dead_pid()}.tmp").write_bytes(bytes(1 << 16))
+    (cache / f"{key}.jsa").write_bytes(b"not a class archive\n" * 1000)
+    templates = tmp_path / "conf"
+    templates.mkdir()
+    (templates / "spark-defaults.conf.template").write_text("spark.erp.probe 1\n")
+    log = tmp_path / "class-load.log"
+    out = json.loads(_session(tmp_path, str(log), SPARK_CONF_DIR=str(templates))[-1])
+    assert out["lower"] == "ié" and out["env_unchanged"]
+    assert out["jvm_conf_dir"] == str(cache / "conf") and out["probe"] is None
+    assert "-XX:ArchiveClassesAtExit=" in out["java_options"]
+    assert "shared objects file (top)" not in log.read_text()
+    (dump,) = cache.glob("*.tmp")
+    assert dump.read_bytes()[:4] == bytes.fromhex("a8ab0bf0")
+    assert not (cache / f"{key}.jsa").exists()
+
+
+def test_real_spark_config_turns_class_sharing_off(tmp_path):
+    """A conf dir holding ``spark-defaults.conf`` is used as configured: the
+    JVM sees it and its settings, gets no class-sharing flag, and no cache
+    is made."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.erp.probe 1\n")
+    out = json.loads(_session(tmp_path, SPARK_CONF_DIR=str(conf))[-1])
+    assert out["lower"] == "ié" and out["env_unchanged"]
+    assert out["jvm_conf_dir"] == str(conf) and out["probe"] == "1"
+    assert "Archive" not in out["java_options"]
+    assert not _cache(tmp_path).exists()
+
+
+def test_promote_only_finished_dumps(tmp_path):
+    """``_promote`` moves a dump into place only when its writer is gone
+    and its header is written; it leaves a live writer's file alone, keeps
+    this install's archives for other driver settings, and deletes
+    zero-header dumps, archives without a header and other installs'
+    archives."""
+    from entity_resolution_pipeline_spark.session import _promote
+
+    magic = bytes.fromhex("a8ab0bf0") + bytes(64)
+    (tmp_path / f"i-a.{os.getpid()}.tmp").write_bytes(magic)  # still being written
+    (tmp_path / f"i-a.{_dead_pid()}.tmp").write_bytes(bytes(68))  # killed before its header
+    (tmp_path / f"i-a.{_dead_pid()}.tmp").write_bytes(magic)
+    (tmp_path / f"i-b.{_dead_pid()}.tmp").write_bytes(magic)  # another heap or JVM options
+    (tmp_path / "i-c.jsa").write_bytes(bytes(68))
+    (tmp_path / "j-a.jsa").write_bytes(magic)  # another JDK, Spark home or jar set
+    (tmp_path / "conf").mkdir()
+    assert _promote(str(tmp_path), "i-a") == str(tmp_path / "i-a.jsa")
+    assert {p.name for p in tmp_path.iterdir()} == {
+        "conf", "i-a.jsa", "i-b.jsa", f"i-a.{os.getpid()}.tmp"}
+
+
+def test_archive_key_follows_driver_heap_and_options():
+    """The driver heap and JVM options, which decide whether the JVM can
+    map an archive (a 32g heap turns compressed oops off and changes the
+    base archive), are in the key's second part; ``-Xlog`` options are not,
+    and the install part is the same."""
+    from entity_resolution_pipeline_spark.session import DRIVER_JAVA_OPTIONS, _archive_key
+
+    home, java = "/spark", "/jdk/bin/java"
+    base = _archive_key(home, java, f"8g {DRIVER_JAVA_OPTIONS} ")
+    assert _archive_key(home, java, f"8g {DRIVER_JAVA_OPTIONS} -Xlog:class+load:file=x") == base
+    others = {_archive_key(home, java, s) for s in (
+        f"32g {DRIVER_JAVA_OPTIONS} ",
+        f"8g {DRIVER_JAVA_OPTIONS} -XX:-UseCompressedOops",
+        f"8g -XX:TieredStopAtLevel=1 {DRIVER_JAVA_OPTIONS} -XX:+UseSerialGC")}
+    assert base not in others and len(others) == 3
+    assert {k.partition("-")[0] for k in others} == {base.partition("-")[0]}
+    assert _archive_key("/spark2", java, f"8g {DRIVER_JAVA_OPTIONS}").partition("-")[0] \
+        != base.partition("-")[0]
+
+
 def test_env_knob_inventory():
     """The package reads exactly these environment variables: three
-    deployment settings (cores, master URL, driver heap). A new env read
+    deployment settings (cores, master URL, driver heap) and Spark's conf
+    dir, which ``build_spark`` reads and restores. A new env read
     is a new knob; it has to be added here on purpose, with the
     measurement that justifies it."""
     import glob
@@ -211,6 +386,8 @@ def test_env_knob_inventory():
         "SPARK_GRAFT_CPUS",
         "SPARK_MASTER",
         "SPARK_DRIVER_MEMORY",
+        # Spark's own: real config there is respected (no class sharing)
+        "SPARK_CONF_DIR",
     }
 
 
